@@ -26,20 +26,127 @@ Scale notes (edge table = E rows, vertex table = V rows, E >> V):
   halves the join input.
 - ``pagerank``: rank vector is V rows, edges E rows. Each iteration is
   one join + one map-side-combined agg. The edge/out-degree frame is
-  computed once and REUSED across iterations (cached by the caller or
-  naturally re-read from the materialized edge table); ranks stay
-  small enough to broadcast for most real graphs (V ~ 1e8 canonical
-  entities => a few GB — at that point AQE falls back to a shuffle
-  join co-partitioned with the bucketed edges). Iterations live in the
-  DRIVER as a Python loop over lazy plans with an eager checkpoint per
-  round — lineage would otherwise grow exponentially.
+  computed once and REUSED across iterations; ranks stay small enough
+  to broadcast for most real graphs (V ~ 1e8 canonical entities => a
+  few GB — at that point AQE falls back to a shuffle join
+  co-partitioned with the bucketed edges).
+
+Loop discipline: every per-round loop of the family (PageRank, Katz,
+HITS, BFS, closeness, SSSP, k-core, k-truss, label propagation, random
+walks, stress, coreness, the three SCC loops, and
+``linking.connected_components``) is one call to ``iterate`` with a
+per-algorithm step body — the fixpoint as one operator
+(recursive-relational-algebra style). ``iterate`` alone owns the eager
+per-round checkpoint, the convergence test with early exit, and the
+loud failure on an exhausted round budget.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+import itertools
+
+from pyspark.sql import DataFrame, Window, functions as F
 
 PR_DAMPING = 0.85
+
+
+def iterate(state, step, rounds: int, until=None, *, name: str = "iterate",
+            strict: bool = True):
+    """Run ``step`` (lazy plan in, lazy plan out) for at most ``rounds``
+    rounds in the driver, with an EAGER ``localCheckpoint`` of each new
+    state: lineage stays O(1) per round instead of compounding (the
+    classic iterative-Spark failure mode). ``state`` is a DataFrame or
+    a tuple of DataFrames, checkpointed in order — so no frame of a
+    tuple may be planned over another frame's un-checkpointed plan.
+    A step that needs its round number (HITS's alternating half-steps,
+    stress's level sweeps) reads it from an iterator it closes over.
+
+    Without ``until`` exactly ``rounds`` rounds run: the fixed-round
+    recurrences, whose SQL twins unroll the same count, so outputs
+    match converged or not. With it, ``until(old, new)`` is evaluated
+    after every checkpoint and True returns early; a budget that runs
+    out first raises RuntimeError naming the operator rather than
+    returning a partial fixpoint (``strict=False`` returns the last
+    state instead)."""
+    for _ in range(rounds):
+        new = step(state)
+        new = (tuple(f.localCheckpoint() for f in new)
+               if isinstance(new, tuple) else new.localCheckpoint())
+        done = until is not None and until(state, new)
+        state = new
+        if done:
+            return state
+    if until is not None and strict:
+        raise RuntimeError(f"{name} did not converge in {rounds} rounds")
+    return state
+
+
+def no_change(key: str, col: str):
+    """``until`` test: no row's ``col`` changed between the old and
+    new state (joined on ``key``) — one count action per round."""
+    def until(old: DataFrame, new: DataFrame) -> bool:
+        return (
+            new.alias("n").join(old.alias("o"), key)
+            .where(F.col(f"n.{col}") != F.col(f"o.{col}"))
+            .count()
+        ) == 0
+
+    return until
+
+
+def steady(measure, first=None):
+    """``until`` test for monotone fixpoints with a cheap exact summary:
+    converged when ``measure`` (one small action) of the new state
+    equals the previous round's. ``first`` is the initial state's
+    measure when it is known without an action."""
+    last = [first]
+
+    def until(old: DataFrame, new: DataFrame) -> bool:
+        prev = measure(old) if last[0] is None else last[0]
+        last[0] = measure(new)
+        return last[0] == prev
+
+    return until
+
+
+def _dist_fingerprint(dist: DataFrame) -> tuple[int, int]:
+    """(row count, sum of distances) — strictly improving under a
+    min-distance round: a round either adds a row (count grows) or
+    lowers a distance (sum shrinks at fixed count), so equality means
+    fixpoint."""
+    row = dist.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.coalesce(F.sum("dist"), F.lit(0)).alias("s"),
+    ).collect()[0]
+    return int(row["n"]), int(row["s"])
+
+
+def _adjacency(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Symmetric adjacency (v, nbr) of the undirected canonical graph:
+    both orientations of every distinct non-loop pair."""
+    und = undirected_edges(edges, src, dst)
+    return und.unionByName(
+        und.select(F.col("vb").alias("va"), F.col("va").alias("vb"))
+    ).select(F.col("va").alias("v"), F.col("vb").alias("nbr"))
+
+
+def _arcs(edges: DataFrame, src: str, dst: str, s: str = "s",
+          d: str = "d") -> DataFrame:
+    """Distinct directed (s, d) pairs, self-loops dropped."""
+    return (
+        edges.select(F.col(src).alias(s), F.col(dst).alias(d))
+        .where(F.col(s) != F.col(d))
+        .distinct()
+    )
+
+
+def _vertex_set(e: DataFrame, a: str, b: str, name: str = "surface") -> DataFrame:
+    """Distinct endpoints of a directed edge frame, as column ``name``."""
+    return (
+        e.select(F.col(a).alias(name))
+        .unionByName(e.select(F.col(b).alias(name)))
+        .distinct()
+    )
 
 
 def degrees(edges: DataFrame, src: str = "src_surface", dst: str = "dst_surface",
@@ -149,11 +256,7 @@ def components(edges: DataFrame, src: str = "src_surface",
     und = undirected_edges(edges, src, dst).select(
         F.col("va").alias("src"), F.col("vb").alias("dst")
     )
-    nodes = (
-        edges.select(F.col(src).alias("node_id"))
-        .unionByName(edges.select(F.col(dst).alias("node_id")))
-        .distinct()
-    )
+    nodes = _vertex_set(edges, src, dst, "node_id")
     return connected_components(nodes, und, max_iter=max_iter).select(
         F.col("node_id").alias("surface"), "component"
     )
@@ -177,14 +280,12 @@ def link_prediction_ra(edges: DataFrame, src: str = "src_surface",
     neighbors), one left-anti join against the edge set to drop
     already-linked pairs, one map-side-combined agg."""
     und = undirected_edges(edges, src, dst)
-    adj = und.unionByName(
-        und.select(F.col("vb").alias("va"), F.col("va").alias("vb"))
-    )  # (v, neighbor), both directions
-    deg = adj.groupBy(F.col("va").alias("w")).agg(
+    adj = _adjacency(edges, src, dst)
+    deg = adj.groupBy(F.col("v").alias("w")).agg(
         F.count(F.lit(1)).alias("deg")
     )
-    a = adj.select(F.col("vb").alias("w"), F.col("va").alias("u"))
-    b = adj.select(F.col("vb").alias("w"), F.col("va").alias("v"))
+    a = adj.select(F.col("nbr").alias("w"), F.col("v").alias("u"))
+    b = adj.select(F.col("nbr").alias("w"), "v")
     cand = (
         a.join(b, "w")
         .where(F.col("u") < F.col("v"))
@@ -213,12 +314,7 @@ def _pr_operands(edges: DataFrame, src: str, dst: str):
     returning."""
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
     e = e.cache()
-    verts = (
-        e.select(F.col("src").alias("surface"))
-        .unionByName(e.select(F.col("dst").alias("surface")))
-        .distinct()
-        .localCheckpoint()
-    )
+    verts = _vertex_set(e, "src", "dst").localCheckpoint()
     n_v = verts.count()
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     eo = e.join(outdeg, "src").localCheckpoint()
@@ -226,28 +322,24 @@ def _pr_operands(edges: DataFrame, src: str, dst: str):
     return verts, n_v, eo
 
 
-def _pr_iterate(verts: DataFrame, eo: DataFrame, ranks: DataFrame,
-                iters: int, contrib, update, rank_col: str) -> DataFrame:
-    """Shared iteration loop: per round one equi-join (ranks x
-    out-edges) + one map-side-combined agg + one left join back to the
-    vertex set, then an EAGER localCheckpoint so lineage stays O(1)
-    per round instead of compounding (the classic iterative-Spark
-    failure mode). ``contrib`` is the per-edge column sent to the
-    destination; ``update`` maps the summed ``inflow`` column to the
-    new rank column."""
-    for _ in range(iters):
-        contribs = (
-            eo.join(ranks, eo.src == ranks.surface)
+def _pr_iterate(eo: DataFrame, state: DataFrame, rounds: int, contrib,
+                *cols) -> DataFrame:
+    """``rounds`` propagation rounds of the PageRank family (pagerank,
+    its personalized and fixed-point variants, katz_scores): per round
+    one equi-join (state x out-edges) + one map-side-combined agg of
+    the per-edge ``contrib`` column into ``inflow`` per destination +
+    one left join back to the state (no in-edges = null inflow), whose
+    row is rebuilt as ``cols``."""
+    def step(s: DataFrame) -> DataFrame:
+        inflow = (
+            eo.join(s, eo.src == s.surface)
             .select(F.col("dst").alias("surface"), contrib.alias("c"))
             .groupBy("surface")
             .agg(F.sum("c").alias("inflow"))
         )
-        ranks = (
-            verts.join(contribs, "surface", "left")
-            .select("surface", update.alias(rank_col))
-            .localCheckpoint()
-        )
-    return ranks
+        return s.join(inflow, "surface", "left").select("surface", *cols)
+
+    return iterate(state, step, rounds)
 
 
 def pagerank(edges: DataFrame, iters: int = 3, damping: float = PR_DAMPING,
@@ -262,13 +354,10 @@ def pagerank(edges: DataFrame, iters: int = 3, damping: float = PR_DAMPING,
     if n_v == 0:  # empty graph: empty ranks, not ZeroDivisionError
         return verts.withColumn("rank", F.lit(0.0))
     return _pr_iterate(
-        verts, eo,
-        ranks=verts.withColumn("rank", F.lit(1.0 / n_v)),
-        iters=iters,
-        contrib=F.col("rank") / F.col("outdeg"),
-        update=F.lit((1.0 - damping) / n_v)
-        + F.lit(damping) * F.coalesce("inflow", F.lit(0.0)),
-        rank_col="rank",
+        eo, verts.withColumn("rank", F.lit(1.0 / n_v)), iters,
+        F.col("rank") / F.col("outdeg"),
+        (F.lit((1.0 - damping) / n_v)
+         + F.lit(damping) * F.coalesce("inflow", F.lit(0.0))).alias("rank"),
     )
 
 
@@ -292,13 +381,10 @@ def personalized_pagerank(edges: DataFrame, seeds: list[str], iters: int = 3,
         F.col("surface").isin(list(seeds)), F.lit(1.0 / len(seeds))
     ).otherwise(F.lit(0.0))
     return _pr_iterate(
-        verts, eo,
-        ranks=verts.withColumn("rank", teleport),
-        iters=iters,
-        contrib=F.col("rank") / F.col("outdeg"),
-        update=F.lit(1.0 - damping) * teleport
-        + F.lit(damping) * F.coalesce("inflow", F.lit(0.0)),
-        rank_col="rank",
+        eo, verts.withColumn("rank", teleport), iters,
+        F.col("rank") / F.col("outdeg"),
+        (F.lit(1.0 - damping) * teleport
+         + F.lit(damping) * F.coalesce("inflow", F.lit(0.0))).alias("rank"),
     )
 
 
@@ -324,15 +410,11 @@ def pagerank_fixedpoint(edges: DataFrame, iters: int = 3,
         return verts.withColumn("rank_u", F.lit(0).cast("bigint"))
     base_u = ((100 - damping_pct) * PR_UNIT) // (100 * n_v)
     return _pr_iterate(
-        verts, eo,
-        ranks=verts.withColumn("rank_u", F.lit(PR_UNIT // n_v).cast("bigint")),
-        iters=iters,
-        contrib=F.expr("rank_u div outdeg"),
-        update=(
-            F.lit(base_u)
-            + F.expr(f"({damping_pct} * coalesce(inflow, 0L)) div 100")
-        ).cast("bigint"),
-        rank_col="rank_u",
+        eo, verts.withColumn("rank_u", F.lit(PR_UNIT // n_v).cast("bigint")),
+        iters, F.expr("rank_u div outdeg"),
+        (F.lit(base_u)
+         + F.expr(f"({damping_pct} * coalesce(inflow, 0L)) div 100"))
+        .cast("bigint").alias("rank_u"),
     )
 
 
@@ -353,50 +435,37 @@ def hits_scores(edges: DataFrame, rounds: int = 2,
     Δ ~ 5*10^4 on a 10^6-vertex graph; past that, raise to
     decimal(38,0) sums before widening rounds.
 
-    Shape per round: two equi-joins (edges x scores) each feeding a
-    map-side-combined sum agg, plus a left join back to the
-    checkpointed vertex set — no global sort, no SinglePartition; the
-    same O(1)-lineage eager-checkpoint loop as PageRank/BFS/SSSP.
+    Shape: each round is two half-step rounds of ``iterate`` over one
+    (surface, hub_u, auth_u) frame — authorities from hubs along the
+    edges, then hubs from authorities against them — each one
+    equi-join (edges x scores) feeding a map-side-combined sum agg plus
+    a left join back to the state; no global sort, no SinglePartition.
     Vertices with no in-edges (resp. out-edges) get authority (resp.
     hub) 0, matching the recurrence over an empty sum."""
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
     e = e.localCheckpoint()
-    verts = (
-        e.select(F.col("src").alias("surface"))
-        .unionByName(e.select(F.col("dst").alias("surface")))
-        .distinct()
-        .localCheckpoint()
+    verts = _vertex_set(e, "src", "dst").localCheckpoint()
+    # (from, to, score read, score written) of the two half-steps
+    halves = itertools.cycle([("src", "dst", "hub_u", "auth_u"),
+                              ("dst", "src", "auth_u", "hub_u")])
+
+    def half(s: DataFrame) -> DataFrame:
+        frm, to, have, upd = next(halves)
+        raw = (
+            e.join(s, e[frm] == s.surface)
+            .groupBy(F.col(to).alias("surface"))
+            .agg(F.sum(have).cast("bigint").alias("x"))
+        )
+        return s.join(raw, "surface", "left").select(
+            "surface", have, F.coalesce("x", F.lit(0)).cast("bigint").alias(upd)
+        )
+
+    start = verts.select(
+        "surface",
+        F.lit(1).cast("bigint").alias("hub_u"),
+        F.lit(0).cast("bigint").alias("auth_u"),
     )
-    hub = verts.withColumn("hub_u", F.lit(1).cast("bigint"))
-    auth = verts.withColumn("auth_u", F.lit(0).cast("bigint"))
-    for _ in range(rounds):
-        a_raw = (
-            e.join(hub, e.src == hub.surface)
-            .groupBy(F.col("dst").alias("surface"))
-            .agg(F.sum("hub_u").cast("bigint").alias("a"))
-        )
-        auth = (
-            verts.join(a_raw, "surface", "left")
-            .select(
-                "surface",
-                F.coalesce("a", F.lit(0)).cast("bigint").alias("auth_u"),
-            )
-            .localCheckpoint()
-        )
-        h_raw = (
-            e.join(auth, e.dst == auth.surface)
-            .groupBy(F.col("src").alias("surface"))
-            .agg(F.sum("auth_u").cast("bigint").alias("h"))
-        )
-        hub = (
-            verts.join(h_raw, "surface", "left")
-            .select(
-                "surface",
-                F.coalesce("h", F.lit(0)).cast("bigint").alias("hub_u"),
-            )
-            .localCheckpoint()
-        )
-    return hub.join(auth, "surface").select("surface", "hub_u", "auth_u")
+    return iterate(start, half, 2 * rounds).select("surface", "hub_u", "auth_u")
 
 
 JACCARD_UNIT = 10**6  # neighborhood-Jaccard fixed-point unit (1e-6)
@@ -422,15 +491,10 @@ def neighbor_jaccard(edges: DataFrame, src: str = "src_surface",
     similarity is ~0 anyway) — then one map-side-combined agg and a
     broadcast-sized degree join. No cartesian anywhere: pairs with
     zero common neighbors never materialize."""
-    und = undirected_edges(edges, src, dst)
-    adj = und.unionByName(
-        und.select(F.col("vb").alias("va"), F.col("va").alias("vb"))
-    )  # (v, neighbor), both directions, distinct by construction
-    deg = adj.groupBy(F.col("va").alias("v")).agg(
-        F.count(F.lit(1)).alias("deg")
-    )
-    a = adj.select(F.col("vb").alias("w"), F.col("va").alias("u"))
-    b = adj.select(F.col("vb").alias("w"), F.col("va").alias("v"))
+    adj = _adjacency(edges, src, dst)  # distinct by construction
+    deg = adj.groupBy("v").agg(F.count(F.lit(1)).alias("deg"))
+    a = adj.select(F.col("nbr").alias("w"), F.col("v").alias("u"))
+    b = adj.select(F.col("nbr").alias("w"), "v")
     common = (
         a.join(b, "w")
         .where(F.col("u") < F.col("v"))
@@ -461,64 +525,44 @@ def bfs_distances(edges: DataFrame, seeds: list[str],
     within k hops of these entities") and the reachability half of
     shortest-path analytics.
 
-    Shape: frontier-free min-distance label propagation — each round
-    joins the CURRENT distance table to the adjacency on the vertex
-    key and takes the per-vertex min of (old, neighbor+1). Rounds are
-    driver-looped over lazy plans with an eager localCheckpoint per
-    round (O(1) lineage — same discipline as pagerank/components), and
-    the loop EXITS EARLY when a round adds no vertices and lowers no
-    distance (converged min distances are unique, so fixpoint output
-    is engine-independent). Per round: one shuffle of the dist table
-    (V rows) + one of the adjacency join. max_iter bounds the graph
-    DIAMETER; the guard raises loudly on non-convergence rather than
-    returning partial distances."""
+    Shape: frontier-free min-distance label propagation
+    (``_min_plus``), run by ``iterate`` to fixpoint: a round that adds
+    no vertex and lowers no distance ends the loop (converged min
+    distances are unique, so fixpoint output is engine-independent).
+    Per round: one shuffle of the dist table (V rows) + one of the
+    adjacency join. max_iter bounds the graph DIAMETER."""
     if not seeds:
         raise ValueError("bfs_distances: empty seed list")
-    spark = edges.sparkSession
-    und = undirected_edges(edges, src, dst)
-    adj = und.unionByName(
-        und.select(F.col("vb").alias("va"), F.col("va").alias("vb"))
-    ).select(F.col("va").alias("v"), F.col("vb").alias("nbr"))
-    adj = adj.localCheckpoint()  # reused every round: materialize once
+    seeds = sorted(set(seeds))
+    adj = _adjacency(edges, src, dst).localCheckpoint()
     dist = (
-        spark.createDataFrame([(s,) for s in sorted(set(seeds))], "surface string")
+        edges.sparkSession.createDataFrame([(s,) for s in seeds], "surface string")
         .withColumn("dist", F.lit(0).cast("bigint"))
         .localCheckpoint()
     )
-    # initial fingerprint is known statically: |seeds| rows, all dist 0
-    prev_n, prev_sum = len(set(seeds)), 0
-    for _ in range(max_iter):
-        hop = (
-            dist.join(adj, dist.surface == adj.v)
-            .select(F.col("nbr").alias("surface"),
-                    (F.col("dist") + 1).alias("dist"))
+    # the initial fingerprint is known statically: |seeds| rows, all 0
+    return iterate(dist, _min_plus(adj, "dist", F.lit(1)), max_iter,
+                   steady(_dist_fingerprint, (len(seeds), 0)),
+                   name="bfs_distances")
+
+
+def _min_plus(adj: DataFrame, col: str, cost, by: tuple[str, ...] = ()):
+    """Step of the min-plus fixpoints (bfs_distances, closeness,
+    sssp): every reached (*by, surface) row offers ``col + cost`` to
+    each adjacency neighbour, and each key keeps its minimum — one
+    equi-join of the distance table to the adjacency on the vertex key
+    plus one map-side-combinable min agg."""
+    def step(dist: DataFrame) -> DataFrame:
+        hop = dist.join(adj, dist.surface == adj.v).select(
+            *by, F.col("nbr").alias("surface"), (F.col(col) + cost).alias(col)
         )
-        dist = (
+        return (
             dist.unionByName(hop)
-            .groupBy("surface")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint()
+            .groupBy(*by, "surface")
+            .agg(F.min(col).alias(col))
         )
-        n, s = _dist_fingerprint(dist)
-        if (n, s) == (prev_n, prev_sum):
-            return dist
-        prev_n, prev_sum = n, s
-    raise RuntimeError(
-        f"bfs_distances did not converge in {max_iter} rounds "
-        "(graph diameter exceeds max_iter)"
-    )
 
-
-def _dist_fingerprint(dist: DataFrame) -> tuple[int, int]:
-    """(row count, sum of distances) — a strictly-decreasing-under-
-    improvement pair: a BFS round either adds a vertex (count grows)
-    or lowers a min distance (sum shrinks at fixed count), so equality
-    means fixpoint. One tiny aggregate action per round."""
-    row = dist.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.sum("dist"), F.lit(0)).alias("s"),
-    ).collect()[0]
-    return int(row["n"]), int(row["s"])
+    return step
 
 
 CLOSENESS_UNIT = 10**6  # harmonic-centrality fixed-point unit (1e-6)
@@ -540,11 +584,9 @@ def closeness(edges: DataFrame, src: str = "src_surface",
     Shape: MULTI-SOURCE BFS with the root carried as a key column —
     one distance table keyed (root, surface) instead of one BFS per
     root, so all roots advance in the same joins (the MS-BFS batching
-    idea). Rounds are driver-looped lazy plans with an eager
-    localCheckpoint per round and early exit at fixpoint; per round:
-    one equi-join of the dist table to the adjacency + one
-    map-side-combinable min agg. Converged min distances are unique,
-    so fixpoint output is engine-independent.
+    idea), run by ``iterate`` to fixpoint with the ``_min_plus``
+    step. Converged min distances are unique, so fixpoint output is
+    engine-independent.
 
     Scale: state is O(sum of component sizes over roots) = O(V^2) for
     all-pairs on one giant component — at production scale pass a
@@ -554,16 +596,11 @@ def closeness(edges: DataFrame, src: str = "src_surface",
     per-component setting. The check-scale contract query samples
     every vertex of the (small) canonical graph.
     """
-    spark = edges.sparkSession
-    und = undirected_edges(edges, src, dst)
-    adj = und.unionByName(
-        und.select(F.col("vb").alias("va"), F.col("va").alias("vb"))
-    ).select(F.col("va").alias("v"), F.col("vb").alias("nbr"))
-    adj = adj.localCheckpoint()
+    adj = _adjacency(edges, src, dst).localCheckpoint()
     verts = (
         adj.select(F.col("v").alias("surface")).distinct()
         if roots is None
-        else spark.createDataFrame(
+        else edges.sparkSession.createDataFrame(
             [(r,) for r in sorted(set(roots))], "surface string"
         )
     )
@@ -574,28 +611,8 @@ def closeness(edges: DataFrame, src: str = "src_surface",
             F.lit(0).cast("bigint").alias("dist"),
         ).localCheckpoint()
     )
-    prev = _roots_fingerprint(dist)
-    for _ in range(max_iter):
-        hop = (
-            dist.join(adj, dist.surface == adj.v)
-            .select("root", F.col("nbr").alias("surface"),
-                    (F.col("dist") + 1).alias("dist"))
-        )
-        dist = (
-            dist.unionByName(hop)
-            .groupBy("root", "surface")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint()
-        )
-        cur = _roots_fingerprint(dist)
-        if cur == prev:
-            break
-        prev = cur
-    else:
-        raise RuntimeError(
-            f"closeness did not converge in {max_iter} rounds "
-            "(graph diameter exceeds max_iter)"
-        )
+    dist = iterate(dist, _min_plus(adj, "dist", F.lit(1), by=("root",)),
+                   max_iter, steady(_dist_fingerprint), name="closeness")
     return (
         dist.groupBy(F.col("root").alias("surface"))
         .agg(
@@ -610,16 +627,6 @@ def closeness(edges: DataFrame, src: str = "src_surface",
             F.max("dist").cast("bigint").alias("ecc"),
         )
     )
-
-
-def _roots_fingerprint(dist: DataFrame) -> tuple[int, int]:
-    """(row count, total distance) over the root-keyed table — same
-    strictly-improving pair as _dist_fingerprint."""
-    row = dist.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.sum("dist"), F.lit(0)).alias("s"),
-    ).collect()[0]
-    return int(row["n"]), int(row["s"])
 
 
 def kcore(edges: DataFrame, k: int = 2, rounds: int = 6,
@@ -638,12 +645,11 @@ def kcore(edges: DataFrame, k: int = 2, rounds: int = 6,
     no-ops). For a guaranteed-converged core at scale, raise
     ``rounds`` to the expected peel depth (real web KGs converge in a
     handful; each round is one degree agg + one semi-join, both
-    map-side-combinable, with an eager localCheckpoint keeping lineage
-    O(1))."""
+    map-side-combinable)."""
     if k < 1:
         raise ValueError("kcore: k must be >= 1")
-    und = undirected_edges(edges, src, dst).localCheckpoint()
-    for _ in range(rounds):
+
+    def peel(und: DataFrame) -> DataFrame:
         deg = (
             und.select(F.col("va").alias("v"))
             .unionByName(und.select(F.col("vb").alias("v")))
@@ -651,12 +657,13 @@ def kcore(edges: DataFrame, k: int = 2, rounds: int = 6,
             .agg(F.count(F.lit(1)).alias("deg"))
         )
         keep = deg.where(F.col("deg") >= k).select("v")
-        und = (
+        return (
             und.join(keep.withColumnRenamed("v", "va"), "va", "left_semi")
             .join(keep.withColumnRenamed("v", "vb"), "vb", "left_semi")
             .select("va", "vb")
-            .localCheckpoint()
         )
+
+    und = iterate(undirected_edges(edges, src, dst).localCheckpoint(), peel, rounds)
     return (
         und.select(F.col("va").alias("surface"))
         .unionByName(und.select(F.col("vb").alias("surface")))
@@ -689,15 +696,14 @@ def sssp(edges: DataFrame, seeds: list[str], rounds: int = 8,
     exact integers (integer division, integer sums): no float-sum
     ordering hazard.
 
-    Shape per round: one join of the V-row distance table to the
-    adjacency + one min-combined agg; eager localCheckpoint keeps
-    lineage O(1); the weighted adjacency operand is materialized once
-    and reused every round."""
+    Shape per round: the ``_min_plus`` step (one join of the V-row
+    distance table to the adjacency + one min-combined agg); the
+    weighted adjacency operand is materialized once and reused every
+    round."""
     if not seeds:
         raise ValueError("sssp: empty seed list")
     if rounds < 1:
         raise ValueError("sssp: rounds must be >= 1")
-    spark = edges.sparkSession
     cost = F.expr(f"{SSSP_UNIT} div {weight}")
     uw = (
         edges.select(
@@ -715,23 +721,13 @@ def sssp(edges: DataFrame, seeds: list[str], rounds: int = 8,
     ).select(F.col("va").alias("v"), F.col("vb").alias("nbr"), "cost")
     adj = adj.localCheckpoint()
     dist = (
-        spark.createDataFrame([(s,) for s in sorted(set(seeds))], "surface string")
+        edges.sparkSession.createDataFrame(
+            [(s,) for s in sorted(set(seeds))], "surface string"
+        )
         .withColumn("cost_u", F.lit(0).cast("bigint"))
         .localCheckpoint()
     )
-    for _ in range(rounds):
-        relax = (
-            dist.join(adj, dist.surface == adj.v)
-            .select(F.col("nbr").alias("surface"),
-                    (F.col("cost_u") + F.col("cost")).alias("cost_u"))
-        )
-        dist = (
-            dist.unionByName(relax)
-            .groupBy("surface")
-            .agg(F.min("cost_u").alias("cost_u"))
-            .localCheckpoint()
-        )
-    return dist
+    return iterate(dist, _min_plus(adj, "cost_u", F.col("cost")), rounds)
 
 
 def ktruss(edges: DataFrame, k: int = 3, rounds: int = 3,
@@ -753,10 +749,10 @@ def ktruss(edges: DataFrame, k: int = 3, rounds: int = 3,
     equi-joins over the oriented edge set — the standard O(E^1.5)
     triangle pass, AQE splitting hot middle vertices) + one per-edge
     support aggregate (each triangle charges its three edges via one
-    explode, map-side combined) + one semi-join filter; eager
-    localCheckpoint per round keeps lineage O(1)."""
+    explode, map-side combined) + one semi-join filter."""
     if k < 3:
         raise ValueError("ktruss: k must be >= 3")
+
     und = undirected_edges(edges, src, dst).localCheckpoint()
 
     def support(e: DataFrame) -> DataFrame:
@@ -777,10 +773,11 @@ def ktruss(edges: DataFrame, k: int = 3, rounds: int = 3,
             F.count(F.lit(1)).cast("bigint").alias("support")
         )
 
-    for _ in range(rounds):
-        sup = support(und)
-        keep = sup.where(F.col("support") >= k - 2).select("va", "vb")
-        und = und.join(keep, ["va", "vb"], "left_semi").localCheckpoint()
+    def peel(e: DataFrame) -> DataFrame:
+        keep = support(e).where(F.col("support") >= k - 2).select("va", "vb")
+        return e.join(keep, ["va", "vb"], "left_semi")
+
+    und = iterate(und, peel, rounds)
     # LEFT join + coalesce: an edge can pass the last round's filter
     # (support >= k-2 in the round INPUT) yet end with zero triangles
     # in the final edge set once its co-members peel — it is still a
@@ -822,24 +819,19 @@ def label_propagation(edges: DataFrame, rounds: int = LPA_ROUNDS,
     Shape per round: one equi-join of the V-row label table to the
     adjacency on the vertex key (AQE splits hot vertices) + one
     map-side-combined (v, label) count + one per-VERTEX window
-    row_number (partitioned by v — never a global sort); eager
-    localCheckpoint keeps lineage O(1); the adjacency operand is
-    materialized once and reused every round. Every vertex of the edge
-    table has >= 1 neighbor, so no vertex ever drops out."""
-    from pyspark.sql import Window
-
+    row_number (partitioned by v — never a global sort); the adjacency
+    operand is materialized once and reused every round. Every vertex
+    of the edge table has >= 1 neighbor, so no vertex ever drops
+    out."""
     if rounds < 1:
         raise ValueError("label_propagation: rounds must be >= 1")
-    und = undirected_edges(edges, src, dst)
-    adj = und.unionByName(
-        und.select(F.col("vb").alias("va"), F.col("va").alias("vb"))
-    ).select(F.col("va").alias("v"), F.col("vb").alias("nbr"))
-    adj = adj.localCheckpoint()
+    adj = _adjacency(edges, src, dst).localCheckpoint()
     labels = (
         adj.select("v").distinct().withColumn("label", F.col("v")).localCheckpoint()
     )
     w = Window.partitionBy("v").orderBy(F.desc("c"), F.asc("label"))
-    for _ in range(rounds):
+
+    def adopt(labels: DataFrame) -> DataFrame:
         cnt = (
             adj.join(
                 labels.select(F.col("v").alias("nbr"), "label"), "nbr"
@@ -847,12 +839,13 @@ def label_propagation(edges: DataFrame, rounds: int = LPA_ROUNDS,
             .groupBy("v", "label")
             .agg(F.count(F.lit(1)).alias("c"))
         )
-        labels = (
+        return (
             cnt.withColumn("rn", F.row_number().over(w))
             .where(F.col("rn") == 1)
             .select("v", "label")
-            .localCheckpoint()
         )
+
+    labels = iterate(labels, adopt, rounds)
     return labels.select(F.col("v").alias("surface"), F.col("label").alias("community"))
 
 
@@ -919,59 +912,39 @@ def random_walks(edges: DataFrame, walk_len: int = 8,
     Shape: the adjacency is aggregated ONCE into per-node sorted
     neighbor arrays (one shuffle; rank assignment needs no window — the
     array IS the rank order), then each of the walk_len rounds is one
-    equi-join of the V-row frontier against the V-row adjacency +
+    equi-join of the V-row walk table (start, cur, walk-so-far array;
+    step t = the array's length) against the V-row adjacency +
     element_at: L joins of V rows total, never an E-row per-step
     filter. Hub vertices make wide arrays (data skew, not compute
     skew); at true web scale the standard move is capping the stored
     neighbor list per node (uniform hash-sample of the adjacency),
     which changes the walk distribution the same bounded way the LSH
-    bucket cap changes recall — documented, not silent. Driver-looped
-    lazy plans with per-round localCheckpoint (O(1) lineage, same
-    discipline as pagerank/bfs)."""
-    und = undirected_edges(edges, src, dst)
+    bucket cap changes recall — documented, not silent."""
     adj = (
-        und.unionByName(
-            und.select(F.col("vb").alias("va"), F.col("va").alias("vb"))
-        )
-        .groupBy(F.col("va").alias("node"))
-        .agg(F.array_sort(F.collect_set("vb")).alias("nbrs"))
+        _adjacency(edges, src, dst)
+        .groupBy(F.col("v").alias("node"))
+        .agg(F.array_sort(F.collect_set("nbr")).alias("nbrs"))
         .localCheckpoint()
     )
-    cur = adj.select(F.col("node").alias("start"), F.col("node").alias("cur"))
-    out = cur.select(
-        "start", F.lit(0).cast("bigint").alias("step"),
-        F.col("cur").alias("surface"),
-    ).localCheckpoint()
-    for t in range(1, walk_len + 1):
+
+    def hop(w: DataFrame) -> DataFrame:
+        key = F.concat_ws("|", "start", F.size("walk").cast("string"), "cur")
         pick = (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat_ws(
-                            "|", F.col("start"), F.lit(str(t)), F.col("cur")
-                        )
-                    ),
-                    1, 12,
-                ),
-                16, 10,
-            ).cast("long")
+            F.conv(F.substring(F.md5(key), 1, 12), 16, 10).cast("long")
             % F.size("nbrs")
         ).cast("int")
-        cur = (
-            cur.join(adj, cur.cur == adj.node)
-            .select(
-                "start",
-                F.element_at("nbrs", pick + 1).alias("cur"),
-            )
-            .localCheckpoint()
+        return (
+            w.join(adj, w.cur == adj.node)
+            .select("start", "walk", F.element_at("nbrs", pick + 1).alias("cur"))
+            .withColumn("walk", F.concat("walk", F.array("cur")))
         )
-        out = out.unionByName(
-            cur.select(
-                "start", F.lit(t).cast("bigint").alias("step"),
-                F.col("cur").alias("surface"),
-            )
-        )
-    return out
+
+    start = adj.select(F.col("node").alias("start"), F.col("node").alias("cur"),
+                       F.array("node").alias("walk"))
+
+    return iterate(start, hop, walk_len).select(
+        "start", F.posexplode("walk").alias("step", "surface")
+    ).select("start", F.col("step").cast("bigint"), "surface")
 
 
 _BATCH_STEPS = 3  # scc: propagation pushes fused per checkpoint/count
@@ -1004,129 +977,81 @@ def scc(edges: DataFrame, src: str = "src_surface", dst: str = "dst_surface",
     3. peel the collected SCCs off and repeat on the remainder.
 
     Every step is an equi-join + map-side-combinable agg over (V + E)
-    rows; rounds are driver-looped over lazy plans with an eager
-    localCheckpoint per round (O(1) lineage, the pagerank/bfs
-    discipline) and exact changed-row / growth counts as convergence
-    fingerprints; ``_BATCH_STEPS`` propagation pushes are fused per
-    materialization, so the blocking-action count (the dominant cost
-    of a driver loop on small graphs) is diameter/3, not diameter.
-    ``max_iter`` bounds the BATCHED rounds per inner fixpoint (i.e. a
-    diameter of max_iter * _BATCH_STEPS); ``max_outer`` bounds the
-    peeling depth (worst case: a
-    path graph numbered against the max order peels one SCC per round —
-    real KGs peel in a handful). Both guards raise loudly rather than
-    returning a partial condensation. Self-loops are dropped (a
+    rows, and each of the three loops is an ``iterate``: the coloring
+    and collection fixpoints (exact changed-row / growth counts as
+    convergence tests) nested inside the peel loop (state: remaining
+    vertices, remaining edges, collected SCCs). ``_BATCH_STEPS``
+    propagation pushes are fused per round, so the blocking-action
+    count (the dominant cost of a driver loop on small graphs) is
+    diameter/3, not diameter — no change across a whole batch still
+    implies fixpoint (propagation is monotone). ``max_iter`` bounds the
+    BATCHED rounds per inner fixpoint (i.e. a diameter of max_iter *
+    _BATCH_STEPS); ``max_outer`` bounds the peeling depth (worst case:
+    a path graph numbered against the max order peels one SCC per
+    round — real KGs peel in a handful). Self-loops are dropped (a
     self-loop never merges vertices); vertices that appear ONLY in
     self-loops are absent, as in ``components``."""
-    e0 = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-        .where(F.col("s") != F.col("d"))
-        .distinct()
-        .localCheckpoint()
-    )
-    verts = (
-        e0.select(F.col("s").alias("v"))
-        .unionByName(e0.select(F.col("d").alias("v")))
-        .distinct()
-        .localCheckpoint()
-    )
-    e = e0
-    done: DataFrame | None = None
-    for _ in range(max_outer):
-        if verts.limit(1).count() == 0:
-            break
-        # -- 1. forward max-label coloring to fixpoint ----------------
-        # BATCH_STEPS pushes per materialization: lineage stays O(1)
-        # per checkpoint while the blocking-action count (the driver-
-        # loop cost that dominates on small graphs) drops by the batch
-        # factor. The convergence check stays EXACT — no change across
-        # a whole batch implies fixpoint (propagation is monotone).
-        color = verts.withColumn("c", F.col("v")).localCheckpoint()
-        converged = False
-        for _i in range(max_iter):
-            new_color = color
-            for _s in range(_BATCH_STEPS):
+    e0 = _arcs(edges, src, dst).localCheckpoint()
+    verts = _vertex_set(e0, "s", "d", "v").localCheckpoint()
+
+    def peel(state: tuple[DataFrame, DataFrame, DataFrame]):
+        verts, e, done = state
+
+        def push_color(color: DataFrame) -> DataFrame:
+            for _ in range(_BATCH_STEPS):
                 pushed = (
-                    new_color.join(e, new_color.v == e.s)
+                    color.join(e, color.v == e.s)
                     .select(F.col("d").alias("v"), "c")
                 )
-                new_color = (
-                    new_color.unionByName(pushed)
+                color = (
+                    color.unionByName(pushed)
                     .groupBy("v")
                     .agg(F.max("c").alias("c"))
                 )
-            new_color = new_color.localCheckpoint()
-            n_changed = (
-                new_color.alias("n")
-                .join(color.alias("o"), "v")
-                .where(F.col("n.c") != F.col("o.c"))
-                .count()
-            )
-            color = new_color
-            if n_changed == 0:
-                converged = True
-                break
-        if not converged:
-            raise RuntimeError(
-                f"scc: coloring did not converge in {max_iter} rounds "
-                "(graph diameter exceeds max_iter)"
-            )
-        # -- 2. backward collection within color classes --------------
-        asg = (
-            color.where(F.col("c") == F.col("v"))
-            .select("v", F.col("c").alias("scc_id"))
-            .localCheckpoint()
-        )
-        prev_n = asg.count()
-        converged = False
-        for _i in range(max_iter):
-            new_asg = asg
-            for _s in range(_BATCH_STEPS):
+            return color
+
+        # -- 1. forward max-label coloring to fixpoint ----------------
+        color = iterate(verts.withColumn("c", F.col("v")), push_color,
+                        max_iter, no_change("v", "c"), name="scc coloring")
+
+        def collect(asg: DataFrame) -> DataFrame:
+            for _ in range(_BATCH_STEPS):
                 cand = (
-                    e.join(new_asg.select(F.col("v").alias("d"), "scc_id"), "d")
+                    e.join(asg.select(F.col("v").alias("d"), "scc_id"), "d")
                     .select(F.col("s").alias("v"), "scc_id")
                     .distinct()
                 )
-                new_asg = (
-                    new_asg.unionByName(
+                asg = (
+                    asg.unionByName(
                         cand.join(color, "v")
                         .where(F.col("scc_id") == F.col("c"))
                         .select("v", "scc_id")
                     )
                     .distinct()
                 )
-            new_asg = new_asg.localCheckpoint()
-            n = new_asg.count()
-            asg = new_asg
-            if n == prev_n:
-                converged = True
-                break
-            prev_n = n
-        if not converged:
-            raise RuntimeError(
-                f"scc: collection did not converge in {max_iter} rounds"
-            )
-        done = asg if done is None else done.unionByName(asg).localCheckpoint()
+            return asg
+
+        # -- 2. backward collection within color classes --------------
+        roots = color.where(F.col("c") == F.col("v")).select(
+            "v", F.col("c").alias("scc_id")
+        )
+        asg = iterate(roots, collect, max_iter, steady(lambda a: a.count()),
+                      name="scc collection")
         # -- 3. peel ---------------------------------------------------
-        verts = verts.join(asg, "v", "left_anti").localCheckpoint()
-        e = (
+        return (
+            verts.join(asg, "v", "left_anti"),
             e.join(asg.select(F.col("v").alias("s")), "s", "left_anti")
             .join(asg.select(F.col("v").alias("d")), "d", "left_anti")
-            .select("s", "d")
-            .localCheckpoint()
+            .select("s", "d"),
+            done.unionByName(asg),
         )
-    else:
-        # the loop ran its full budget — only an error if vertices
-        # actually remain (the graph may empty on the LAST peel)
-        if verts.limit(1).count() != 0:
-            raise RuntimeError(
-                f"scc: peeling did not finish in {max_outer} outer rounds"
-            )
-    if done is None:  # edgeless (after self-loop drop) graph
-        spark = edges.sparkSession
-        return spark.createDataFrame(
-            [], "surface string, scc_id string, scc_size bigint"
-        )
+
+    # the graph may empty on the LAST peel: the test runs after a round
+    _, _, done = iterate(
+        (verts, e0, verts.select("v", F.col("v").alias("scc_id")).limit(0)),
+        peel, max_outer, lambda _old, new: new[0].limit(1).count() == 0,
+        name="scc peeling",
+    )
     # scc_id = MAX of the component so far (coloring is max-based);
     # re-key to the MIN member for the components-convention id, and
     # attach sizes with a map-side-combined agg + equi-join (never a
@@ -1161,11 +1086,7 @@ def condensation(edges: DataFrame, src: str = "src_surface",
     SCC-ness, and is asserted in tests rather than re-checked at
     runtime."""
     m = scc(edges, src=src, dst=dst, **scc_kwargs).select("surface", "scc_id")
-    e = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-        .where(F.col("s") != F.col("d"))
-        .distinct()
-    )
+    e = _arcs(edges, src, dst)
     return (
         e.join(m.select(F.col("surface").alias("s"),
                         F.col("scc_id").alias("src_scc")), "s")
@@ -1224,12 +1145,7 @@ def motif_census(edges: DataFrame, src: str = "src_surface",
     equi-joins on single vertex keys (AQE splits hot vertices), no
     nested loop; the anchoring predicates are residual filters on
     the joined row."""
-    d = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("t"))
-        .where(F.col("s") != F.col("t"))
-        .distinct()
-        .localCheckpoint()
-    )
+    d = _arcs(edges, src, dst, "s", "t").localCheckpoint()
     ab = d.select(F.col("s").alias("a"), F.col("t").alias("b"))
     bc = d.select(F.col("s").alias("b"), F.col("t").alias("c"))
     ca = d.select(F.col("s").alias("c"), F.col("t").alias("a"))
@@ -1279,36 +1195,20 @@ def katz_scores(edges: DataFrame, rounds: int = 3,
     untruncated series to converge; the fixed-round truncation here is
     finite for any alpha, and matches the unrolled SQL twin exactly.
 
-    Shape: rounds x (one equi-join + one map-side-combined agg + one
-    left join back to verts), per-round eager localCheckpoint = O(1)
-    lineage — same loop scaling as kg_pagerank (the running katz total
-    rides the rank frame, no extra pass)."""
-    verts, n_v, eo = _pr_operands(edges, src, dst)
+    Shape: the PageRank loop (``_pr_iterate``) with the running katz
+    total riding the rank frame — no extra pass."""
+    verts, _, eo = _pr_operands(edges, src, dst)
+    x = F.expr(f"coalesce(inflow, 0L) div {alpha_den}")
     state = verts.select(
         "surface",
         F.lit(KATZ_UNIT).cast("bigint").alias("x_u"),
         F.lit(0).cast("bigint").alias("katz_u"),
-    ).localCheckpoint()
-    for _ in range(rounds):
-        contribs = (
-            eo.join(state, eo.src == state.surface)
-            .select(F.col("dst").alias("surface"), F.col("x_u").alias("c"))
-            .groupBy("surface")
-            .agg(F.sum("c").alias("inflow"))
-        )
-        state = (
-            state.join(contribs, "surface", "left")
-            .select(
-                "surface",
-                F.expr(f"coalesce(inflow, 0L) div {alpha_den}")
-                .cast("bigint").alias("x_u"),
-                (F.col("katz_u")
-                 + F.expr(f"coalesce(inflow, 0L) div {alpha_den}"))
-                .cast("bigint").alias("katz_u"),
-            )
-            .localCheckpoint()
-        )
-    return state.select("surface", "katz_u")
+    )
+    return _pr_iterate(
+        eo, state, rounds, F.col("x_u"),
+        x.cast("bigint").alias("x_u"),
+        (F.col("katz_u") + x).cast("bigint").alias("katz_u"),
+    ).select("surface", "katz_u")
 
 
 STRESS_ROOTS = 4   # deterministic root sample size for the contract query
@@ -1342,53 +1242,44 @@ def stress_scores(edges: DataFrame, n_roots: int = STRESS_ROOTS,
     state makes sample size a linear cost knob as in closeness).
 
     Shape: forward = MS-BFS batched per level (all roots advance in
-    the same equi-join + map-side-combined sigma sum; frontier
+    the same equi-join + map-side-combined sigma sum; the new level
     anti-joins the visited set); backward = per level one equi-join
-    to the next level's phi + one sum. Every frame is eagerly
-    localCheckpoint-ed (O(1) lineage); state is O(levels * reached),
-    bounded by the root sample."""
-    e = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("t"))
-        .where(F.col("s") != F.col("t"))
-        .distinct()
-        .localCheckpoint()
-    )
-    verts = (
-        e.select(F.col("s").alias("surface"))
-        .unionByName(e.select(F.col("t").alias("surface")))
-        .distinct()
-        .localCheckpoint()
-    )
+    to the next level's phi + one sum. Both sweeps are ``iterate``
+    loops over one growing (root, surface, sigma, level[, phi]) frame;
+    state is O(levels * reached), bounded by the root sample."""
+    e = _arcs(edges, src, dst, "s", "t").localCheckpoint()
+    verts = _vertex_set(e, "s", "t").localCheckpoint()
     roots = verts.orderBy("surface").limit(n_roots)
-    level_frames = [
-        roots.select(
-            F.col("surface").alias("root"),
-            "surface",
-            F.lit(1).cast("bigint").alias("sigma"),
-        ).localCheckpoint()
-    ]
-    visited = level_frames[0].select("root", "surface").localCheckpoint()
-    for _ in range(levels):
-        cur = level_frames[-1]
+    depth = itertools.count()
+
+    def forward(fwd: DataFrame) -> DataFrame:
+        lvl = next(depth)
+        cur = fwd.where(F.col("level") == lvl)
         nxt = (
             cur.join(e, cur.surface == e.s)
             .select("root", F.col("t").alias("surface"), "sigma")
             .groupBy("root", "surface")
             .agg(F.sum("sigma").cast("bigint").alias("sigma"))
-            .join(visited, ["root", "surface"], "left_anti")
-            .localCheckpoint()
+            .join(fwd.select("root", "surface"), ["root", "surface"], "left_anti")
         )
-        level_frames.append(nxt)
-        visited = visited.unionByName(
-            nxt.select("root", "surface")
-        ).localCheckpoint()
+        return fwd.unionByName(nxt.withColumn("level", F.lit(lvl + 1)))
+
+    fwd = iterate(
+        roots.select(
+            F.col("surface").alias("root"),
+            "surface",
+            F.lit(1).cast("bigint").alias("sigma"),
+            F.lit(0).alias("level"),
+        ).localCheckpoint(),
+        forward, levels,
+    )
     # backward: phi over the shortest-path DAG, deepest level first
-    phi_frames = [
-        level_frames[levels].withColumn("phi", F.lit(0).cast("bigint"))
-    ]
-    for l in range(levels - 1, -1, -1):
-        cur = level_frames[l]
-        nxt = phi_frames[-1].select(
+    sweep = iter(range(levels - 1, -1, -1))
+
+    def backward(allp: DataFrame) -> DataFrame:
+        lvl = next(sweep)
+        cur = fwd.where(F.col("level") == lvl)
+        nxt = allp.where(F.col("level") == lvl + 1).select(
             F.col("root").alias("nroot"),
             F.col("surface").alias("nsurface"),
             F.col("phi").alias("nphi"),
@@ -1407,17 +1298,18 @@ def stress_scores(edges: DataFrame, n_roots: int = STRESS_ROOTS,
             .groupBy("root", "surface")
             .agg(F.sum(F.lit(1) + F.col("nphi")).cast("bigint").alias("phi"))
         )
-        phi_frames.append(
-            cur.join(contrib, ["root", "surface"], "left")
-            .select(
-                "root", "surface", "sigma",
+        return allp.unionByName(
+            cur.join(contrib, ["root", "surface"], "left").select(
+                "root", "surface", "sigma", "level",
                 F.coalesce(F.col("phi"), F.lit(0)).cast("bigint").alias("phi"),
             )
-            .localCheckpoint()
         )
-    allp = phi_frames[0]
-    for fr in phi_frames[1:]:
-        allp = allp.unionByName(fr)
+
+    allp = iterate(
+        fwd.where(F.col("level") == levels)
+        .withColumn("phi", F.lit(0).cast("bigint")),
+        backward, levels,
+    )
     stress = (
         allp.where(F.col("surface") != F.col("root"))
         .groupBy("surface")
@@ -1484,28 +1376,22 @@ def coreness(edges: DataFrame, rounds: int = 6,
     Shape per round: one adjacency equi-join carrying the |E|-sized
     (v, c_nbr) frame, one per-vertex window (partitionBy v — shuffles
     on the vertex key, never a global sort: h = max(min(rank, c)) over
-    neighbors ranked by c desc), one map-side-combined max agg; eager
-    localCheckpoint keeps lineage O(1). Skewed hubs are one key each —
+    neighbors ranked by c desc), one map-side-combined max agg. Skewed
+    hubs are one key each —
     AQE splits the straggler partition; the window state per key is
     the neighbor list it would take to compute any order statistic."""
-    from pyspark.sql import Window
-
-    und = undirected_edges(edges, src, dst).localCheckpoint()
-    adj = (
-        und.select(F.col("va").alias("v"), F.col("vb").alias("nbr"))
-        .unionByName(und.select(F.col("vb").alias("v"), F.col("va").alias("nbr")))
-        .localCheckpoint()
-    )
+    adj = _adjacency(edges, src, dst).localCheckpoint()
     c = adj.groupBy("v").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     w = Window.partitionBy("v").orderBy(F.desc("cn"), F.asc("nbr"))
-    for _ in range(rounds):
+
+    def h_index(c: DataFrame) -> DataFrame:
         j = (
             adj.join(c.select(F.col("v").alias("nbr"), F.col("c").alias("cn")), "nbr")
             .withColumn("rk", F.row_number().over(w))
         )
-        c = (
-            j.groupBy("v")
-            .agg(F.max(F.least(F.col("rk").cast("bigint"), F.col("cn"))).alias("c"))
-            .localCheckpoint()
+        return j.groupBy("v").agg(
+            F.max(F.least(F.col("rk").cast("bigint"), F.col("cn"))).alias("c")
         )
+
+    c = iterate(c, h_index, rounds)
     return c.select(F.col("v").alias("surface"), F.col("c").cast("bigint").alias("coreness"))

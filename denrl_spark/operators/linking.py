@@ -14,9 +14,8 @@ Scale notes:
   (celebrity entities), and ``salt_buckets`` pre-salts the mention->
   normalized-form grouping, the classic power-law hotspot.
 - iterations are bounded (components of similarity graphs are shallow;
-  min-label propagation converges in O(diameter) rounds) and each round
-  is checkpoint-friendly (localCheckpoint truncates the lineage so plans
-  don't grow exponentially).
+  min-label propagation converges in O(diameter) rounds) and run through
+  ``graph_analytics.iterate``, which checkpoints every round.
 """
 
 from __future__ import annotations
@@ -82,43 +81,31 @@ def connected_components(
     ``max_iter`` is generous headroom for alias-edge chains. If the
     fixpoint is NOT reached within max_iter, ``strict`` raises rather
     than silently returning partially-merged components."""
-    spark = nodes.sparkSession
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    from denrl_spark.operators.graph_analytics import iterate, no_change
+
+    n_part = int(nodes.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     labels = nodes.select(
         F.col("node_id"), F.col("node_id").alias("component")
     ).repartition(n_part, "node_id")
     und = edges.select("src", "dst").unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    changed = -1
-    for _ in range(max_iter):
+
+    def adopt_min(labels: DataFrame) -> DataFrame:
         msgs = (
             und.join(labels, und.src == labels.node_id)
             .select(F.col("dst").alias("node_id"), "component")
         )
-        new_labels = (
+        return (
             labels.select("node_id", "component")
             .unionByName(msgs)
             .groupBy("node_id")
             .agg(F.min("component").alias("component"))
             .repartition(n_part, "node_id")
-            .localCheckpoint()
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node_id")
-            .where(F.col("n.component") != F.col("o.component"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    if strict and changed != 0:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} iterations "
-            f"({changed} labels still changing) — raise max_iter"
-        )
-    return labels
+
+    return iterate(labels, adopt_min, max_iter, no_change("node_id", "component"),
+                   name="connected_components", strict=strict)
 
 
 def canonicalize_surfaces(mentions: DataFrame) -> DataFrame:

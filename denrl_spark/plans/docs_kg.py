@@ -469,27 +469,34 @@ def pred_triples_numeric_by_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def build_graph(trips: DataFrame, eager: str) -> tuple[DataFrame, DataFrame]:
+    """The one graph build of the driver queries: ``materialize_graph``
+    over a lazily-cached triple table, returning (vertices, edges) with
+    the ``eager`` part(s) materialized and every internal cache
+    released, so repeated calls in a long session do not accumulate
+    cached relations.
+
+    Cache discipline: the cache is populated by materialize_graph's
+    own mention-map job — a single subtree, so concurrent consumers
+    cannot each re-run the extraction — and the next job reads it
+    warm. It is a cache, not a localCheckpoint: a
+    checkpointed RDD scan reports bogus size estimates that once made
+    the planner broadcast the big TRIPLES side of the canonical-map
+    join, while the InMemoryRelation gives exact stats."""
+    from denrl_spark.operators.graph import materialize_graph
+
+    trips = trips.cache()
+    vertices, edges = materialize_graph(trips, eager=eager)
+    trips.unpersist()
+    return vertices, edges
+
+
 def _canonical_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Raw canonical edge table over the doc-keyed gold triples (stage
     6: linking.canonicalize + graph.materialize_graph) — the shared
-    input of edges_by_doc / edge_history / the analytics queries.
-
-    Cache discipline: eagerly-materialized cache, not lazy cache
-    (population race) and not localCheckpoint (bogus RDD stats flip the
-    join sides) — see kg_edges in driver_queries.py; the edges come
-    back eager so every internal cache is released before returning
-    (ADVICE r2 leak class)."""
-    from denrl_spark.operators.graph import materialize_graph
-
-    trips = (
-        gold_triples_by_doc(spark, sf_dir)
-        .withColumnRenamed("doc_id", "sent_id")
-        .cache()
-    )
-    trips.count()
-    _, edges = materialize_graph(trips, eager="edges")
-    trips.unpersist()
-    return edges
+    input of edges_by_doc / edge_history / the analytics queries."""
+    trips = gold_triples_by_doc(spark, sf_dir).withColumnRenamed("doc_id", "sent_id")
+    return build_graph(trips, "edges")[1]
 
 
 def edges_by_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -693,17 +700,8 @@ def vertices_by_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical vertex table, surface-keyed; the observed-type set is
     emitted sorted+joined (a deterministic scalar) so the value hash is
     stable under any partitioning."""
-    from denrl_spark.operators.graph import materialize_graph
-
-    trips = (
-        gold_triples_by_doc(spark, sf_dir)
-        .withColumnRenamed("doc_id", "sent_id")
-        .cache()
-    )
-    trips.count()
-    # eager: caches released before return (see kg_edges / ADVICE r2)
-    vertices, _ = materialize_graph(trips, eager="vertices")
-    trips.unpersist()
+    trips = gold_triples_by_doc(spark, sf_dir).withColumnRenamed("doc_id", "sent_id")
+    vertices, _ = build_graph(trips, "vertices")
     return vertices.select(
         "canonical_surface",
         F.concat_ws(",", F.array_sort("types")).alias("types_csv"),

@@ -138,29 +138,8 @@ def kg_gold_triples_modular(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_raw("kg_edges")  # canonicalized KG edge table, engine-internal ids
 def kg_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from denrl_spark.operators.graph import materialize_graph
-
-    # LAZILY-materialized cache (r6; was cache + count). The r3 race —
-    # concurrent subtrees of one action each re-running the Python
-    # extraction (~19s vs ~6s) — cannot occur under eager="edges",
-    # because materialize_graph SERIALIZES the two triple consumers: the
-    # mention-map cache+count job populates this cache first (single
-    # subtree), and the edges-checkpoint job then reads it warm. Dropping
-    # the explicit count() removes one full pass over the triples
-    # (~0.6s at sf0.1/32c). The cache (not localCheckpoint) is still
-    # load-bearing: a checkpointed RDD scan reports bogus size estimates
-    # that once made the planner broadcast the 3.9M-row TRIPLES side of
-    # the canonical-map join; the InMemoryRelation gives exact stats, so
-    # the small mention map is broadcast and the big side shuffles — the
-    # right join at every scale.
-    trips = kg_gold_triples(spark, sf_dir).cache()
-    # eager="edges": edges come back materialized (localCheckpoint) so
-    # both caches (triples here, mention map inside) can be released
-    # before returning — repeated invocations in a long session no
-    # longer accumulate InMemoryRelations (ADVICE r2).
-    _, edges = materialize_graph(trips, eager="edges")
-    trips.unpersist()
-    return edges
+    # the same graph build as kg_edges_by_doc (docs_kg.build_graph)
+    return docs_kg.build_graph(kg_gold_triples(spark, sf_dir), "edges")[1]
 
 
 # --------------------------------------------------------------------------

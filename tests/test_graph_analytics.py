@@ -8,8 +8,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from denrl_spark.operators.graph_analytics import (
+    bfs_distances,
+    closeness,
+    components,
     degrees,
     pagerank,
+    scc,
     triangles,
     two_hop,
     undirected_edges,
@@ -799,6 +803,54 @@ def test_scc_exact_outer_budget_succeeds(spark):
     assert got == {("a", "a", 1), ("b", "b", 1), ("c", "c", 1)}
     with _pytest.raises(RuntimeError, match="peeling"):
         scc(g, max_outer=2)
+
+
+# p7 -> p6 -> ... -> p0: diameter 7, and numbered AGAINST scc's
+# max-coloring order so its coloring needs more than one batched round
+PATH8 = [(f"p{i + 1}", "p", f"p{i}", 1) for i in range(7)]
+
+
+@pytest.mark.parametrize("op, name", [
+    (lambda g: bfs_distances(g, ["p0"], max_iter=1), "bfs_distances"),
+    (lambda g: closeness(g, max_iter=1), "closeness"),
+    (lambda g: components(g, max_iter=1), "connected_components"),
+    (lambda g: scc(g, max_iter=1), "scc"),
+], ids=["bfs", "closeness", "components", "scc"])
+def test_exhausted_budget_fails_loudly(spark, op, name):
+    """A path longer than the round budget: every fixpoint operator
+    raises a RuntimeError naming itself instead of returning a partial
+    result — the one guard in graph_analytics.iterate."""
+    g = spark.createDataFrame(
+        PATH8, "src_surface string, pred string, dst_surface string, n_obs long"
+    )
+    with pytest.raises(RuntimeError, match=name):
+        op(g)
+
+
+def test_scc_long_cycle_needs_several_rounds(spark):
+    """A 10-cycle is one SCC, but both its coloring and its backward
+    collection need 9 pushes — several batched rounds — so a
+    convergence test that stopped early would split it."""
+    g = spark.createDataFrame(
+        [(f"v{i}", "p", f"v{(i + 1) % 10}", 1) for i in range(10)],
+        "src_surface string, pred string, dst_surface string, n_obs long",
+    )
+    got = {tuple(r) for r in scc(g).collect()}
+    assert got == {(f"v{i}", "v0", 10) for i in range(10)}
+
+
+def test_connected_components_non_strict_returns(spark):
+    """strict=False is the opt-out: the same exhausted budget returns
+    the partially-merged labels instead of raising."""
+    from denrl_spark.operators.linking import connected_components
+
+    nodes = spark.createDataFrame([(i,) for i in range(8)], "node_id long")
+    und = spark.createDataFrame(
+        [(i + 1, i) for i in range(7)], "src long, dst long"
+    )
+    got = connected_components(nodes, und, max_iter=1, strict=False).collect()
+    assert len(got) == 8
+    assert len({r["component"] for r in got}) > 1  # not yet merged
 
 
 def test_scc_adversarial_digraphs(spark):

@@ -1,16 +1,10 @@
-"""Structured Streaming ingestion + multimodal plumbing tests."""
+"""Structured Streaming ingestion tests."""
 
 import numpy as np
 import pytest
 
 from pyspark.sql import functions as F
 
-from denrl_spark.functions.multimodal import (
-    FEATURE_DIM,
-    decode_stub,
-    extract_features,
-    synth_attachments,
-)
 from denrl_spark.sources.corpus import transcripts
 from denrl_spark.streaming.ingest import (
     stream_transcripts,
@@ -62,29 +56,6 @@ def test_stream_triples_matches_batch(spark, transcript_dir, tmp_path):
     a = sorted(map(tuple, got.select("sent_id", "ent1", "ent1_tag", "ent2", "ent2_tag").collect()))
     b = sorted(map(tuple, batch.collect()))
     assert a == b and len(a) > 0
-
-
-def test_decode_stub_gated():
-    with pytest.raises(NotImplementedError):
-        decode_stub(b"xx", "image/png", fake=False)
-    v = decode_stub(b"xx", "image/png", fake=True)
-    assert v.shape == (FEATURE_DIM,) and np.isclose(np.linalg.norm(v), 1.0, atol=1e-5)
-    assert np.array_equal(v, decode_stub(b"xx", "image/png", fake=True))
-
-
-def test_extract_features_plumbing(spark, transcript_dir):
-    tr = spark.read.parquet(transcript_dir)
-    atts = synth_attachments(spark, tr)
-    n = atts.count()
-    assert n > 0
-    feats = extract_features(atts, fake=True)
-    rows = feats.collect()
-    assert len(rows) == n
-    assert all(len(r["feature"]) == FEATURE_DIM for r in rows)
-    # deterministic across partitionings
-    rows2 = extract_features(atts.repartition(7), fake=True).collect()
-    key = lambda r: (r["conv_id"], r["turn_idx"], r["att_idx"])  # noqa: E731
-    assert sorted(map(key, rows)) == sorted(map(key, rows2))
 
 
 def test_stateful_running_stats(spark, transcript_dir):
@@ -243,49 +214,6 @@ def test_dedup_stream_near_drops_signature_duplicates(spark, transcript_dir, tmp
         assert out.select(*sig_cols).distinct().count() == n_sigs
     finally:
         q.stop()
-
-
-def test_resize_and_frame_sample_plumbing(spark, transcript_dir):
-    from denrl_spark.functions.multimodal import resize_images, sample_frames
-
-    tr = spark.read.parquet(transcript_dir)
-    att = synth_attachments(spark, tr).cache()
-    n_att = att.count()
-    assert n_att > 0
-
-    resized = resize_images(att, target=32).cache()
-    assert resized.count() == n_att
-    r = resized.collect()
-    # aspect-preserving: max dim == target, schema round-trips
-    assert all(max(x["width"], x["height"]) == 32 for x in r)
-    assert set(resized.columns) == set(att.columns)
-    # deterministic: same input -> same bytes
-    r2 = {(x["conv_id"], x["turn_idx"]): bytes(x["payload"]) for x in resize_images(att, target=32).collect()}
-    assert all(r2[(x["conv_id"], x["turn_idx"])] == bytes(x["payload"]) for x in r)
-
-    frames = sample_frames(att, n_frames=3).cache()
-    assert frames.count() == 3 * n_att
-    assert frames.select("conv_id", "turn_idx", "att_idx", "frame_idx").distinct().count() == 3 * n_att
-    # frames pipeline into the feature extractor like any attachment
-    from denrl_spark.functions.multimodal import extract_features
-    as_att = frames.select(
-        "conv_id", "turn_idx",
-        (F.col("att_idx") * 100 + F.col("frame_idx")).alias("att_idx"),
-        F.lit("image/png").alias("mime"),
-        F.lit(32).alias("width"), F.lit(32).alias("height"),
-        F.col("frame_payload").alias("payload"),
-    )
-    feats = extract_features(as_att)
-    assert feats.count() == 3 * n_att
-
-
-def test_resize_unfaked_raises():
-    import pytest as _pytest
-
-    from denrl_spark.functions.multimodal import resize_stub, sample_frames
-
-    with _pytest.raises(NotImplementedError):
-        resize_stub(b"x", 4, 4, 2, fake=False)
 
 
 def test_stream_graph_deltas_view_equals_batch_graph(spark, transcript_dir, tmp_path):
