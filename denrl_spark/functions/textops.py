@@ -699,7 +699,10 @@ def jaccard_verify_pairs(
 
 
 def jaccard_verify_pairs_sets(
-    cand: DataFrame, sh: DataFrame, min_j_e6: int = 200_000
+    cand: DataFrame,
+    sh: DataFrame | None = None,
+    min_j_e6: int = 200_000,
+    gd: DataFrame | None = None,
 ) -> DataFrame:
     """Exact Jaccard verify over per-doc shingle-SET arrays: shared =
     size(array_intersect(set_a, set_b)), sizes read off the arrays —
@@ -712,11 +715,14 @@ def jaccard_verify_pairs_sets(
     where the extra agg exchange outweighs it — callers pick by scale
     (see jaccard_pairs_pruned). ``sh`` must be DISTINCT per (doc_id,
     shingle): array_intersect dedups, so set semantics require it.
-    ``sh`` may also be a (doc_id, grams) gram-ARRAY frame
-    (distinct_gram_docs) — the per-doc sets are then read directly off
-    the column and the collect_list exchange disappears (r6b)."""
-    if "grams" in sh.columns:
-        sets = sh.select("doc_id", F.col("grams").alias("_shs"))
+    Pass ``gd``, a (doc_id, grams) gram-ARRAY frame
+    (distinct_gram_docs), instead of ``sh`` to read the per-doc sets
+    directly off the column: the collect_list exchange disappears (r6b).
+    Exactly one of ``sh`` and ``gd`` must be given."""
+    if (sh is None) == (gd is None):
+        raise ValueError("jaccard_verify_pairs_sets: pass exactly one of sh, gd")
+    if gd is not None:
+        sets = gd.select("doc_id", F.col("grams").alias("_shs"))
     else:
         sets = sh.groupBy("doc_id").agg(F.collect_list("shingle").alias("_shs"))
     a = sets.select(F.col("doc_id").alias("doc_a"), F.col("_shs").alias("_sha"))
@@ -772,7 +778,7 @@ def jaccard_pairs_pruned(
     cand = lsh_candidate_pairs(docs, n_bands, gd=gd)
     n_shingles = gd.agg(F.sum(F.size("grams"))).first()[0] or 0
     if n_shingles >= JACCARD_SETS_MIN_SHINGLES:
-        return jaccard_verify_pairs_sets(cand, gd, min_j_e6)
+        return jaccard_verify_pairs_sets(cand, min_j_e6=min_j_e6, gd=gd)
     shd = gd.select("doc_id", F.explode("grams").alias("shingle"))
     sizes = gd.select("doc_id", F.size("grams").alias("n_sh"))
     return jaccard_verify_pairs(docs, cand, min_j_e6, sh=shd, sizes=sizes)

@@ -507,14 +507,24 @@ def extract_triples_fused(
 ) -> DataFrame:
     """transcripts(conv_id, turn_idx, text) -> triples, single pass.
 
-    ``n_partitions``: None (default) repartitions to 2x cluster
-    parallelism — the safety net for inputs that arrive as a few large
-    splits. Pass 0 when the input is ALREADY spread to cluster
-    parallelism (e.g. transcripts_from_documents' lifted scan): the
-    operator is per-row independent, so any even layout works, and
-    skipping the redundant hash exchange removes one full shuffle +
-    task wave from the query (measured ~0.5s of the 1.6s kg_gold wall
-    at sf0.1/32c — guide §2.4, remove shuffles outright)."""
+    ``n_partitions``: None (default) hash-repartitions to cluster
+    parallelism, one Arrow Python task per core — the safety net for
+    inputs that arrive as a few large splits. One wave, not two: every
+    Python task pays a fixed worker cost before the UDF body runs,
+    0.15-0.28 s of worker CPU per task for a no-op ``mapInPandas``
+    (pyspark 4.1.2, 4 vCPUs; ``tools/python_task_cpu.py``). About 0.12 s
+    of that is the per-task ``importlib.invalidate_caches()`` in the
+    worker's ``setup_spark_files``, which re-reads the archive of each
+    cached zipimporter (15 of them: ``pyspark.zip``, py4j). It scales with
+    the task count, not the data, so a second wave pays it twice for
+    tail balance that per-row independent work rarely needs. Pass an
+    explicit count to override.
+    Pass 0 when the input is ALREADY spread to cluster parallelism
+    (e.g. transcripts_from_documents' lifted scan): the operator is
+    per-row independent, so any even layout works, and skipping the
+    redundant hash exchange removes one full shuffle + task wave from
+    the query (measured ~0.5s of the 1.6s kg_gold wall at sf0.1/32c —
+    guide §2.4, remove shuffles outright)."""
     if mode not in ("gold", "pred"):
         raise ValueError(mode)
     kb = kb or KB.default()
@@ -522,9 +532,7 @@ def extract_triples_fused(
     spark = transcripts.sparkSession
     cols = transcripts.select("conv_id", "turn_idx", "text")
     if n_partitions != 0:
-        n_partitions = (
-            n_partitions or spark.sparkContext.defaultParallelism * 2
-        )
+        n_partitions = n_partitions or spark.sparkContext.defaultParallelism
         cols = cols.repartition(n_partitions, "conv_id", "turn_idx")
 
     def gen(batches):

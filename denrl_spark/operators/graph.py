@@ -131,18 +131,20 @@ def materialize_graph(
         )
     )
 
-    v_src = linked.select(
+    # one scan of linked, two mentions per row (the single-scan trick of
+    # linking.extract_mentions); collect_set drops the dst's null etype
+    v_src = F.struct(
         F.col("src_id").alias("canonical_id"),
         F.col("src_surface").alias("canonical_surface"),
         F.col("ent1_tag").alias("etype"),
     )
-    v_dst = linked.select(
+    v_dst = F.struct(
         F.col("dst_id").alias("canonical_id"),
         F.col("dst_surface").alias("canonical_surface"),
         F.lit(None).cast("string").alias("etype"),
     )
     vertices = (
-        v_src.unionByName(v_dst)
+        linked.select(F.inline(F.array(v_src, v_dst)))
         .groupBy("canonical_id", "canonical_surface")
         .agg(
             F.collect_set("etype").alias("types"),

@@ -485,10 +485,9 @@ def score_instances(
         # Arrow stage (callers whose input already has builder layout —
         # e.g. straight from build_instances — pass pre_partitioned=True:
         # the transform preserves partitioning and order, so sentence
-        # contiguity survives and no wide shuffle is paid)
+        # contiguity survives and no wide shuffle is paid); one Arrow
+        # task per core, as extract_triples_fused
         spark = instances.sparkSession
-        cols = cols.repartition(
-            spark.sparkContext.defaultParallelism * 2, "sent_id"
-        )
+        cols = cols.repartition(spark.sparkContext.defaultParallelism, "sent_id")
     schema = SCORED_SCHEMA if emit_attention else SCORED_SCHEMA_NO_ATT
     return cols.mapInPandas(gen, schema)

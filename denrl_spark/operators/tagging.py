@@ -174,13 +174,14 @@ def build_instances(
     """Transcripts -> instance table. One mapInPandas pass; the KB rides the
     task closure (tiny, equivalent to an explicit broadcast).
 
-    The input is re-hashed across ``n_partitions`` (default 2x cores)
-    first: transcript tables often arrive as few large files, and without
-    this the Arrow-UDF stage runs at file parallelism, not cluster
-    parallelism."""
+    The input is re-hashed across ``n_partitions`` (default one per
+    core, the fused kernel's rule: each Arrow Python task pays a fixed
+    worker cost, see ``extract_triples_fused``) first: transcript tables
+    often arrive as few large files, and without this the Arrow-UDF
+    stage runs at file parallelism, not cluster parallelism."""
     kb = kb or KB.default()
     spark = transcripts.sparkSession
-    n_partitions = n_partitions or spark.sparkContext.defaultParallelism * 2
+    n_partitions = n_partitions or spark.sparkContext.defaultParallelism
     cols = transcripts.select("conv_id", "turn_idx", "text").repartition(
         n_partitions, "conv_id", "turn_idx"
     )

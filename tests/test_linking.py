@@ -1,5 +1,7 @@
 """Entity canonicalization (connected components) + graph materialize."""
 
+import re
+
 from pyspark.sql import functions as F
 
 from denrl_spark.operators.graph import materialize_graph
@@ -104,6 +106,50 @@ def test_materialize_graph_end_to_end(spark):
     assert e.where(~F.col("pred").contains("/")).count() == 0
     # n_obs aggregates duplicates
     assert e.agg(F.max("n_obs")).collect()[0][0] >= 1
+
+
+def test_materialize_graph_vertices_match_oracle(spark):
+    """Vertices == a pure-Python oracle over a hand-built triple frame:
+    a dst-only surface (types == []), a surface seen as src and dst, a
+    norm group merged across casings, and entity-tag (non-``/``) triples
+    that feed the mention map but add no vertex mention. The lazy
+    vertices frame scans the linked rows once: 2 joins, not 4."""
+    rows = [
+        (1, "Alice", "PER", "Acme", "/per/works_at"),
+        (2, "Bob", "PER", "Alice", "/per/knows"),
+        (3, "acme", "ORG", "Paris", "/org/based_in"),
+        (4, "Alice", "PER", "ACME", "ORG"),
+        (5, "Zed", "PER", "Zed", "PER"),
+        (6, "Bob", "PER", "Acme", "/per/works_at"),
+    ]
+    trips = spark.createDataFrame(
+        rows, "sent_id bigint, ent1 string, ent1_tag string, ent2 string, ent2_tag string"
+    )
+
+    def norm(s):
+        return " ".join(re.sub(r"[^a-z0-9]+", " ", s.lower()).split())
+
+    surfaces = {s for r in rows for s in (r[1], r[3])}
+    canon = {s: min(t for t in surfaces if norm(t) == norm(s)) for s in surfaces}
+    exp = {}
+    for _, e1, t1, e2, t2 in rows:
+        if "/" not in t2:
+            continue
+        for surface, etype in ((e1, t1), (e2, None)):
+            types, n = exp.get(canon[surface], (set(), 0))
+            exp[canon[surface]] = (types | ({etype} - {None}), n + 1)
+    exp = {c: (sorted(types), n) for c, (types, n) in exp.items()}
+    assert exp["Paris"] == ([], 1) and exp["Alice"] == (["PER"], 2)
+    assert exp["ACME"] == (["ORG"], 3) and "Zed" not in exp
+
+    vertices, _ = materialize_graph(trips)
+    got = vertices.collect()
+    assert {
+        r["canonical_surface"]: (sorted(r["types"]), r["n_mentions"]) for r in got
+    } == exp
+    assert len({r["canonical_id"] for r in got}) == len(got)
+    plan = vertices._jdf.queryExecution().optimizedPlan().toString()
+    assert len(re.findall(r"\bJoin ", plan)) == 2, plan
 
 
 def test_materialize_graph_no_unbounded_broadcast(spark):

@@ -19,6 +19,7 @@ length, heavy within-doc shingle repetition, exact dups):
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from denrl_spark.functions import textops
@@ -96,10 +97,12 @@ def test_sets_verify_from_gram_arrays_equals_collect_list(spark):
     cand = textops.lsh_candidate_pairs(docs, gd=gd)
     shd = gd.select("doc_id", F.explode("grams").alias("shingle"))
     via_arrays = sorted(
-        map(tuple, textops.jaccard_verify_pairs_sets(cand, gd, 200_000).collect())
+        map(tuple, textops.jaccard_verify_pairs_sets(cand, min_j_e6=200_000, gd=gd).collect())
     )
     via_collect = sorted(
         map(tuple, textops.jaccard_verify_pairs_sets(cand, shd, 200_000).collect())
     )
     assert via_arrays == via_collect
     assert via_arrays, "fixture produced no verified pairs"
+    with pytest.raises(ValueError):
+        textops.jaccard_verify_pairs_sets(cand, shd, gd=gd)

@@ -1,6 +1,7 @@
 """End-to-end gold path: Spark triples == pure-Python oracle triples,
 and the eval metric on identical sets is exactly 1.0 (SURVEY.md §5.4)."""
 
+import re
 from collections import Counter
 
 from denrl_spark.operators.evaluate import triple_metrics
@@ -92,3 +93,23 @@ def test_fused_matches_modular_gold_and_pred(spark):
     scored = score_instances(ins, KBD, {}, pre_partitioned=True, emit_attention=False)
     mod_p = sorted(map(tuple, assemble_triples(scored, tags_col="pred_tags", assume_grouped=True).collect()))
     assert fused_p == mod_p
+
+
+def test_fused_layout_invariant(spark):
+    """extract_triples_fused is per-row independent: no input layout
+    (n_partitions=0), one partition, and the default one-wave hash
+    repartition all give the same triple multiset; the default plan
+    hashes (conv_id, turn_idx) into exactly defaultParallelism buckets."""
+    from denrl_spark.operators.fused import extract_triples_fused
+
+    tr = transcripts(spark, 30, seed=17).cache()
+    for mode in ("gold", "pred"):
+        got = {
+            n: sorted(map(tuple, extract_triples_fused(tr, KBD, mode, n).collect()))
+            for n in (0, 1, None)
+        }
+        assert got[0] == got[1] == got[None] and len(got[None]) > 0, mode
+    plan = extract_triples_fused(tr, KBD)._jdf.queryExecution().executedPlan().toString()
+    n = spark.sparkContext.defaultParallelism
+    hashes = re.findall(r"Exchange hashpartitioning\(conv_id#\d+, turn_idx#\d+L?, (\d+)\)", plan)
+    assert hashes == [str(n)], plan
