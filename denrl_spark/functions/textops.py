@@ -579,7 +579,7 @@ def lsh_candidate_pairs(
     |bucket|^2 candidate rows from the pairwise self-join, the one
     remaining quadratic shape on real web corpora. Buckets larger than
     ``bucket_cap`` are instead STAR-LINKED to the bucket's min doc_id
-    (|bucket|-1 rows — same trick as linking.mention_edges). Small
+    (|bucket|-1 rows: a star keeps the bucket connected). Small
     buckets keep the exact pairwise semantics.
 
     Recall contract of the cap (precise, not overclaimed): in the

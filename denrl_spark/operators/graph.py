@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from denrl_spark.operators.linking import canonicalize
+from denrl_spark.operators.linking import norm_map, normalize_surface
 
 R_TOOL_TOUCHES = "/agent/tool/touches"
 
@@ -70,91 +70,131 @@ def tool_edges(transcripts: DataFrame, kb) -> DataFrame:
     )
 
 
+def relation_rows(triples: DataFrame) -> DataFrame:
+    """The triples that become KG edges: ``ent2_tag`` carries the ``/``
+    convention and both endpoints are non-empty surfaces. The endpoint
+    test is on the RAW surface: a punctuation-only surface (``!!``) is
+    a real mention whose norm is ``""``, while a null or ``""`` surface
+    is no mention at all and links to nothing."""
+    return triples.where(
+        F.col("ent2_tag").contains("/") & (F.col("ent1") != "") & (F.col("ent2") != "")
+    )
+
+
 def link_canonical(triples: DataFrame, mmap: DataFrame) -> DataFrame:
-    """Relation rows (ent2_tag carries the ``/`` convention) joined
-    through the canonical mention map on BOTH endpoints — the shared
-    linking step of every canonical-edge derivation (materialize_graph
-    and the role-split edge table). ``mmap`` must carry (surface,
+    """Relation rows joined through a per-surface canonical map
+    (``linking.canonicalize``) on BOTH endpoints, at observation grain
+    — the linking step of the per-observation rollups (edges_by_role,
+    edges_by_window, entity cards). ``mmap`` must carry (surface,
     canonical_surface) and may carry canonical_id; all other triple
     columns pass through."""
-    t = triples.where(F.col("ent2_tag").contains("/"))
     ren = {"surface": "ent1", "canonical_surface": "src_surface",
            "canonical_id": "src_id"}
     src = mmap.withColumnsRenamed({k: v for k, v in ren.items() if k in mmap.columns})
     ren = {"surface": "ent2", "canonical_surface": "dst_surface",
            "canonical_id": "dst_id"}
     dst = mmap.withColumnsRenamed({k: v for k, v in ren.items() if k in mmap.columns})
-    return t.join(src, "ent1").join(dst, "ent2")
+    return relation_rows(triples).join(src, "ent1").join(dst, "ent2")
 
 
-def materialize_graph(
-    triples: DataFrame,
-    mentions_map: DataFrame | None = None,
-    eager: str | None = None,
+def observations(triples: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Triples -> (edge, vertex) observations of weight 1, the operands
+    of ``canonical_graph``: edge rows (ent1, pred, ent2, sent_id,
+    n_obs) and vertex rows (surface, etype, cnt). One scan of the
+    relation rows gives two vertex mentions per row: the src with its
+    ent1_tag, the dst with a null type that collect_set drops."""
+    rel = relation_rows(triples)
+    edge_obs = rel.select(
+        "ent1", F.col("ent2_tag").alias("pred"), "ent2", "sent_id",
+        F.lit(1).alias("n_obs"),
+    )
+    v_src = F.struct(F.col("ent1").alias("surface"), F.col("ent1_tag").alias("etype"))
+    v_dst = F.struct(
+        F.col("ent2").alias("surface"), F.lit(None).cast("string").alias("etype")
+    )
+    vertex_obs = rel.select(F.inline(F.array(v_src, v_dst)), F.lit(1).alias("cnt"))
+    return edge_obs, vertex_obs
+
+
+def link_norms(agg: DataFrame, cmap: DataFrame) -> DataFrame:
+    """Joins a frame keyed by (src_norm, dst_norm) to the norm map on
+    both endpoints, adding src_id/src_surface and dst_id/dst_surface."""
+    def end(e: str) -> DataFrame:
+        return cmap.select(
+            F.col("norm").alias(f"{e}_norm"),
+            F.col("canonical_id").alias(f"{e}_id"),
+            F.col("canonical_surface").alias(f"{e}_surface"),
+        )
+
+    return agg.join(end("src"), "src_norm").join(end("dst"), "dst_norm")
+
+
+def canonical_graph(
+    surfaces: DataFrame, edge_obs: DataFrame, vertex_obs: DataFrame
 ) -> tuple[DataFrame, DataFrame]:
-    """Returns (vertices, edges) DataFrames from a triple table.
+    """The one graph build, for batch triples and the streaming delta
+    log alike: (vertices, edges) from the mention surfaces (the norm
+    map's input) and weighted observations shaped as ``observations``
+    returns them — weight 1 per batch row, pre-counted per delta row,
+    so the sums serve both. Edge rows must be at sentence grain or
+    finer, which keeps n_sents an exact distinct count.
 
-    Cache ownership: the internal mention map is cached (see below).
-    With ``eager=None`` (default) the returned frames keep a live
-    dependency on that cache and the CALLER owns cleanup — repeated
-    invocations in a long-lived session otherwise accumulate
-    InMemoryRelations until storage eviction. Pass ``eager`` as
-    "edges", "vertices", or "both" to have the named part(s)
-    materialized via eager localCheckpoint (safe here: the checkpointed
-    frame is terminal output, so its bogus RDD stats can't flip any
-    later join side) and the mention-map cache released before
-    returning; the part NOT named stays lazy over an unpersisted cache
-    and must not be consumed."""
-    # Plain equi-joins on surface: the mention map is one row per
-    # DISTINCT mention — 10^8-10^9 at corpus scale (SCALE.md), far past
-    # any broadcastable size, so no broadcast hint here. AQE promotes
-    # the join to broadcast at runtime when the map is genuinely small
-    # (test/bench scale) and splits skewed hot surfaces otherwise.
-    # Materialized eagerly (cache + count): the src and dst joins are
-    # two consumers inside one action — without this the whole
-    # mention-distinct subtree executes once per consumer, and the
-    # materialized InMemoryRelation hands the planner exact stats for
-    # the broadcast-vs-shuffle decision.
-    mmap = mentions_map if mentions_map is not None else canonicalize(triples)
-    mmap = mmap.select("surface", "canonical_id", "canonical_surface").cache()
-    mmap.count()
-
-    linked = link_canonical(triples, mmap)
-
-    edges = (
-        linked.groupBy("src_id", "src_surface", F.col("ent2_tag").alias("pred"), "dst_id", "dst_surface")
-        .agg(
-            F.count(F.lit(1)).alias("n_obs"),
+    Aggregate first, link after: edges group by (norm(ent1), pred,
+    norm(ent2)) and vertices by norm before any join — a canonical
+    entity IS a norm group (``linking.norm_map``) — so the joins to
+    the map see distinct pairs, not raw observations, and a hub
+    entity's fan-in is its distinct neighbours. Plain equi-joins, no
+    broadcast hint: the map is one row per norm, far past broadcast
+    size at corpus scale; AQE promotes a genuinely small side at
+    runtime and splits skewed keys otherwise."""
+    cmap = norm_map(surfaces)
+    edges = link_norms(
+        edge_obs.groupBy(
+            normalize_surface(F.col("ent1")).alias("src_norm"),
+            "pred",
+            normalize_surface(F.col("ent2")).alias("dst_norm"),
+        ).agg(
+            F.sum("n_obs").alias("n_obs"),
             F.countDistinct("sent_id").alias("n_sents"),
             F.min("sent_id").alias("first_sent_id"),
             F.max("sent_id").alias("last_sent_id"),
-        )
-    )
-
-    # one scan of linked, two mentions per row (the single-scan trick of
-    # linking.extract_mentions); collect_set drops the dst's null etype
-    v_src = F.struct(
-        F.col("src_id").alias("canonical_id"),
-        F.col("src_surface").alias("canonical_surface"),
-        F.col("ent1_tag").alias("etype"),
-    )
-    v_dst = F.struct(
-        F.col("dst_id").alias("canonical_id"),
-        F.col("dst_surface").alias("canonical_surface"),
-        F.lit(None).cast("string").alias("etype"),
+        ),
+        cmap,
+    ).select(
+        "src_id", "src_surface", "pred", "dst_id", "dst_surface",
+        "n_obs", "n_sents", "first_sent_id", "last_sent_id",
     )
     vertices = (
-        linked.select(F.inline(F.array(v_src, v_dst)))
-        .groupBy("canonical_id", "canonical_surface")
+        vertex_obs.groupBy(normalize_surface(F.col("surface")).alias("norm"))
         .agg(
             F.collect_set("etype").alias("types"),
-            F.count(F.lit(1)).alias("n_mentions"),
+            F.sum("cnt").alias("n_mentions"),
         )
+        .join(cmap, "norm")
+        .select("canonical_id", "canonical_surface", "types", "n_mentions")
     )
+    return vertices, edges
+
+
+def materialize_graph(
+    triples: DataFrame, eager: str | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """Returns (vertices, edges) DataFrames from a triple table:
+    ``canonical_graph`` over every mention of ``triples`` and its
+    relation rows.
+
+    No internal cache: both frames are plain plans over ``triples``,
+    which the caller caches when it is expensive (each frame scans it
+    for the map and for its observations). Pass ``eager`` as "edges",
+    "vertices", or "both" to have the named part(s) materialized via
+    eager localCheckpoint (safe here: the checkpointed frame is
+    terminal output, so its bogus RDD stats can't flip any later join
+    side); a part not named stays lazy and recomputes from
+    ``triples`` when consumed."""
+    surfaces = triples.select(F.explode(F.array("ent1", "ent2")).alias("surface"))
+    vertices, edges = canonical_graph(surfaces, *observations(triples))
     if eager in ("edges", "both"):
         edges = edges.localCheckpoint()
     if eager in ("vertices", "both"):
         vertices = vertices.localCheckpoint()
-    if eager is not None:
-        mmap.unpersist()
     return vertices, edges

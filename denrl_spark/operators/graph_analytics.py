@@ -245,12 +245,12 @@ def components(edges: DataFrame, src: str = "src_surface",
     """Connected components of the undirected canonical graph:
     (surface, component) with component = min surface of the component
     (deterministic). Delegates to linking.connected_components — the
-    same O(diameter) salted min-label propagation the entity-linking
-    stage uses, with its strict convergence guard. max_iter bounds the
-    graph DIAMETER, not size: linking's star graphs converge in 2, but
-    a general KG can carry long containment chains, so the default
-    here is 40 (raise for pathological path graphs — the guard raises
-    loudly rather than returning partially-merged components)."""
+    O(diameter) min-label propagation with its strict convergence
+    guard. max_iter bounds the graph DIAMETER, not size: star graphs
+    converge in 2, but a general KG can carry long containment chains,
+    so the default here is 40 (raise for pathological path graphs —
+    the guard raises loudly rather than returning partially-merged
+    components)."""
     from denrl_spark.operators.linking import connected_components
 
     und = undirected_edges(edges, src, dst).select(

@@ -2,27 +2,26 @@
 counterpart — surface-form clustering is implicit in the reference's
 exact-string triple matching, run_jointmodel.py:975,981).
 
-Pipeline: normalize mention surfaces -> build similarity edges
-(normalized-form equality by default, plus caller-supplied alias edges)
--> iterative connected components over DataFrames (GraphFrames-style
-label propagation: each node adopts the min component id among itself
-and its neighbors until fixpoint) -> canonical node id = min member id.
+Canonicalization: mention surfaces are grouped by normalized form
+(lower-case, punctuation -> space, collapsed whitespace) and every
+member of a group resolves to the group's min surface; the canonical
+id is that surface's xxhash64. ``norm_map`` is the one place the rule
+is written — the batch graph build, the streaming compaction views and
+the per-surface ``canonicalize`` map all join to it.
 
 Scale notes:
-- node/component state is hash-partitioned on ``node_id`` each round so
-  the self-join co-locates; AQE skew-join splitting handles hot mentions
-  (celebrity entities), and ``salt_buckets`` pre-salts the mention->
-  normalized-form grouping, the classic power-law hotspot.
-- iterations are bounded (components of similarity graphs are shallow;
-  min-label propagation converges in O(diameter) rounds) and run through
-  ``graph_analytics.iterate``, which checkpoints every round.
+- the norm map is one map-side-combined aggregation: hot surfaces
+  collapse before the shuffle, and a norm group is a set of surface
+  variants (casing / punctuation), so its fan-in is bounded.
+- ``connected_components`` (min-label propagation over DataFrames,
+  through ``graph_analytics.iterate``, which checkpoints every round)
+  serves the graph-family queries: KG components and near-duplicate
+  clusters.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-
-from denrl_spark.operators.tagging import stable_id  # reuse content-hash ids
 
 
 def normalize_surface(col: F.Column) -> F.Column:
@@ -34,13 +33,12 @@ def normalize_surface(col: F.Column) -> F.Column:
 
 
 def extract_mentions(triples: DataFrame) -> DataFrame:
-    """Triples -> distinct mention table (surface, norm, mention_id).
+    """Triples -> distinct non-empty mention table (surface, norm).
 
     Single scan: explode([ent1, ent2]) instead of a two-branch union —
-    the union shape reads the triple table twice (two scans of a
-    100 TB-scale input; two passes over the cache at bench scale). The
-    distinct's partial aggregation still collapses hot surfaces
-    map-side before the shuffle."""
+    the union shape reads the triple table twice. The distinct's
+    partial aggregation still collapses hot surfaces map-side before
+    the shuffle."""
     surfaces = (
         triples.select(
             F.explode(F.array(F.col("ent1"), F.col("ent2"))).alias("surface")
@@ -48,25 +46,21 @@ def extract_mentions(triples: DataFrame) -> DataFrame:
         .where(F.col("surface") != "")
         .distinct()
     )
-    return surfaces.withColumn("norm", normalize_surface(F.col("surface"))).withColumn(
-        "mention_id", F.xxhash64("surface")
-    )
+    return surfaces.withColumn("norm", normalize_surface(F.col("surface")))
 
 
-def mention_edges(mentions: DataFrame, salt_buckets: int = 8) -> DataFrame:
-    """Similarity edges: mentions sharing a normalized form. The
-    norm-grouping is salted: group (norm, salt) first (map-side combine
-    shrinks hot norms), then link every member to the per-norm min id —
-    a star, which is enough for connectivity."""
-    salted = mentions.withColumn(
-        "salt", F.pmod(F.xxhash64("mention_id"), F.lit(salt_buckets))
-    )
-    local_min = salted.groupBy("norm", "salt").agg(F.min("mention_id").alias("local_min"))
-    anchor = local_min.groupBy("norm").agg(F.min("local_min").alias("anchor"))
+def norm_map(surfaces: DataFrame) -> DataFrame:
+    """Any frame with a ``surface`` column (duplicates allowed) -> one
+    row per normalized form of its non-empty surfaces: (norm,
+    canonical_id, canonical_surface), canonical surface = min surface
+    of the group. The empty surface is filtered RAW, before
+    normalizing: punctuation-only surfaces (``!!``) are real mentions
+    whose norm is ``""``."""
     return (
-        mentions.join(anchor, "norm")
-        .where(F.col("mention_id") != F.col("anchor"))
-        .select(F.col("mention_id").alias("src"), F.col("anchor").alias("dst"))
+        surfaces.where(F.col("surface") != "")
+        .groupBy(normalize_surface(F.col("surface")).alias("norm"))
+        .agg(F.min("surface").alias("canonical_surface"))
+        .withColumn("canonical_id", F.xxhash64("canonical_surface"))
     )
 
 
@@ -76,11 +70,11 @@ def connected_components(
     """(node_id) x (src, dst) -> (node_id, component) via min-label
     propagation. Deterministic; component = min node_id in component.
 
-    Converges in O(diameter) rounds — surface-form graphs are stars
-    (diameter <= 2 via the per-norm anchor in mention_edges), so
-    ``max_iter`` is generous headroom for alias-edge chains. If the
-    fixpoint is NOT reached within max_iter, ``strict`` raises rather
-    than silently returning partially-merged components."""
+    Converges in O(diameter) rounds — the callers' graphs (LSH bucket
+    stars, near-duplicate cliques, KG components) are shallow, and
+    ``max_iter`` bounds the diameter, not the size. If the fixpoint is
+    NOT reached within max_iter, ``strict`` raises rather than silently
+    returning partially-merged components."""
     from denrl_spark.operators.graph_analytics import iterate, no_change
 
     n_part = int(nodes.sparkSession.conf.get("spark.sql.shuffle.partitions"))
@@ -108,72 +102,11 @@ def connected_components(
                    name="connected_components", strict=strict)
 
 
-def canonicalize_surfaces(mentions: DataFrame) -> DataFrame:
-    """Surface-level canonical map (the no-alias-edges star path):
-    canonical surface = min(surface) over the normalized-form group.
-
-    Window formulation: one shuffle over the distinct-mention table, no
-    self-join and NO internal cache (the previous groupBy+join shape
-    cached the mention table and leaked the InMemoryRelation to the
-    caller, ADVICE r2). Norm groups are surface-form variants (casing /
-    punctuation), bounded fan-in, so the window partition cannot be a
-    power-law hotspot the way raw mention counts can. Input: any frame
-    with a ``surface`` column (``norm`` derived if absent) — callers
-    include batch canonicalize() and the streaming graph-delta
-    compaction view (streaming/ingest.py:graph_edges_view)."""
-    from pyspark.sql import Window
-
-    if "norm" not in mentions.columns:
-        mentions = mentions.withColumn("norm", normalize_surface(F.col("surface")))
-    w = Window.partitionBy("norm")
-    return (
-        mentions.withColumn("canonical_surface", F.min("surface").over(w))
-        .withColumn("canonical_id", F.xxhash64("canonical_surface"))
-        .select("surface", "norm", "canonical_id", "canonical_surface")
-    )
-
-
-def canonicalize(
-    triples: DataFrame,
-    salt_buckets: int = 8,
-    alias_edges: DataFrame | None = None,
-) -> DataFrame:
-    """Mentions -> (surface, norm, canonical_id, canonical_surface).
-
-    Without ``alias_edges`` the similarity graph is, BY CONSTRUCTION,
-    a disjoint union of per-norm stars (mention_edges links members to
-    the per-norm anchor), so its connected components are exactly the
-    norm groups — the iterative min-label propagation is a no-op and is
-    skipped: canonical surface = min(surface) per norm, ONE map-side-
-    combined aggregation + one join instead of 2+ CC rounds each with a
-    localCheckpoint barrier and a convergence count. With caller-
-    supplied alias edges (cross-norm links) the general fixpoint runs;
-    that path caches the mention table internally (it feeds the CC
-    node-set, the edge build, and the final label join) and the cache
-    lives as long as the returned frame — callers running many
-    alias-edge canonicalizations per session own cleanup. The default
-    path is cache-free.
-    """
+def canonicalize(triples: DataFrame) -> DataFrame:
+    """Mentions -> (surface, norm, canonical_id, canonical_surface):
+    the per-surface resolution table, one row per distinct non-empty
+    mention, joined to ``norm_map``."""
     mentions = extract_mentions(triples)
-    if alias_edges is None:
-        return canonicalize_surfaces(mentions)
-
-    mentions = mentions.cache()
-    edges = mention_edges(mentions, salt_buckets=salt_buckets).unionByName(
-        alias_edges.select("src", "dst")
-    )
-    comp = connected_components(
-        mentions.select(F.col("mention_id").alias("node_id")), edges
-    )
-    labeled = mentions.join(
-        comp, mentions.mention_id == comp.node_id
-    ).select("surface", "norm", "mention_id", "component")
-    canon_surface = (
-        labeled.groupBy("component")
-        .agg(F.min("surface").alias("canonical_surface"))
-    )
-    return (
-        labeled.join(canon_surface, "component")
-        .withColumn("canonical_id", F.xxhash64("canonical_surface"))
-        .select("surface", "norm", "canonical_id", "canonical_surface")
+    return mentions.join(norm_map(mentions), "norm").select(
+        "surface", "norm", "canonical_id", "canonical_surface"
     )

@@ -89,21 +89,23 @@ def kb_values_sql() -> str:
     return f"(VALUES {rows}) AS kb(subj, pred, obj)"
 
 
-# Scan-split-count probe cache, keyed (path, parallelism). The probe
-# (df.rdd.getNumPartitions()) builds the Python RDD conversion plan on
-# the driver — measured ~0.11s PER CALL — for an answer that is pure
-# file-layout metadata, static for the life of a session. Caching the
-# probe (NOT any data or result) removes that driver-side stall from
-# every re-invocation (guide §5: the driver should do almost no work).
-_SCAN_SPLITS_CACHE: dict[tuple[str, int], int] = {}
+# Scan-split-count probe cache, keyed (input files, parallelism). The
+# probe (df.rdd.getNumPartitions()) builds the Python RDD conversion
+# plan on the driver — measured ~0.11s PER CALL — for an answer that is
+# pure file-layout metadata. Caching the probe (NOT any data or result)
+# removes that driver-side stall from every re-invocation (guide §5:
+# the driver should do almost no work). The key is the scan's file
+# list, which the driver has already listed, so a table rewritten in
+# place gets a fresh probe.
+_SCAN_SPLITS_CACHE: dict[tuple[tuple[str, ...], int], int] = {}
 
 
-def lift_to_parallelism(d: DataFrame, key: str) -> DataFrame:
+def lift_to_parallelism(d: DataFrame) -> DataFrame:
     """Repartition a scan to cluster parallelism when it arrives as
-    fewer splits than cores; split count probed once per (key, cores)."""
-    spark = d.sparkSession
-    p = spark.sparkContext.defaultParallelism
-    ck = (key, p)
+    fewer splits than cores; split count probed once per (file set,
+    cores)."""
+    p = d.sparkSession.sparkContext.defaultParallelism
+    ck = (tuple(d.inputFiles()), p)
     n = _SCAN_SPLITS_CACHE.get(ck)
     if n is None:
         n = _SCAN_SPLITS_CACHE[ck] = d.rdd.getNumPartitions()
@@ -118,8 +120,7 @@ def load_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet file — without this every downstream join/agg runs on one
     task; measured 4.9s -> 0.6s on patterns_between at sf0.1/32c). At
     production scale the table has >= cores splits and this is a no-op."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return lift_to_parallelism(d, f"{sf_dir}/documents.parquet")
+    return lift_to_parallelism(spark.read.parquet(f"{sf_dir}/documents.parquet"))
 
 
 TOOL_NAMES = ("search", "code_exec", "browse")
@@ -472,28 +473,29 @@ def pred_triples_numeric_by_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
 def build_graph(trips: DataFrame, eager: str) -> tuple[DataFrame, DataFrame]:
     """The one graph build of the driver queries: ``materialize_graph``
     over a lazily-cached triple table, returning (vertices, edges) with
-    the ``eager`` part(s) materialized and every internal cache
-    released, so repeated calls in a long session do not accumulate
-    cached relations.
+    the ``eager`` part(s) materialized and the triple cache released —
+    also when the build fails — so repeated calls in a long session do
+    not accumulate cached relations.
 
-    Cache discipline: the cache is populated by materialize_graph's
-    own mention-map job — a single subtree, so concurrent consumers
-    cannot each re-run the extraction — and the next job reads it
-    warm. It is a cache, not a localCheckpoint: a
-    checkpointed RDD scan reports bogus size estimates that once made
-    the planner broadcast the big TRIPLES side of the canonical-map
-    join, while the InMemoryRelation gives exact stats."""
+    The cache is there because the build reads the triples three times
+    (mention map, edge and vertex observations); the first job that
+    scans them fills it and later ones read it warm. It is a cache, not a
+    localCheckpoint: a checkpointed RDD scan reports bogus size
+    estimates to the planner, while the InMemoryRelation gives exact
+    stats. A part not named in ``eager`` stays lazy and recomputes the
+    triples when consumed."""
     from denrl_spark.operators.graph import materialize_graph
 
     trips = trips.cache()
-    vertices, edges = materialize_graph(trips, eager=eager)
-    trips.unpersist()
-    return vertices, edges
+    try:
+        return materialize_graph(trips, eager=eager)
+    finally:
+        trips.unpersist()
 
 
 def _canonical_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Raw canonical edge table over the doc-keyed gold triples (stage
-    6: linking.canonicalize + graph.materialize_graph) — the shared
+    6: graph.materialize_graph) — the shared
     input of edges_by_doc / edge_history / the analytics queries."""
     trips = gold_triples_by_doc(spark, sf_dir).withColumnRenamed("doc_id", "sent_id")
     return build_graph(trips, "edges")[1]
@@ -657,9 +659,7 @@ def tool_edges_sql(rel: str = "documents") -> str:
 def _canon_cte() -> str:
     """linking.canonicalize in SQL: mentions grouped by normalized form
     (lower, punctuation->space, collapse space), canonical surface = min
-    surface of the component. Components of the norm-equality graph are
-    exactly the norm groups (mention_edges builds a star per norm), so
-    the window-min reproduces min-label propagation's fixpoint."""
+    surface of the norm group (linking.norm_map)."""
     return """
         mentions AS (
           SELECT DISTINCT surface FROM (

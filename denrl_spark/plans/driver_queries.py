@@ -70,11 +70,11 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     costs more than the single task (measured rel_agg_stats 0.4s ->
     0.7s). Same rationale as docs_kg.load_documents; a no-op at
     production scale where every table has >= cores splits. The split
-    count probe is cached per (path, cores) — see
+    count probe is cached per (file set, cores) — see
     docs_kg.lift_to_parallelism (r6: ~0.11s driver stall per probe)."""
     d = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if name in ("documents", "embeddings"):
-        d = docs_kg.lift_to_parallelism(d, f"{sf_dir}/{name}.parquet")
+        d = docs_kg.lift_to_parallelism(d)
     return d
 
 

@@ -95,9 +95,7 @@ def run_kg_pipeline(
     metrics = triple_metrics(pred, gold)
 
     # eager="both": both parts are consumed below (counts + optional
-    # writes), and the internal mention-map cache is released (the
-    # eager=None default assigns cleanup to the caller, who has no
-    # handle to it)
+    # writes), so each is computed once
     vertices, edges = materialize_graph(pred, eager="both")
     n_vertices, n_edges = vertices.count(), edges.count()
 

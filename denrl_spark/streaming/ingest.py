@@ -16,10 +16,11 @@ table (Iceberg/Kafka/files) and maintains the KG incrementally.
   the batch lag+cumsum sessionization).
 - ``dedup_stream`` / ``dedup_stream_near``: exact and MinHash-signature
   near-duplicate suppression with watermark-bounded state.
-- ``stream_graph_deltas`` + ``graph_edges_view`` / ``graph_vertices_view``
-  + ``compact_graph_deltas``: incremental KG EDGE/VERTEX maintenance as
-  an exactly-once per-batch delta log with compaction views proven equal
-  to the batch graph, plus a write-then-commit log compactor.
+- ``stream_graph_deltas`` + ``graph_views`` (``graph_edges_view`` /
+  ``graph_vertices_view``) + ``compact_graph_deltas``: incremental KG
+  EDGE/VERTEX maintenance as an exactly-once per-batch delta log,
+  compacted by the batch graph build itself (so the views equal the
+  batch graph), plus a write-then-commit log compactor.
 
 Tests drive these with the memory sink + processAllAvailable (synchronous
 micro-batch draining), per the Structured Streaming testing idiom.
@@ -227,7 +228,7 @@ def stream_graph_deltas(
     stream: DataFrame, sink_dir: str, checkpoint_dir: str, kb=None
 ):
     """Incremental KG EDGE maintenance, log-structured: each micro-batch
-    extracts triples and writes two per-batch delta tables, each with
+    extracts triples and writes per-batch delta tables, each with
     idempotent overwrite by batch id (a replayed batch rewrites its own
     directory — exactly-once effect; the parquet-sandbox analog of an
     Iceberg MERGE INTO):
@@ -237,13 +238,18 @@ def stream_graph_deltas(
       distinct-sentence counts even when canonicalization later merges
       surfaces across raw pairs (a canonical-group sum of pre-counted
       distincts would double-count such sentences);
+    - ``vertices/batch_id=N``: per-(surface, etype) mention counts;
     - ``mentions/batch_id=N``: distinct surfaces seen in ALL triples
       (entity-tag co-mentions included) — the canonical map depends on
       every mention, not just relation rows.
 
-    ``graph_edges_view`` compacts the log into the current edge table
-    and equals the batch ``materialize_graph`` edges exactly
+    Edge and vertex deltas are ``graph.observations`` pre-counted, so
+    they pass the batch build's endpoint filter and
+    ``graph_views`` compacts the log with the batch build itself:
+    the views equal the batch ``materialize_graph`` exactly
     (test-asserted)."""
+    from denrl_spark.operators.graph import observations
+    from denrl_spark.operators.linking import extract_mentions
     from denrl_spark.operators.spans import assemble_triples
     from denrl_spark.operators.tagging import build_instances
     from denrl_spark.sources.kb import KB
@@ -253,68 +259,48 @@ def stream_graph_deltas(
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        # eager cache: the delta writes below are separate actions
-        # over the same extraction — uncached, each re-runs the full
-        # Arrow instance-building + triple assembly (4x the hot-path
-        # cost per micro-batch); released before returning
+        # cached: the delta writes below are separate actions over the
+        # same extraction — uncached, each re-runs the full Arrow
+        # instance-building + triple assembly. The first write fills
+        # both caches; they are released even when a write fails.
         ins = build_instances(batch_df, kb).cache()
         trips = assemble_triples(ins).cache()
-        trips.count()
-        # sentence timestamp map (``sents/batch_id=N``): one row per
-        # sentence with its turn's epoch-second ts — the operand the
-        # windowed compaction view needs (edge deltas are sentence
-        # grain, so joining this map recovers each observation's
-        # window). Distinct by construction: a sentence lives in one
-        # turn.
-        sents = (
-            ins.select("conv_id", "turn_idx", "sent_id")
-            .distinct()
-            .join(
-                batch_df.select(
-                    "conv_id", "turn_idx",
-                    F.unix_timestamp("ts").cast("bigint").alias("ts"),
-                ),
-                ["conv_id", "turn_idx"],
+        try:
+            edge_obs, vertex_obs = observations(trips)
+            edges = edge_obs.groupBy("ent1", "pred", "ent2", "sent_id").agg(
+                F.sum("n_obs").alias("n_obs")
             )
-            .select("sent_id", "ts")
-        )
-        rel = trips.where(F.col("ent2_tag").contains("/"))
-        edges = rel.groupBy(
-            "ent1", F.col("ent2_tag").alias("pred"), "ent2", "sent_id"
-        ).agg(F.count(F.lit(1)).alias("n_obs"))
-        mentions = (
-            trips.select(F.explode(F.array("ent1", "ent2")).alias("surface"))
-            .where(F.col("surface") != "")
-            .distinct()
-        )
-        # vertex grain: relation-triple endpoints with their observed
-        # type (src carries ent1_tag, dst contributes type-less rows —
-        # the same convention materialize_graph aggregates)
-        verts = (
-            rel.select(F.col("ent1").alias("surface"), F.col("ent1_tag").alias("etype"))
-            .unionByName(
-                rel.select(
-                    F.col("ent2").alias("surface"),
-                    F.lit(None).cast("string").alias("etype"),
+            verts = vertex_obs.groupBy("surface", "etype").agg(
+                F.sum("cnt").alias("cnt")
+            )
+            # sentence timestamp map (``sents/batch_id=N``): one row per
+            # sentence with its turn's epoch-second ts — the operand the
+            # windowed compaction view needs (edge deltas are sentence
+            # grain, so joining this map recovers each observation's
+            # window). Distinct by construction: a sentence lives in one
+            # turn.
+            sents = (
+                ins.select("conv_id", "turn_idx", "sent_id")
+                .distinct()
+                .join(
+                    batch_df.select(
+                        "conv_id", "turn_idx",
+                        F.unix_timestamp("ts").cast("bigint").alias("ts"),
+                    ),
+                    ["conv_id", "turn_idx"],
                 )
+                .select("sent_id", "ts")
             )
-            .groupBy("surface", "etype")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-        edges.write.mode("overwrite").parquet(
-            f"{sink_dir}/edges/batch_id={batch_id}"
-        )
-        verts.write.mode("overwrite").parquet(
-            f"{sink_dir}/vertices/batch_id={batch_id}"
-        )
-        mentions.write.mode("overwrite").parquet(
-            f"{sink_dir}/mentions/batch_id={batch_id}"
-        )
-        sents.write.mode("overwrite").parquet(
-            f"{sink_dir}/sents/batch_id={batch_id}"
-        )
-        trips.unpersist()
-        ins.unpersist()
+            for part, df in (
+                ("edges", edges),
+                ("vertices", verts),
+                ("mentions", extract_mentions(trips).select("surface")),
+                ("sents", sents),
+            ):
+                df.write.mode("overwrite").parquet(f"{sink_dir}/{part}/batch_id={batch_id}")
+        finally:
+            trips.unpersist()
+            ins.unpersist()
 
     return (
         stream.writeStream.foreachBatch(process)
@@ -324,86 +310,40 @@ def stream_graph_deltas(
     )
 
 
-def _delta_canonical_map(spark: SparkSession, sink_dir: str) -> DataFrame:
-    """Cached canonical map over the accumulated mention deltas (the
-    same star-path map the batch graph uses). Callers own the cache:
-    materialize consumers, then unpersist."""
-    from denrl_spark.operators.linking import canonicalize_surfaces
+def _delta_graph(spark: SparkSession, sink_dir: str) -> tuple[DataFrame, DataFrame]:
+    """Lazy (vertices, edges) of ``graph.canonical_graph`` — the batch
+    build — over the accumulated mention, edge and vertex deltas."""
+    from denrl_spark.operators.graph import canonical_graph
 
-    mentions = spark.read.parquet(f"{sink_dir}/mentions").select("surface").distinct()
-    cmap = (
-        canonicalize_surfaces(mentions)
-        .select("surface", "canonical_id", "canonical_surface")
-        .cache()
-    )
-    cmap.count()
-    return cmap
-
-
-def _edges_over_map(spark: SparkSession, sink_dir: str, cmap: DataFrame) -> DataFrame:
-    edges = spark.read.parquet(f"{sink_dir}/edges")
-    src = (
-        cmap.withColumnRenamed("surface", "ent1")
-        .withColumnRenamed("canonical_id", "src_id")
-        .withColumnRenamed("canonical_surface", "src_surface")
-    )
-    dst = (
-        cmap.withColumnRenamed("surface", "ent2")
-        .withColumnRenamed("canonical_id", "dst_id")
-        .withColumnRenamed("canonical_surface", "dst_surface")
-    )
-    return (
-        edges.join(src, "ent1")
-        .join(dst, "ent2")
-        .groupBy("src_id", "src_surface", "pred", "dst_id", "dst_surface")
-        .agg(
-            F.sum("n_obs").alias("n_obs"),
-            F.countDistinct("sent_id").alias("n_sents"),
-            F.min("sent_id").alias("first_sent_id"),
-            F.max("sent_id").alias("last_sent_id"),
-        )
-        .localCheckpoint()
+    return canonical_graph(
+        spark.read.parquet(f"{sink_dir}/mentions"),
+        spark.read.parquet(f"{sink_dir}/edges"),
+        spark.read.parquet(f"{sink_dir}/vertices"),
     )
 
 
-def _vertices_over_map(spark: SparkSession, sink_dir: str, cmap: DataFrame) -> DataFrame:
-    verts = spark.read.parquet(f"{sink_dir}/vertices")
-    return (
-        verts.join(cmap, "surface")
-        .groupBy("canonical_id", "canonical_surface")
-        .agg(
-            F.collect_set("etype").alias("types"),
-            F.sum("cnt").alias("n_mentions"),
-        )
-        .localCheckpoint()
-    )
+def graph_views(spark: SparkSession, sink_dir: str) -> tuple[DataFrame, DataFrame]:
+    """(vertices, edges) compacted from the delta log written by
+    ``stream_graph_deltas`` with the batch graph build. Canonicalization
+    happens at READ time from the full mention set, so a late-arriving
+    surface variant retroactively merges its history, exactly as the
+    batch job over the full corpus would. Output schema and values
+    match ``materialize_graph`` exactly (types compared as sets —
+    collect_set order is nondeterministic in both paths). Returned
+    materialized (localCheckpoint): a snapshot that stays valid while
+    ``compact_graph_deltas`` rewrites the log."""
+    vertices, edges = _delta_graph(spark, sink_dir)
+    return vertices.localCheckpoint(), edges.localCheckpoint()
 
 
 def graph_edges_view(spark: SparkSession, sink_dir: str) -> DataFrame:
-    """Compaction view over the delta log written by
-    ``stream_graph_deltas``: canonicalize the union of all mention
-    deltas (same star-path map the batch graph uses), join the
-    sentence-grain edge deltas through it, aggregate to canonical
-    edges. Output schema and values match ``materialize_graph``'s edge
-    table exactly. Returned eagerly materialized (localCheckpoint) so
-    the internal canonical-map cache is released before returning.
-    Refreshing BOTH views? Use ``graph_views`` — it builds the
-    canonical map once for the pair."""
-    cmap = _delta_canonical_map(spark, sink_dir)
-    out = _edges_over_map(spark, sink_dir, cmap)
-    cmap.unpersist()
-    return out
+    """The edge table of ``graph_views``, built alone."""
+    return _delta_graph(spark, sink_dir)[1].localCheckpoint()
 
 
 def graph_vertices_view(spark: SparkSession, sink_dir: str) -> DataFrame:
-    """Vertices twin of ``graph_edges_view``: canonical vertex table
-    compacted from the delta log, exactly equal to the batch
-    ``materialize_graph`` vertices (types compared as sets —
-    collect_set order is nondeterministic in both paths)."""
-    cmap = _delta_canonical_map(spark, sink_dir)
-    out = _vertices_over_map(spark, sink_dir, cmap)
-    cmap.unpersist()
-    return out
+    """The vertex table of ``graph_views``, built alone."""
+    return _delta_graph(spark, sink_dir)[0].localCheckpoint()
 
 
 def graph_edges_by_window_view(
@@ -416,64 +356,42 @@ def graph_edges_by_window_view(
     maintained incrementally). The edge deltas are SENTENCE grain, so
     joining the per-batch sentence→ts map (``sents/``) recovers each
     observation's window exactly; win_start = ts div W * W in integer
-    epoch seconds. Canonicalization happens at READ time from the full
-    accumulated mention set (same property as the other views: a
-    late-arriving alias surface retroactively merges its history into
-    the canonical edge, exactly as the batch job over the full corpus
-    would). ``window_s`` defaults to the batch twin's EDGE_WINDOW_S so
-    the two surfaces stay diffable with default parameters (review
-    finding: a hard-coded default here silently diverged when the
-    constant changed)."""
+    epoch seconds. Aggregated by norm first, then linked through the
+    same norm map as ``graph_views`` — canonicalized at READ time from
+    the full accumulated mention set. ``window_s`` defaults to the
+    batch twin's EDGE_WINDOW_S so the two surfaces stay diffable with
+    default parameters (review finding: a hard-coded default here
+    silently diverged when the constant changed)."""
+    from denrl_spark.operators.graph import link_norms
+    from denrl_spark.operators.linking import norm_map, normalize_surface
+
     if window_s is None:
         from denrl_spark.plans.docs_kg import EDGE_WINDOW_S
 
         window_s = EDGE_WINDOW_S
-    cmap = _delta_canonical_map(spark, sink_dir)
     edges = spark.read.parquet(f"{sink_dir}/edges")
     # project BEFORE distinct: the partition discovery adds batch_id,
     # and a (sent_id, ts, batch_id) distinct would keep one row per
     # REDELIVERED batch — the sent_id join below would then fan out and
-    # over-count n_obs (same reason _delta_canonical_map projects to
-    # surface first)
+    # over-count n_obs
     sents = spark.read.parquet(f"{sink_dir}/sents").select(
         "sent_id", "ts"
     ).distinct()
-    src = (
-        cmap.withColumnRenamed("surface", "ent1")
-        .withColumnRenamed("canonical_surface", "src_surface")
-        .select("ent1", "src_surface")
-    )
-    dst = (
-        cmap.withColumnRenamed("surface", "ent2")
-        .withColumnRenamed("canonical_surface", "dst_surface")
-        .select("ent2", "dst_surface")
-    )
-    out = (
+    win = (
         edges.join(sents, "sent_id")
-        .join(src, "ent1")
-        .join(dst, "ent2")
-        .withColumn(
-            "win_start",
-            F.expr(f"CAST(ts div {window_s} * {window_s} AS BIGINT)"),
+        .groupBy(
+            F.expr(f"CAST(ts div {window_s} * {window_s} AS BIGINT)").alias("win_start"),
+            normalize_surface(F.col("ent1")).alias("src_norm"),
+            "pred",
+            normalize_surface(F.col("ent2")).alias("dst_norm"),
         )
-        .groupBy("win_start", "src_surface", "pred", "dst_surface")
         .agg(F.sum("n_obs").alias("n_obs"))
+    )
+    return (
+        link_norms(win, norm_map(spark.read.parquet(f"{sink_dir}/mentions")))
+        .select("win_start", "src_surface", "pred", "dst_surface", "n_obs")
         .localCheckpoint()
     )
-    cmap.unpersist()
-    return out
-
-
-def graph_views(spark: SparkSession, sink_dir: str) -> tuple[DataFrame, DataFrame]:
-    """(vertices, edges) compacted from the delta log over ONE shared
-    canonical map — the refresh entry point for consumers that read
-    both tables (a per-view map build would scan and canonicalize the
-    mention log twice)."""
-    cmap = _delta_canonical_map(spark, sink_dir)
-    vertices = _vertices_over_map(spark, sink_dir, cmap)
-    edges = _edges_over_map(spark, sink_dir, cmap)
-    cmap.unpersist()
-    return vertices, edges
 
 
 def compact_graph_deltas(spark: SparkSession, sink_dir: str) -> int:

@@ -588,3 +588,22 @@ def test_entity_cooccurrence_matches_python(spark):
         a, b = sorted((r["src_surface"], r["dst_surface"]))
         if a != b:
             assert (a, b) in got
+
+
+def test_scan_split_probe_follows_a_rewritten_table(spark, tmp_path):
+    """The cached split-count probe is keyed on the scan's file list: a
+    1-file table is lifted to cluster parallelism, and the same path
+    rewritten as >= defaultParallelism files is not lifted."""
+    p = spark.sparkContext.defaultParallelism
+    path = str(tmp_path / "t.parquet")
+    rows = spark.range(64 * p).withColumnRenamed("id", "doc_id")
+
+    def lifted() -> bool:
+        d = docs_kg.lift_to_parallelism(spark.read.parquet(path))
+        return "Repartition" in d._jdf.queryExecution().logical().toString()
+
+    rows.coalesce(1).write.mode("overwrite").parquet(path)
+    assert lifted()
+    rows.repartition(p).write.mode("overwrite").parquet(path)
+    assert len(spark.read.parquet(path).inputFiles()) >= p
+    assert not lifted()

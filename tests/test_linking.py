@@ -5,11 +5,7 @@ import re
 from pyspark.sql import functions as F
 
 from denrl_spark.operators.graph import materialize_graph
-from denrl_spark.operators.linking import (
-    canonicalize,
-    connected_components,
-    extract_mentions,
-)
+from denrl_spark.operators.linking import canonicalize, connected_components
 from denrl_spark.operators.spans import assemble_triples
 from denrl_spark.operators.tagging import build_instances
 from denrl_spark.sources.corpus import transcripts
@@ -50,42 +46,6 @@ def test_canonicalize_merges_case_and_punct_variants(spark):
     assert len(all_ids) == 3
 
 
-def test_canonicalize_fast_path_matches_cc_fixpoint(spark):
-    """The no-alias star shortcut must equal the general CC path run on
-    the same (star-only) graph."""
-    trips = spark.createDataFrame(
-        [
-            (1, "Alice Johnson", "PERSON", "new york", "/p/lived"),
-            (2, "alice  johnson", "PERSON", "New-York", "/p/lived"),
-            (3, "alice johnson!", "PERSON", "paris", "/p/lived"),
-        ],
-        "sent_id long, ent1 string, ent1_tag string, ent2 string, ent2_tag string",
-    )
-    fast = canonicalize(trips)
-    empty_alias = spark.createDataFrame([], "src long, dst long")
-    general = canonicalize(trips, alias_edges=empty_alias)
-    a = sorted(map(tuple, fast.collect()))
-    b = sorted(map(tuple, general.collect()))
-    assert a == b
-
-
-def test_canonicalize_alias_edges_merge_across_norms(spark):
-    trips = spark.createDataFrame(
-        [
-            (1, "nyc", "LOCATION", "alice", "/p/lived"),
-            (2, "new york", "LOCATION", "bob", "/p/lived"),
-        ],
-        "sent_id long, ent1 string, ent1_tag string, ent2 string, ent2_tag string",
-    )
-    m = {r["surface"]: r["mention_id"] for r in extract_mentions(trips).collect()}
-    alias = spark.createDataFrame(
-        [(m["nyc"], m["new york"])], "src long, dst long"
-    )
-    cmap = {r["surface"]: r["canonical_surface"] for r in canonicalize(trips, alias_edges=alias).collect()}
-    assert cmap["nyc"] == cmap["new york"]
-    assert cmap["alice"] != cmap["nyc"]
-
-
 def test_materialize_graph_end_to_end(spark):
     tr = transcripts(spark, 40, seed=42)
     ins = build_instances(tr, KBD).cache()
@@ -109,11 +69,15 @@ def test_materialize_graph_end_to_end(spark):
 
 
 def test_materialize_graph_vertices_match_oracle(spark):
-    """Vertices == a pure-Python oracle over a hand-built triple frame:
-    a dst-only surface (types == []), a surface seen as src and dst, a
-    norm group merged across casings, and entity-tag (non-``/``) triples
-    that feed the mention map but add no vertex mention. The lazy
-    vertices frame scans the linked rows once: 2 joins, not 4."""
+    """Vertices and edges == a pure-Python oracle over a hand-built
+    triple frame: a dst-only surface (types == []), a surface seen as
+    src and dst, a norm group merged across casings, a null ent1 and a
+    ``""`` ent2 on relation rows (both dropped: no edge, no vertex
+    mention), ``!!`` and ``??`` (non-empty surfaces sharing norm ``""``:
+    one merged vertex and edge), a sentence observing one edge twice
+    (n_obs 2, n_sents 1), and entity-tag (non-``/``) triples that feed
+    the norm map but add no vertex mention. The lazy vertices frame
+    aggregates by norm before its one join to the map."""
     rows = [
         (1, "Alice", "PER", "Acme", "/per/works_at"),
         (2, "Bob", "PER", "Alice", "/per/knows"),
@@ -121,6 +85,12 @@ def test_materialize_graph_vertices_match_oracle(spark):
         (4, "Alice", "PER", "ACME", "ORG"),
         (5, "Zed", "PER", "Zed", "PER"),
         (6, "Bob", "PER", "Acme", "/per/works_at"),
+        (7, None, "PER", "Paris", "/per/lived"),
+        (8, "Bob", "PER", "", "/per/lived"),
+        (9, "!!", "X", "??", "/x/y"),
+        (10, "??", "Y", "!!", "/x/y"),
+        (11, "Bob", "PER", "paris", "/per/lived"),
+        (11, "bob", "PER", "Paris", "/per/lived"),
     ]
     trips = spark.createDataFrame(
         rows, "sent_id bigint, ent1 string, ent1_tag string, ent2 string, ent2_tag string"
@@ -129,32 +99,48 @@ def test_materialize_graph_vertices_match_oracle(spark):
     def norm(s):
         return " ".join(re.sub(r"[^a-z0-9]+", " ", s.lower()).split())
 
-    surfaces = {s for r in rows for s in (r[1], r[3])}
+    surfaces = {s for r in rows for s in (r[1], r[3]) if s}
     canon = {s: min(t for t in surfaces if norm(t) == norm(s)) for s in surfaces}
-    exp = {}
-    for _, e1, t1, e2, t2 in rows:
-        if "/" not in t2:
+    exp_v, exp_e = {}, {}
+    for sent, e1, t1, e2, t2 in rows:
+        if "/" not in t2 or not e1 or not e2:
             continue
         for surface, etype in ((e1, t1), (e2, None)):
-            types, n = exp.get(canon[surface], (set(), 0))
-            exp[canon[surface]] = (types | ({etype} - {None}), n + 1)
-    exp = {c: (sorted(types), n) for c, (types, n) in exp.items()}
-    assert exp["Paris"] == ([], 1) and exp["Alice"] == (["PER"], 2)
-    assert exp["ACME"] == (["ORG"], 3) and "Zed" not in exp
+            types, n = exp_v.get(canon[surface], (set(), 0))
+            exp_v[canon[surface]] = (types | ({etype} - {None}), n + 1)
+        exp_e.setdefault((canon[e1], t2, canon[e2]), []).append(sent)
+    exp_v = {c: (sorted(types), n) for c, (types, n) in exp_v.items()}
+    exp_e = {k: (len(s), len(set(s)), min(s), max(s)) for k, s in exp_e.items()}
+    assert exp_v["Paris"] == ([], 3) and exp_v["Alice"] == (["PER"], 2)
+    assert exp_v["ACME"] == (["ORG"], 3) and exp_v["Bob"] == (["PER"], 4)
+    assert exp_v["!!"] == (["X", "Y"], 4) and "Zed" not in exp_v
+    assert exp_e[("Bob", "/per/lived", "Paris")] == (2, 1, 11, 11)
+    assert exp_e[("!!", "/x/y", "!!")] == (2, 2, 9, 10)
 
-    vertices, _ = materialize_graph(trips)
+    vertices, edges = materialize_graph(trips)
     got = vertices.collect()
     assert {
         r["canonical_surface"]: (sorted(r["types"]), r["n_mentions"]) for r in got
-    } == exp
+    } == exp_v
     assert len({r["canonical_id"] for r in got}) == len(got)
+    got_e = edges.collect()
+    assert {
+        (r["src_surface"], r["pred"], r["dst_surface"]):
+        (r["n_obs"], r["n_sents"], r["first_sent_id"], r["last_sent_id"])
+        for r in got_e
+    } == exp_e
+    ids = {r["canonical_surface"]: r["canonical_id"] for r in got}
+    assert all(
+        (r["src_id"], r["dst_id"]) == (ids[r["src_surface"]], ids[r["dst_surface"]])
+        for r in got_e
+    )
     plan = vertices._jdf.queryExecution().optimizedPlan().toString()
-    assert len(re.findall(r"\bJoin ", plan)) == 2, plan
+    assert len(re.findall(r"\bJoin ", plan)) == 1, plan
 
 
 def test_materialize_graph_no_unbounded_broadcast(spark):
     """With broadcast joins disabled entirely, materialize_graph must
-    still plan and run (shuffle join): the mention map is 10^8+ rows at
+    still plan and run (shuffle join): the norm map is 10^8+ rows at
     corpus scale, so the operator may not REQUIRE a broadcast. The
     explicit-hint-free join lets AQE choose broadcast when small."""
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")

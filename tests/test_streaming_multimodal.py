@@ -325,6 +325,35 @@ def test_stream_graph_deltas_view_equals_batch_graph(spark, transcript_dir, tmp_
     assert all(abs(pr_view[k] - pr_batch[k]) < 1e-12 for k in pr_view)
 
 
+def test_stream_graph_deltas_releases_caches_on_failed_write(
+    spark, transcript_dir, tmp_path
+):
+    """A delta write that fails (its path is an existing regular file)
+    fails the stream AND releases the micro-batch's instance and triple
+    caches: no persistent RDD made during the stream is left. (Ids, not
+    a count: the context cleaner may drop earlier tests' checkpointed
+    RDDs meanwhile.)"""
+    from pyspark.errors import StreamingQueryException
+
+    from denrl_spark.streaming.ingest import stream_graph_deltas
+
+    sink = tmp_path / "graph_deltas"
+    sink.mkdir()
+    (sink / "vertices").write_text("a file where a delta directory goes")
+    before = set(spark.sparkContext._jsc.getPersistentRDDs())
+    q = stream_graph_deltas(
+        stream_transcripts(spark, transcript_dir), str(sink), str(tmp_path / "ck")
+    )
+    try:
+        with pytest.raises(StreamingQueryException):
+            q.processAllAvailable()
+    finally:
+        q.stop()
+    # the edge delta was written from the filled caches before the failure
+    assert (sink / "edges").is_dir()
+    assert set(spark.sparkContext._jsc.getPersistentRDDs()) <= before
+
+
 def test_compact_graph_deltas_crash_recovery(spark, tmp_path):
     """The manifest protocol's two recovery paths: a side dir WITHOUT a
     manifest is an aborted fold (discarded, data re-folded from the
