@@ -25,11 +25,15 @@ from pyspark.sql import DataFrame, functions as F
 
 
 def normalize_surface(col: F.Column) -> F.Column:
-    """Lower-case, strip punctuation, collapse whitespace — JVM-side."""
-    c = F.lower(col)
-    c = F.regexp_replace(c, r"[^\p{L}\p{N}]+", " ")  # punctuation -> space
-    c = F.regexp_replace(c, r"\s+", " ")
-    return F.trim(c)
+    """Lower-case, turn each run of non-letter/digit characters (Java
+    ``\\s`` whitespace included) into one space, trim — JVM-side.
+
+    The result is non-nullable (a null surface gives ``""``; callers
+    drop null and ``""`` surfaces raw, before normalizing): a join on
+    a nullable key makes the optimizer infer an ``isnotnull(norm)``
+    filter that evaluates the regex a second time per row."""
+    c = F.regexp_replace(F.lower(col), r"[^\p{L}\p{N}]+", " ")
+    return F.coalesce(F.trim(c), F.lit(""))
 
 
 def extract_mentions(triples: DataFrame) -> DataFrame:

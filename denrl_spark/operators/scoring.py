@@ -309,15 +309,6 @@ def viterbi_restricted(
     return viterbi_batch(em, transitions, lengths)
 
 
-def emissions_for_instance(
-    tokens: list[str], query_id: int, kb: KB, label_index: dict[str, int], instance_id: int = 0
-) -> np.ndarray:
-    """Deterministic featurizer: KB span alignment -> one-hot-ish
-    emissions (the frozen stand-in for encoder+classifier K1/K3)."""
-    spans = None if instance_id < 0 else find_entity_spans(tokens, kb)
-    return emissions_from_spans(tokens, spans, query_id, kb, label_index, instance_id)
-
-
 def emissions_from_spans(
     tokens: list[str],
     spans: list[tuple[int, int, str, str]] | None,

@@ -301,24 +301,16 @@ def topk_patterns_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sent_doc_map(tr: DataFrame) -> DataFrame:
     """(sent_id, doc_id) mapping for the documents-derived corpus.
 
-    sent_id is the engine's content hash (tagging.stable_id, blake2b) —
-    not expressible in ANSI SQL — so oracle-checkable variants join the
-    triple table back to doc_id through this map. One row per turn; the
-    join is a plain equi-join on sent_id (AQE broadcasts it at test
-    scale; at cluster scale it shuffles like any fact-to-fact join).
-    The pandas_udf is one blake2b per TURN (not per token) — the same
-    per-turn cost the tagging UDF already pays."""
-    import pandas as pd
-    from denrl_spark.operators.tagging import stable_id
-
-    @F.pandas_udf("long")
-    def sid(conv, turn):  # (pd.Series, pd.Series) -> pd.Series; hints
-        # omitted: `from __future__ import annotations` stringifies them,
-        # which the pandas_udf type-hint inference rejects
-        return pd.Series([stable_id(c, int(t)) for c, t in zip(conv, turn)])
+    sent_id is the engine's content hash (``tagging.sent_id_col``,
+    blake2b) — not expressible in ANSI SQL — so oracle-checkable
+    variants join the triple table back to doc_id through this map. One
+    row per turn; the join is a plain equi-join on sent_id (AQE
+    broadcasts it at test scale; at cluster scale it shuffles like any
+    fact-to-fact join)."""
+    from denrl_spark.operators.tagging import sent_id_col
 
     return tr.select(
-        sid("conv_id", "turn_idx").alias("sent_id"),
+        sent_id_col("conv_id", "turn_idx").alias("sent_id"),
         # substring to end-of-string (not a fixed 8): conv indices can
         # exceed 8 digits at scale (see transcripts_from_documents)
         (F.expr("substring(conv_id, 6)").cast("long") * 4 + F.col("turn_idx")).alias(
@@ -561,21 +553,19 @@ def _linked_rel_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     of every provenance-dimension rollup (edges_by_role,
     edges_by_window, and future per-observation groupings — one place
     to evolve the cache/canonical-map discipline, per review). Returns
-    an eagerly-materialized frame (localCheckpoint) with every
-    internal cache released. canonicalize expects the engine's
-    (ent1/ent2) mention columns; doc_id passes through link_canonical
-    untouched."""
+    an eagerly-materialized frame (localCheckpoint) with the triple
+    cache released, also when the build fails. canonicalize expects
+    the engine's (ent1/ent2) mention columns; doc_id passes through
+    link_canonical untouched."""
     from denrl_spark.operators.graph import link_canonical
     from denrl_spark.operators.linking import canonicalize
 
     trips = gold_triples_by_doc(spark, sf_dir).cache()
-    trips.count()
-    mmap = canonicalize(trips).select("surface", "canonical_surface").cache()
-    mmap.count()
-    out = link_canonical(trips, mmap).localCheckpoint()
-    mmap.unpersist()
-    trips.unpersist()
-    return out
+    try:
+        mmap = canonicalize(trips).select("surface", "canonical_surface")
+        return link_canonical(trips, mmap).localCheckpoint()
+    finally:
+        trips.unpersist()
 
 
 def edges_by_role(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1277,14 +1267,14 @@ def alias_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     from denrl_spark.operators.linking import canonicalize
 
     trips = gold_triples_by_doc(spark, sf_dir).cache()
-    trips.count()
-    out = (
-        canonicalize(trips)
-        .select("surface", "canonical_surface")
-        .localCheckpoint()
-    )
-    trips.unpersist()
-    return out
+    try:
+        return (
+            canonicalize(trips)
+            .select("surface", "canonical_surface")
+            .localCheckpoint()
+        )
+    finally:
+        trips.unpersist()
 
 
 def alias_map_sql(rel: str = "documents") -> str:
@@ -1950,35 +1940,35 @@ def entity_type_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from denrl_spark.operators.linking import canonicalize
 
     trips = gold_triples_by_doc(spark, sf_dir).cache()
-    trips.count()
-    mmap = (
-        canonicalize(trips).select("surface", "canonical_surface")
-        .withColumnsRenamed({"surface": "ent1"})
-    )
-    by_type = (
-        trips.join(mmap, "ent1")
-        .groupBy(F.col("canonical_surface").alias("surface"),
-                 F.col("ent1_tag").alias("typ"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    out = (
-        by_type.groupBy("surface")
-        .agg(
-            F.sum("n").cast("bigint").alias("n_mentions"),
-            F.count(F.lit(1)).cast("bigint").alias("n_types"),
-            F.min(
-                F.struct((-F.col("n")).alias("neg"), F.col("typ").alias("t"))
-            ).alias("_top"),
+    try:
+        mmap = (
+            canonicalize(trips).select("surface", "canonical_surface")
+            .withColumnsRenamed({"surface": "ent1"})
         )
-        .select(
-            "surface", "n_mentions", "n_types",
-            F.col("_top.t").alias("top_type"),
-            (-F.col("_top.neg")).cast("bigint").alias("top_n"),
+        by_type = (
+            trips.join(mmap, "ent1")
+            .groupBy(F.col("canonical_surface").alias("surface"),
+                     F.col("ent1_tag").alias("typ"))
+            .agg(F.count(F.lit(1)).alias("n"))
         )
-    )
-    out = out.localCheckpoint()
-    trips.unpersist()
-    return out
+        return (
+            by_type.groupBy("surface")
+            .agg(
+                F.sum("n").cast("bigint").alias("n_mentions"),
+                F.count(F.lit(1)).cast("bigint").alias("n_types"),
+                F.min(
+                    F.struct((-F.col("n")).alias("neg"), F.col("typ").alias("t"))
+                ).alias("_top"),
+            )
+            .select(
+                "surface", "n_mentions", "n_types",
+                F.col("_top.t").alias("top_type"),
+                (-F.col("_top.neg")).cast("bigint").alias("top_n"),
+            )
+            .localCheckpoint()
+        )
+    finally:
+        trips.unpersist()
 
 
 def entity_type_profile_sql(rel: str = "documents") -> str:
@@ -2329,35 +2319,34 @@ def entity_cards(spark: SparkSession, sf_dir: str) -> DataFrame:
     same key, so the joins are co-partitioned; nothing here scans the
     observation log more than the two grains already required
     (mention grain + edge grain)."""
+    from denrl_spark.operators.graph import link_canonical
     from denrl_spark.operators.linking import canonicalize
 
+    # both grains are materialized while the triple cache lives: a lazy
+    # part would re-run the extraction when the card is consumed
     trips = gold_triples_by_doc(spark, sf_dir).cache()
-    trips.count()
-    mmap = canonicalize(trips).select("surface", "canonical_surface").cache()
-    mmap.count()
-
-    prof = (
-        trips.join(mmap.withColumnsRenamed({"surface": "ent1"}), "ent1")
-        .groupBy(F.col("canonical_surface").alias("surface"),
-                 F.col("ent1_tag").alias("typ"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .groupBy("surface")
-        .agg(
-            F.sum("n").cast("bigint").alias("n_mentions"),
-            F.min(F.struct((-F.col("n")).alias("neg"),
-                           F.col("typ").alias("t"))).alias("_top"),
+    try:
+        mmap = canonicalize(trips).select("surface", "canonical_surface")
+        prof = (
+            trips.join(mmap.withColumnsRenamed({"surface": "ent1"}), "ent1")
+            .groupBy(F.col("canonical_surface").alias("surface"),
+                     F.col("ent1_tag").alias("typ"))
+            .agg(F.count(F.lit(1)).alias("n"))
+            .groupBy("surface")
+            .agg(
+                F.sum("n").cast("bigint").alias("n_mentions"),
+                F.min(F.struct((-F.col("n")).alias("neg"),
+                               F.col("typ").alias("t"))).alias("_top"),
+            )
+            .select("surface", "n_mentions", F.col("_top.t").alias("top_type"))
+            .localCheckpoint()
         )
-        .select("surface", "n_mentions", F.col("_top.t").alias("top_type"))
-    )
-
-    from denrl_spark.operators.graph import link_canonical
-
-    rel = link_canonical(trips, mmap).withColumn(
-        "ts",
-        (F.lit(TS_EPOCH_BASE) + F.col("doc_id") * TS_SPACING_S).cast("bigint"),
-    ).localCheckpoint()
-    mmap.unpersist()
-    trips.unpersist()
+        rel = link_canonical(trips, mmap).withColumn(
+            "ts",
+            (F.lit(TS_EPOCH_BASE) + F.col("doc_id") * TS_SPACING_S).cast("bigint"),
+        ).localCheckpoint()
+    finally:
+        trips.unpersist()
 
     edges = rel.groupBy(
         "src_surface", F.col("ent2_tag").alias("pred"), "dst_surface"
@@ -2594,18 +2583,19 @@ def entity_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     from denrl_spark.operators.linking import canonicalize
 
     trips = gold_triples_by_doc(spark, sf_dir).cache()
-    trips.count()
-    am = canonicalize(trips).select("surface", "canonical_surface")
-    ents = (
-        trips.select("doc_id", F.col("ent1").alias("surface"))
-        .unionByName(trips.select("doc_id", F.col("ent2").alias("surface")))
-        .where(F.col("surface") != "")
-        .join(am, "surface")
-        .select("doc_id", F.col("canonical_surface").alias("ent"))
-        .distinct()
-        .localCheckpoint()
-    )
-    trips.unpersist()
+    try:
+        am = canonicalize(trips).select("surface", "canonical_surface")
+        ents = (
+            trips.select("doc_id", F.col("ent1").alias("surface"))
+            .unionByName(trips.select("doc_id", F.col("ent2").alias("surface")))
+            .where(F.col("surface") != "")
+            .join(am, "surface")
+            .select("doc_id", F.col("canonical_surface").alias("ent"))
+            .distinct()
+            .localCheckpoint()
+        )
+    finally:
+        trips.unpersist()
     n_total = ents.select("doc_id").distinct().count()
     if n_total == 0:
         return spark.createDataFrame(

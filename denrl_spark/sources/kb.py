@@ -131,17 +131,3 @@ class KB:
         for s, p, o in TRIPLES:
             idx.setdefault(s, []).append((p, o))
         return KB(dict(ENTITY_TYPE), frozenset(TRIPLES), idx)
-
-
-def kb_seeds_rows() -> list[tuple[str, str, str, str, str]]:
-    """(subj, subj_type, pred, obj, obj_type) rows, FIXTURES.md §2 shape."""
-    return [
-        (s, ENTITY_TYPE[s], p, o, ENTITY_TYPE[o])
-        for s, p, o in TRIPLES
-    ]
-
-
-def kb_seeds_df(spark):
-    return spark.createDataFrame(
-        kb_seeds_rows(), "subj string, subj_type string, pred string, obj string, obj_type string"
-    )

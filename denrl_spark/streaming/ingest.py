@@ -9,9 +9,10 @@ table (Iceberg/Kafka/files) and maintains the KG incrementally.
 - ``windowed_turn_counts``: watermarked tumbling-window aggregation of
   turn volume per role (late data bounded by the watermark).
 - ``stream_triples``: foreachBatch incremental extraction — each
-  micro-batch runs the SAME batch operators (build_instances ->
-  assemble_triples) and appends to a parquet/Iceberg sink; exactly-once
-  per micro-batch comes from the sink's idempotent overwrite by batch id.
+  micro-batch runs the batch extraction kernel
+  (``fused.extract_triples_fused``, gold mode) and appends to a
+  parquet/Iceberg sink; exactly-once per micro-batch comes from the
+  sink's idempotent overwrite by batch id.
 - ``session_turn_counts``: session-window aggregation (streaming twin of
   the batch lag+cumsum sessionization).
 - ``dedup_stream`` / ``dedup_stream_near``: exact and MinHash-signature
@@ -228,10 +229,10 @@ def stream_graph_deltas(
     stream: DataFrame, sink_dir: str, checkpoint_dir: str, kb=None
 ):
     """Incremental KG EDGE maintenance, log-structured: each micro-batch
-    extracts triples and writes per-batch delta tables, each with
-    idempotent overwrite by batch id (a replayed batch rewrites its own
-    directory — exactly-once effect; the parquet-sandbox analog of an
-    Iceberg MERGE INTO):
+    extracts its triples with the fused kernel and writes per-batch
+    delta tables, each with idempotent overwrite by batch id (a
+    replayed batch rewrites its own directory — exactly-once effect;
+    the parquet-sandbox analog of an Iceberg MERGE INTO):
 
     - ``edges/batch_id=N``: per-(ent1, pred, ent2, sent_id) observation
       counts — SENTENCE grain, so the compaction view can compute exact
@@ -241,17 +242,20 @@ def stream_graph_deltas(
     - ``vertices/batch_id=N``: per-(surface, etype) mention counts;
     - ``mentions/batch_id=N``: distinct surfaces seen in ALL triples
       (entity-tag co-mentions included) — the canonical map depends on
-      every mention, not just relation rows.
+      every mention, not just relation rows;
+    - ``sents/batch_id=N``: (sent_id, ts) of each sentence that yields
+      a triple, its turn's epoch-second ts — the operand the windowed
+      view joins to recover each edge observation's window.
 
     Edge and vertex deltas are ``graph.observations`` pre-counted, so
     they pass the batch build's endpoint filter and
     ``graph_views`` compacts the log with the batch build itself:
     the views equal the batch ``materialize_graph`` exactly
     (test-asserted)."""
+    from denrl_spark.operators.fused import extract_triples_fused
     from denrl_spark.operators.graph import observations
     from denrl_spark.operators.linking import extract_mentions
-    from denrl_spark.operators.spans import assemble_triples
-    from denrl_spark.operators.tagging import build_instances
+    from denrl_spark.operators.tagging import sent_id_col
     from denrl_spark.sources.kb import KB
 
     kb = kb or KB.default()
@@ -260,11 +264,10 @@ def stream_graph_deltas(
         if batch_df.isEmpty():
             return
         # cached: the delta writes below are separate actions over the
-        # same extraction — uncached, each re-runs the full Arrow
-        # instance-building + triple assembly. The first write fills
-        # both caches; they are released even when a write fails.
-        ins = build_instances(batch_df, kb).cache()
-        trips = assemble_triples(ins).cache()
+        # same extraction — uncached, each re-runs the Arrow kernel. The
+        # first write fills the cache; it is released even when a write
+        # fails.
+        trips = extract_triples_fused(batch_df, kb).cache()
         try:
             edge_obs, vertex_obs = observations(trips)
             edges = edge_obs.groupBy("ent1", "pred", "ent2", "sent_id").agg(
@@ -273,24 +276,14 @@ def stream_graph_deltas(
             verts = vertex_obs.groupBy("surface", "etype").agg(
                 F.sum("cnt").alias("cnt")
             )
-            # sentence timestamp map (``sents/batch_id=N``): one row per
-            # sentence with its turn's epoch-second ts — the operand the
-            # windowed compaction view needs (edge deltas are sentence
-            # grain, so joining this map recovers each observation's
-            # window). Distinct by construction: a sentence lives in one
-            # turn.
-            sents = (
-                ins.select("conv_id", "turn_idx", "sent_id")
-                .distinct()
-                .join(
-                    batch_df.select(
-                        "conv_id", "turn_idx",
-                        F.unix_timestamp("ts").cast("bigint").alias("ts"),
-                    ),
-                    ["conv_id", "turn_idx"],
-                )
-                .select("sent_id", "ts")
-            )
+            # a sentence is one turn, so keying the turns gives one row
+            # per sentence; the semi-join keeps the sentences that
+            # yield a triple (a turn without an entity span yields
+            # none), so span-free turns do not grow the log
+            sents = batch_df.select(
+                sent_id_col("conv_id", "turn_idx").alias("sent_id"),
+                F.unix_timestamp("ts").cast("bigint").alias("ts"),
+            ).join(trips.select("sent_id"), "sent_id", "left_semi")
             for part, df in (
                 ("edges", edges),
                 ("vertices", verts),
@@ -300,7 +293,6 @@ def stream_graph_deltas(
                 df.write.mode("overwrite").parquet(f"{sink_dir}/{part}/batch_id={batch_id}")
         finally:
             trips.unpersist()
-            ins.unpersist()
 
     return (
         stream.writeStream.foreachBatch(process)
@@ -538,10 +530,10 @@ def _compact_log_part(
 
 
 def stream_triples(stream: DataFrame, sink_dir: str, checkpoint_dir: str, kb=None):
-    """Incremental triple extraction via foreachBatch: batch operators
-    reused verbatim per micro-batch."""
-    from denrl_spark.operators.spans import assemble_triples
-    from denrl_spark.operators.tagging import build_instances
+    """Incremental triple extraction via foreachBatch: each micro-batch
+    runs the batch extraction kernel (``extract_triples_fused``, gold
+    mode), so the streamed triples equal the batch ones."""
+    from denrl_spark.operators.fused import extract_triples_fused
     from denrl_spark.sources.kb import KB
 
     kb = kb or KB.default()
@@ -549,12 +541,12 @@ def stream_triples(stream: DataFrame, sink_dir: str, checkpoint_dir: str, kb=Non
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        ins = build_instances(batch_df, kb)
-        trips = assemble_triples(ins)
         # idempotent per micro-batch: each batch overwrites its OWN
         # partition directory, so a batch replayed after a crash between
         # sink write and checkpoint commit replaces rather than duplicates
-        trips.write.mode("overwrite").parquet(f"{sink_dir}/batch_id={batch_id}")
+        extract_triples_fused(batch_df, kb).write.mode("overwrite").parquet(
+            f"{sink_dir}/batch_id={batch_id}"
+        )
 
     return (
         stream.writeStream.foreachBatch(process)

@@ -540,6 +540,46 @@ def test_entity_cards_match_python_recomputation(spark):
     assert got == want and len(want) > 0
 
 
+def test_entity_cards_plan_runs_no_python(spark):
+    """entity_cards materializes its mention and edge grains while the
+    triple cache lives, so the returned cards scan checkpoints only:
+    consuming them re-runs neither the fused extraction (MapInPandas)
+    nor the sent_id hash (ArrowEvalPython)."""
+    cards = docs_kg.entity_cards(spark, SF_DIR)
+    assert cards.count() > 0
+    plan = cards._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" not in plan and "ArrowEvalPython" not in plan, plan
+
+
+@pytest.mark.parametrize(
+    "fn",
+    [docs_kg.alias_map, docs_kg._linked_rel_rows, docs_kg.entity_type_profile,
+     docs_kg.entity_cards, docs_kg.entity_cooccurrence],
+    ids=lambda fn: fn.__name__,
+)
+def test_per_surface_consumers_release_cache_on_failure(spark, monkeypatch, fn):
+    """A per-surface consumer whose build fails leaves nothing cached:
+    no persistent RDD made during the call is left (ids, not a count:
+    the context cleaner may drop earlier tests' RDDs meanwhile), and
+    the triple frame it cached is uncached again."""
+    from pyspark import StorageLevel
+
+    from denrl_spark.operators import linking
+
+    seen = []
+
+    def failing_canonicalize(trips):
+        seen.append(trips)
+        raise RuntimeError("canonicalize failed")
+
+    monkeypatch.setattr(linking, "canonicalize", failing_canonicalize)
+    before = set(spark.sparkContext._jsc.getPersistentRDDs())
+    with pytest.raises(RuntimeError, match="canonicalize failed"):
+        fn(spark, SF_DIR)
+    assert set(spark.sparkContext._jsc.getPersistentRDDs()) <= before
+    assert len(seen) == 1 and seen[0].storageLevel == StorageLevel.NONE
+
+
 def test_entity_cooccurrence_matches_python(spark):
     """kg_cooccurrence vs a literal Python recomputation: distinct
     (doc, canonical entity) sets -> unordered pair doc counts -> PMI as

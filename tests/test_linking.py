@@ -163,6 +163,44 @@ def test_materialize_graph_no_unbounded_broadcast(spark):
             spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", old_aqe)
 
 
+def test_materialize_graph_normalizes_once_per_row(spark):
+    """normalize_surface is one regexp_replace and a non-nullable key, so
+    the joins on it infer no isnotnull filter that re-evaluates the
+    regex: the optimized vertex plan normalizes twice (the map's group
+    key and the vertex aggregate's), the edge plan four times (map
+    twice, one per endpoint join, and each endpoint of the aggregate).
+    The rows are those of a hand-computed graph: punctuation and case
+    variants merge, a punctuation-only surface is a vertex of norm ""
+    and an entity-tagged row is no edge."""
+    trips = spark.createDataFrame(
+        [
+            (1, "Acme Corp.", "ORG", "acme  corp", "/org/alias"),
+            (2, "Bob", "PER", "Acme Corp.", "/per/works_at"),
+            (3, "bob", "PER", "!!", "/per/x"),
+            (4, "Bob", "PER", "", "O"),
+        ],
+        "sent_id long, ent1 string, ent1_tag string, ent2 string, ent2_tag string",
+    )
+    vertices, edges = materialize_graph(trips)
+    for df, n in ((vertices, 2), (edges, 4)):
+        plan = str(df._jdf.queryExecution().optimizedPlan())
+        assert plan.count("regexp_replace(") == n, plan
+    got_v = {
+        (r["canonical_surface"], tuple(sorted(r["types"])), r["n_mentions"])
+        for r in vertices.collect()
+    }
+    assert got_v == {("Acme Corp.", ("ORG",), 3), ("Bob", ("PER",), 2), ("!!", (), 1)}
+    got_e = {
+        (r["src_surface"], r["pred"], r["dst_surface"], r["n_obs"])
+        for r in edges.collect()
+    }
+    assert got_e == {
+        ("Acme Corp.", "/org/alias", "Acme Corp.", 1),
+        ("Bob", "/per/works_at", "Acme Corp.", 1),
+        ("Bob", "/per/x", "!!", 1),
+    }
+
+
 def test_tool_edges(spark):
     """Tool turns' entity touches aggregate into (tool, pred, surface)
     edges; Python-recomputed oracle over the same corpus."""

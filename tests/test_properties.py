@@ -107,57 +107,6 @@ def test_pattern_extraction_padding_invariant(sent):
     assert pats == pats2
 
 
-# --------------------------------------------------------------------------
-# GPT-2 byte-level layer (subtokens): lossless round-trips + scanner twin
-# --------------------------------------------------------------------------
-
-from denrl_spark.operators.subtokens import (  # noqa: E402
-    _pre_tokenize_fallback,
-    bpe_decode_bytes,
-    gpt2_encode,
-    gpt2_pre_tokenize,
-    learn_bpe,
-    merge_ranks,
-)
-
-
-@given(st.text(max_size=80))
-@settings(max_examples=200, deadline=None)
-def test_pre_tokenize_round_trips_any_text(t):
-    assert "".join(gpt2_pre_tokenize(t)) == t
-
-
-@given(
-    st.text(
-        alphabet=st.characters(
-            max_codepoint=0xFFFF,
-            # exclude codepoints UNASSIGNED in the stdlib's Unicode
-            # table: the regex module can carry a newer table that
-            # assigns them (e.g. U+0CDC, Unicode 15, found by
-            # Hypothesis INSIDE the BMP), so the two engines
-            # legitimately classify them differently — the same
-            # table-skew rationale as the supplementary-plane scoping
-            # (documented in _pre_tokenize_fallback)
-            exclude_categories=("Cn",),
-        ),
-        max_size=80,
-    )
-)
-@settings(max_examples=200, deadline=None)
-def test_pre_tokenize_fallback_matches_regex_any_text(t):
-    assert _pre_tokenize_fallback(t) == gpt2_pre_tokenize(t)
-
-
-@given(st.text(max_size=60), st.integers(min_value=0, max_value=40))
-@settings(max_examples=100, deadline=None)
-def test_gpt2_encode_lossless_with_learned_merges(t, n_merges):
-    # merges learned from the text's own chunks; encode must stay
-    # lossless regardless of merge table contents
-    chunks = gpt2_pre_tokenize(t)
-    ranks = merge_ranks(learn_bpe({c: 1 for c in chunks if c}, n_merges))
-    assert bpe_decode_bytes(gpt2_encode(t, ranks)) == t
-
-
 @given(
     st.lists(st.integers(min_value=1, max_value=40), min_size=0, max_size=200),
     st.integers(min_value=1, max_value=64),

@@ -329,10 +329,10 @@ def test_stream_graph_deltas_releases_caches_on_failed_write(
     spark, transcript_dir, tmp_path
 ):
     """A delta write that fails (its path is an existing regular file)
-    fails the stream AND releases the micro-batch's instance and triple
-    caches: no persistent RDD made during the stream is left. (Ids, not
-    a count: the context cleaner may drop earlier tests' checkpointed
-    RDDs meanwhile.)"""
+    fails the stream AND releases the micro-batch's triple cache: no
+    persistent RDD made during the stream is left. (Ids, not a count:
+    the context cleaner may drop earlier tests' checkpointed RDDs
+    meanwhile.)"""
     from pyspark.errors import StreamingQueryException
 
     from denrl_spark.streaming.ingest import stream_graph_deltas
