@@ -444,8 +444,10 @@ def distinct_gram_docs(docs: DataFrame, n: int = 3) -> DataFrame:
     rows; docs with < n tokens keep an empty array). The array layout is
     the cheaper thing to materialize (localCheckpoint writes n_docs rows
     instead of n_docs x shingles/doc) and lets downstream consumers read
-    per-doc set sizes (``size(grams)``) and set arrays directly off the
-    checkpoint with ZERO aggregation exchanges (r6b, guide §2.4)."""
+    per-doc set sizes (``size(grams)``) and minhash signatures directly
+    off the checkpoint with ZERO aggregation exchanges (r6b, guide §2.4).
+    The one input layout of the candidate-pruned dedup family
+    (``lsh_candidate_pairs``, ``pair_overlap``)."""
     return docs.select(
         "doc_id", F.array_distinct(ngram_array(_toks(), n)).alias("grams")
     )
@@ -478,11 +480,14 @@ def minhash_from_grams(gd: DataFrame, n_bands: int = N_BANDS) -> DataFrame:
     the band-min fold runs per row in the scan stage and ``posexplode``
     unpivots the result (one generator, one evaluation — no stack over
     aliased columns, which CollapseProject would inline n_bands times).
-    Row-identical to ``minhash_from_shingles(explode(grams))``: min over
-    a set equals min over any multiset with that support, and the
-    post-explode null filter drops exactly the shingle-less docs the
-    groupBy path never emits (r6b; fingerprint-verified at sf0.01/0.1/
-    sf1 and pinned by tests/test_round6_gram_arrays.py)."""
+    Row-identical to a groupBy(doc_id) band-min over the exploded
+    shingles: min over a set equals min over any multiset with that
+    support, and the post-explode null filter drops exactly the
+    shingle-less docs such a groupBy never emits (fingerprint-verified
+    at sf0.01/0.1/sf1; tests/test_round6_gram_arrays.py keeps the
+    groupBy as its reference). The one signature fold of the batch
+    dedup family; ``minhash_signature_cols`` is the per-row streaming
+    twin."""
     return (
         gd.select(
             "doc_id",
@@ -517,22 +522,6 @@ def minhash_signature_cols(
     return out
 
 
-def minhash_from_shingles(sh: DataFrame, n_bands: int = N_BANDS) -> DataFrame:
-    """(doc_id, band, mh) from a prebuilt (doc_id, shingle) frame — see
-    minhash_signatures for the band-min shape rationale. Min over a
-    multiset equals min over its distinct set, so callers may pass
-    either the raw or the deduplicated shingle table."""
-    mins = sh.groupBy("doc_id").agg(
-        *[
-            F.min(
-                F.md5(F.concat_ws(":", F.lit(str(b)), F.col("shingle")))
-            ).alias(f"mh{b}")
-            for b in range(n_bands)
-        ]
-    )
-    return mins.select("doc_id", band_stack_expr(n_bands))
-
-
 def band_stack_expr(n_bands: int) -> F.Column:
     """Unpivot mh0..mh{n-1} signature columns to long (band, mh) rows —
     shared by every consumer of the wide per-row signature layout."""
@@ -545,14 +534,12 @@ def minhash_signatures(docs: DataFrame, n_bands: int = N_BANDS) -> DataFrame:
     family is md5('band:shingle') compared lexicographically — identical
     in Spark and DuckDB, so oracle-exact.
 
-    Shape (r6b): per-row band-min fold over the distinct gram array +
-    posexplode — ZERO exchanges; the signature is a pure projection of
-    the scan stage. Supersedes the groupBy(doc_id) band-min agg (which
-    itself superseded the explode x n_bands shape): min over the
-    distinct set equals min over the raw shingle multiset, so the rows
-    are identical (fingerprint-verified at three scales), and the one
-    remaining exchange disappears. ``minhash_from_shingles`` remains for
-    callers that already hold an exploded shingle frame."""
+    Shape (r6b): ``minhash_from_grams`` over ``distinct_gram_docs`` —
+    a per-row band-min fold + posexplode, ZERO exchanges; the signature
+    is a pure projection of the scan stage. Min over the distinct set
+    equals min over the raw shingle multiset, so the rows equal the
+    older groupBy(doc_id) band-min agg (fingerprint-verified at three
+    scales) without its exchange."""
     return minhash_from_grams(distinct_gram_docs(docs), n_bands)
 
 
@@ -560,19 +547,14 @@ LSH_BUCKET_CAP = 32  # pairwise-join buckets up to this size; star-link above
 
 
 def lsh_candidate_pairs(
-    docs: DataFrame,
-    n_bands: int = N_BANDS,
-    sh: DataFrame | None = None,
-    bucket_cap: int = LSH_BUCKET_CAP,
-    gd: DataFrame | None = None,
+    gd: DataFrame, n_bands: int = N_BANDS, bucket_cap: int = LSH_BUCKET_CAP
 ) -> DataFrame:
     """(doc_a, doc_b): pairs sharing any minhash band bucket. The join is
     on (band, mh) — the bucketed equi-join that replaces the O(n^2)
-    all-pairs comparison at scale. ``gd`` optionally supplies a prebuilt
-    (doc_id, grams) distinct-gram-array frame (e.g. the checkpointed
-    table shared with the verify stage — signatures then cost zero
-    exchanges, minhash_from_grams); ``sh`` the older exploded
-    (doc_id, shingle) layout.
+    all-pairs comparison at scale. ``gd`` is the (doc_id, grams)
+    distinct-gram-array frame (``distinct_gram_docs``; often the
+    checkpoint shared with the verify stage); its signatures are the
+    zero-exchange ``minhash_from_grams`` fold.
 
     Bucket fan-out is CAPPED: a degenerate bucket — millions of
     identical boilerplate docs landing on one (band, mh) — would emit
@@ -603,12 +585,7 @@ def lsh_candidate_pairs(
     skew splitting still handles the degenerate bucket. Per-bucket
     stats are count/min windows sharing one (band, mh) exchange (r6;
     the former groupBy+join shape shuffled the signature table twice)."""
-    if gd is not None:
-        sig = minhash_from_grams(gd, n_bands)
-    elif sh is not None:
-        sig = minhash_from_shingles(sh, n_bands)
-    else:
-        sig = minhash_signatures(docs, n_bands)
+    sig = minhash_from_grams(gd, n_bands)
     # Bucket stats as count/min windows over ONE (band, mh) exchange —
     # the r5 groupBy+equi-join formulation shuffled the signature table
     # by (band, mh) twice (once for the agg, once for the join) and
@@ -621,13 +598,11 @@ def lsh_candidate_pairs(
     # With the stats folded into the window, the raw signature table has
     # exactly ONE consumer, so the r5 pre-window localCheckpoint is
     # gone too; the single barrier below covers the three remaining
-    # subtrees (self-join sides + star branch) — without it the shingle
-    # scan + band-min aggregation would run 3x (ReuseExchange does not
-    # fire across their different downstream partitionings). sig is
+    # subtrees (self-join sides + star branch) — without it the gram
+    # scan + band-min fold would run 3x (ReuseExchange does not fire
+    # across their different downstream partitionings). sig is
     # n_docs x n_bands rows — checkpoint-cheap at any scale next to
     # recomputing the shingle pipeline.
-    from pyspark.sql import Window
-
     w = Window.partitionBy("band", "mh")
     sig = (
         sig.withColumn("_bsz", F.count(F.lit(1)).over(w))
@@ -648,38 +623,31 @@ def lsh_candidate_pairs(
     return pairs_small.unionByName(pairs_big).distinct()
 
 
-def jaccard_verify_pairs(
-    docs: DataFrame,
-    cand: DataFrame,
-    min_j_e6: int = 200_000,
-    sh: DataFrame | None = None,
-    sizes: DataFrame | None = None,
-) -> DataFrame:
-    """Exact distinct-3-gram Jaccard re-score of CANDIDATE pairs
-    (doc_a, doc_b) — the verify stage that follows LSH candidate
-    generation. The shingle joins are candidate-pruned (each candidate
-    pair contributes only its own shingle rows), so cost scales with
+def pair_overlap(cand: DataFrame, gd: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, shared, na, nb): for each CANDIDATE pair, the
+    number of distinct 3-grams the two docs share and each doc's
+    distinct-gram count, read off the (doc_id, grams) gram-array frame
+    ``gd`` (``distinct_gram_docs``). The one overlap join behind every
+    candidate-pruned verify of the dedup family (Jaccard and
+    containment): the shingle joins are candidate-pruned (each pair
+    contributes only its own shingle rows), so cost scales with
     |candidates| x shingles/doc, never with |docs|^2 and never with the
     hot-shingle square that the unfiltered shared-shingle self-join
-    risks. ``sh`` optionally supplies a prebuilt DISTINCT
-    (doc_id, shingle) frame shared with candidate generation; ``sizes``
-    a prebuilt (doc_id, n_sh) frame (e.g. ``size(grams)`` read straight
-    off a checkpointed gram-array table — no aggregation; extra docs
-    with n_sh = 0 are harmless, the joins are inner on candidate
-    endpoints, which always have shingles)."""
-    if sh is None:
-        sh = distinct_shingles(docs)
-    if sizes is None:
-        sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a = sh.select(F.col("doc_id").alias("doc_a"), F.col("shingle"))
-    b = sh.select(F.col("doc_id").alias("doc_b"), F.col("shingle"))
+    risks. The shingle rows are ``explode(grams)`` in the scan stage;
+    the sizes are ``size(grams)`` projections with no aggregation
+    (docs with no grams have size 0 and never reach the inner joins —
+    candidate endpoints share a gram)."""
+    sh = gd.select("doc_id", F.explode("grams").alias("shingle"))
+    sizes = gd.select("doc_id", F.size("grams").alias("n_sh"))
+    a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
+    b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
     shared = (
         cand.join(a, "doc_a")
         .join(b, ["doc_b", "shingle"])
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("shared"))
     )
-    j = (
+    return (
         shared.join(
             sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n_sh", "na"),
             "doc_a",
@@ -688,100 +656,39 @@ def jaccard_verify_pairs(
             sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n_sh", "nb"),
             "doc_b",
         )
-        .withColumn(
-            "j_e6",
-            F.floor(
-                1_000_000 * F.col("shared") / (F.col("na") + F.col("nb") - F.col("shared"))
-            ).cast("long"),
-        )
+        .select("doc_a", "doc_b", "shared", "na", "nb")
     )
-    return j.where(F.col("j_e6") >= min_j_e6).select("doc_a", "doc_b", "j_e6")
 
 
-def jaccard_verify_pairs_sets(
-    cand: DataFrame,
-    sh: DataFrame | None = None,
-    min_j_e6: int = 200_000,
-    gd: DataFrame | None = None,
+def jaccard_verify_pairs(
+    cand: DataFrame, gd: DataFrame, min_j_e6: int = 200_000
 ) -> DataFrame:
-    """Exact Jaccard verify over per-doc shingle-SET arrays: shared =
-    size(array_intersect(set_a, set_b)), sizes read off the arrays —
-    row-identical to ``jaccard_verify_pairs`` (verified on all 256
-    sf0.1 / 226,828 sf1 pairs) but a different physical trade: one
-    collect_list agg + two pair-keyed joins carrying arrays, instead of
-    exploding candidates x shingles/doc through two shuffles plus a
-    pair groupBy plus two size joins. Wins once the exploded row volume
-    dominates (~20% at the 10x sf1 corpus), loses at small corpora
-    where the extra agg exchange outweighs it — callers pick by scale
-    (see jaccard_pairs_pruned). ``sh`` must be DISTINCT per (doc_id,
-    shingle): array_intersect dedups, so set semantics require it.
-    Pass ``gd``, a (doc_id, grams) gram-ARRAY frame
-    (distinct_gram_docs), instead of ``sh`` to read the per-doc sets
-    directly off the column: the collect_list exchange disappears (r6b).
-    Exactly one of ``sh`` and ``gd`` must be given."""
-    if (sh is None) == (gd is None):
-        raise ValueError("jaccard_verify_pairs_sets: pass exactly one of sh, gd")
-    if gd is not None:
-        sets = gd.select("doc_id", F.col("grams").alias("_shs"))
-    else:
-        sets = sh.groupBy("doc_id").agg(F.collect_list("shingle").alias("_shs"))
-    a = sets.select(F.col("doc_id").alias("doc_a"), F.col("_shs").alias("_sha"))
-    b = sets.select(F.col("doc_id").alias("doc_b"), F.col("_shs").alias("_shb"))
-    j = (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
-        .withColumn("shared", F.size(F.array_intersect("_sha", "_shb")))
-        .withColumn(
-            "j_e6",
-            F.floor(
-                1_000_000
-                * F.col("shared")
-                / (F.size("_sha") + F.size("_shb") - F.col("shared"))
-            ).cast("long"),
-        )
-    )
-    return j.where(F.col("j_e6") >= min_j_e6).select("doc_a", "doc_b", "j_e6")
-
-
-# Above this many distinct corpus shingles the verify stage switches to
-# the set-array formulation (see jaccard_verify_pairs_sets): the
-# explode shape's shuffled row volume is |candidates| x shingles/doc,
-# which crosses over around this corpus size on measured A/Bs (sf0.1:
-# 355k shingles, explode wins by ~0.5s; 10x sf1: 3.4M shingles, sets
-# win by ~2s). Scale-adaptive per guide §2 — derived from input size,
-# not a constant tuned to one layout; both shapes are exact and
-# row-identical.
-JACCARD_SETS_MIN_SHINGLES = 1_000_000
+    """(doc_a, doc_b, j_e6): exact distinct-3-gram Jaccard re-score of
+    CANDIDATE pairs — the verify stage that follows candidate
+    generation, one projection over ``pair_overlap(cand, gd)``."""
+    j_e6 = F.floor(
+        1_000_000 * F.col("shared") / (F.col("na") + F.col("nb") - F.col("shared"))
+    ).cast("long")
+    o = pair_overlap(cand, gd).withColumn("j_e6", j_e6)
+    return o.where(F.col("j_e6") >= min_j_e6).select("doc_a", "doc_b", "j_e6")
 
 
 def jaccard_pairs_pruned(
     docs: DataFrame, min_j_e6: int = 200_000, n_bands: int = N_BANDS
 ) -> DataFrame:
-    """The full candidate-pruned Jaccard pipeline with the shingle table
-    computed ONCE: distinct shingles are eagerly localCheckpoint-ed and
-    feed BOTH the minhash candidate generation and the exact verify
-    joins (two subtrees of one DAG — without the barrier each recomputes
-    the shingle scan; measured ~1.5s of the 4.7s query at sf0.1/32c).
-    r6b: the checkpoint now materializes the gram-ARRAY layout
-    (distinct_gram_docs — n_docs rows instead of n_docs x shingles/doc;
-    same string payload, measured 0.33s vs ~0.9s at sf0.1/32c), the
-    signatures are a zero-exchange per-row fold off it
-    (minhash_from_grams), verify sizes are ``size(grams)`` projections
-    (no groupBy), and the sets branch reads its arrays straight off the
-    checkpoint (no collect_list). Blocks are released by the context
-    cleaner once the query's RDD goes out of scope.
-    The verify shape is chosen by measured corpus size (the sum is one
-    tiny agg over the already-materialized n_docs-row checkpoint):
-    candidate-pruned explode below JACCARD_SETS_MIN_SHINGLES distinct
-    shingles, set-array intersection above."""
+    """The full candidate-pruned Jaccard pipeline: LSH candidates
+    (``lsh_candidate_pairs``) re-scored exactly (``jaccard_verify_pairs``),
+    both read off ONE eagerly localCheckpoint-ed gram-array table
+    (``distinct_gram_docs`` — n_docs rows; two subtrees of one DAG,
+    without the barrier each recomputes the shingle scan). Building it
+    runs only the jobs of two barriers, this checkpoint and the
+    candidate stage's (test-asserted). The verify is the
+    candidate-pruned explode join at every scale: a set-array
+    intersection verify returned the same rows but was slower at both
+    sf0.1 and sf1 on a 4-core box (local[4]). Blocks are released by
+    the context cleaner once the query's RDD goes out of scope."""
     gd = distinct_gram_docs(docs).localCheckpoint()
-    cand = lsh_candidate_pairs(docs, n_bands, gd=gd)
-    n_shingles = gd.agg(F.sum(F.size("grams"))).first()[0] or 0
-    if n_shingles >= JACCARD_SETS_MIN_SHINGLES:
-        return jaccard_verify_pairs_sets(cand, min_j_e6=min_j_e6, gd=gd)
-    shd = gd.select("doc_id", F.explode("grams").alias("shingle"))
-    sizes = gd.select("doc_id", F.size("grams").alias("n_sh"))
-    return jaccard_verify_pairs(docs, cand, min_j_e6, sh=shd, sizes=sizes)
+    return jaccard_verify_pairs(lsh_candidate_pairs(gd, n_bands), gd, min_j_e6)
 
 
 def near_dup_clusters(
@@ -790,22 +697,18 @@ def near_dup_clusters(
     """(doc_id, rep_doc_id, is_rep): near-duplicate clustering with
     representative selection — the keep-list a dedup pipeline actually
     applies. Composition: MinHash-LSH candidate pairs (bucketed
-    equi-join) -> exact Jaccard verify (candidate-pruned) -> connected
-    components over verified pairs (min-label propagation,
-    linking.connected_components) -> representative = min doc_id per
-    component; docs with no near-dup are their own representative.
+    equi-join) -> exact Jaccard verify (candidate-pruned; both are
+    ``jaccard_pairs_pruned``) -> connected components over verified
+    pairs (min-label propagation, linking.connected_components) ->
+    representative = min doc_id per component; docs with no near-dup
+    are their own representative.
 
     100 TB shape: every stage is a bucketed join or a map-side-combined
     aggregation; component propagation is O(diameter) rounds and near-dup
     graphs are short chains/cliques in practice."""
     from denrl_spark.operators.linking import connected_components
 
-    # shared checkpointed gram-array table: see jaccard_pairs_pruned
-    gd = distinct_gram_docs(docs).localCheckpoint()
-    cand = lsh_candidate_pairs(docs, n_bands, gd=gd)
-    shd = gd.select("doc_id", F.explode("grams").alias("shingle"))
-    sizes = gd.select("doc_id", F.size("grams").alias("n_sh"))
-    verified = jaccard_verify_pairs(docs, cand, min_j_e6, sh=shd, sizes=sizes)
+    verified = jaccard_pairs_pruned(docs, min_j_e6, n_bands)
     nodes = docs.select(F.col("doc_id").alias("node_id"))
     edges = verified.select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
@@ -921,11 +824,7 @@ def jaccard_pairs(docs: DataFrame, min_j_e6: int = 200_000) -> DataFrame:
 PREFIX_JOIN_MIN_J_E6 = 500_000  # Jaccard >= 0.5; the prefix rule below is derived for this t
 
 
-def prefix_filter_pairs(
-    docs: DataFrame,
-    sh: DataFrame | None = None,
-    sizes: DataFrame | None = None,
-) -> DataFrame:
+def prefix_join_pruned(docs: DataFrame) -> DataFrame:
     """(doc_a, doc_b, j_e6): EXACT set-similarity self-join at Jaccard
     >= 0.5 via prefix filtering (SSJoin, Chaudhuri et al. ICDE 2006;
     All-Pairs, Bayardo et al. WWW 2007; PPJoin, Xiao et al. WWW 2008)
@@ -942,7 +841,11 @@ def prefix_filter_pairs(
     within their first n - alpha + 1 elements under any shared total
     order — so every qualifying pair shares a PREFIX shingle and the
     candidate set from the prefix-only equi-join is complete. Exact
-    verify (``jaccard_verify_pairs``) re-scores candidates only.
+    verify (``jaccard_verify_pairs``) re-scores candidates only. The
+    df/prefix stages and the verify read one eagerly localCheckpoint-ed
+    gram-array table (``distinct_gram_docs``, same barrier rationale as
+    ``jaccard_pairs_pruned``); the exploded shingles are re-derived
+    from it in the scan stage.
 
     100 TB shape: the df table is a map-side-combined aggregate; the
     per-doc prefix rank is a doc-partitioned window (state bounded by
@@ -954,8 +857,8 @@ def prefix_filter_pairs(
     still pair up quadratically — that is the EXACT answer this
     operator contracts to return; the capped probabilistic path for
     that regime is ``lsh_candidate_pairs``/``near_dedup_greedy``."""
-    if sh is None:
-        sh = distinct_shingles(docs)
+    gd = distinct_gram_docs(docs).localCheckpoint()
+    sh = gd.select("doc_id", F.explode("grams").alias("shingle"))
     dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     w = Window.partitionBy("doc_id")
     ranked = (
@@ -972,22 +875,7 @@ def prefix_filter_pairs(
         .select("doc_a", "doc_b")
         .distinct()
     )
-    return jaccard_verify_pairs(docs, cand, PREFIX_JOIN_MIN_J_E6, sh=sh, sizes=sizes)
-
-
-def prefix_join_pruned(docs: DataFrame) -> DataFrame:
-    """``prefix_filter_pairs`` with the distinct shingle table computed
-    ONCE and shared between the df/prefix stages and the exact verify
-    joins (same localCheckpoint barrier rationale as
-    ``jaccard_pairs_pruned``; r6b — the checkpoint is the gram-ARRAY
-    layout, with the exploded twin re-derived in the scan stage and the
-    verify sizes read off the arrays with no groupBy)."""
-    gd = distinct_gram_docs(docs).localCheckpoint()
-    return prefix_filter_pairs(
-        docs,
-        sh=gd.select("doc_id", F.explode("grams").alias("shingle")),
-        sizes=gd.select("doc_id", F.size("grams").alias("n_sh")),
-    )
+    return jaccard_verify_pairs(cand, gd, PREFIX_JOIN_MIN_J_E6)
 
 
 CONTAINMENT_DF_CAP = 16
@@ -1016,12 +904,11 @@ def containment_pairs(
     quoted block suffices; pairs whose overlap is 100% corpus-wide
     boilerplate are exactly the substring-dedup family's job
     (text_substring_dedup). The verify stage re-scores candidates
-    exactly over FULL shingle sets (candidate-pruned joins, same
-    discipline as jaccard_verify_pairs).
+    exactly over FULL shingle sets (``pair_overlap``, the same
+    candidate-pruned join as jaccard_verify_pairs).
     """
-    # r6b: gram-ARRAY checkpoint (see jaccard_pairs_pruned) — the
-    # exploded layout the shingle-keyed joins need is re-derived in the
-    # scan stage; per-doc sizes are read off the arrays with no groupBy.
+    # gram-ARRAY checkpoint (see jaccard_pairs_pruned) — the exploded
+    # layout the rare-shingle joins need is re-derived in the scan stage.
     gd = distinct_gram_docs(docs).localCheckpoint()
     sh = gd.select("doc_id", F.explode("grams").alias("shingle"))
     rare = (
@@ -1040,28 +927,9 @@ def containment_pairs(
         )
         .distinct()
     )
-    sizes = gd.select("doc_id", F.size("grams").alias("n_sh"))
-    a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-    b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
-    shared = (
-        cand.join(a, "doc_a")
-        .join(b, ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    out = (
-        shared.join(
-            sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n_sh", "na"),
-            "doc_a",
-        )
-        .join(
-            sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n_sh", "nb"),
-            "doc_b",
-        )
-        .withColumn(
-            "cont_e6",
-            F.floor(1_000_000 * F.col("shared") / F.least("na", "nb")).cast("long"),
-        )
+    out = pair_overlap(cand, gd).withColumn(
+        "cont_e6",
+        F.floor(1_000_000 * F.col("shared") / F.least("na", "nb")).cast("long"),
     )
     return out.where(F.col("cont_e6") >= min_c_e6).select(
         "doc_a", "doc_b", F.col("shared").cast("bigint").alias("shared"),

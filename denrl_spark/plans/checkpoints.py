@@ -8,10 +8,10 @@ that finds a manifest skips the round (exactly-once resume; a crash
 between data and manifest re-writes the round idempotently because
 parquet output is overwritten atomically per round directory).
 
-Iceberg would give this for free via snapshots; its jars are not in this
-image, so the manifest pattern stands in (import-gated — see
-``try_iceberg``). Every checkpointed DataFrame carries lineage columns
-``round`` and ``src_partition`` (spark_partition_id at write time).
+Iceberg would give this for free via snapshots; its jars are not a
+dependency of this project, so the manifest pattern stands in. Every
+checkpointed DataFrame carries lineage columns ``round`` and
+``src_partition`` (spark_partition_id at write time).
 """
 
 from __future__ import annotations
@@ -21,17 +21,6 @@ import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-
-
-def try_iceberg(spark: SparkSession) -> bool:
-    """True if an Iceberg catalog is usable (not in this sandbox image)."""
-    try:
-        spark.sql("SELECT 1").collect()
-        return "org.apache.iceberg" in spark.sparkContext.getConf().get(
-            "spark.sql.extensions", ""
-        )
-    except Exception:
-        return False
 
 
 class CheckpointManager:

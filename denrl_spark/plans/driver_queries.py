@@ -1899,7 +1899,9 @@ def dedup_lsh_pairs(spark, sf_dir):
     LSH_BUCKET_CAP star-linked to the bucket-min doc — so the hash
     match holds by construction, not corpus luck (testdata's max
     bucket is 22 at sf0.1, below the cap)."""
-    return textops.lsh_candidate_pairs(_t(spark, sf_dir, "documents"))
+    return textops.lsh_candidate_pairs(
+        textops.distinct_gram_docs(_t(spark, sf_dir, "documents"))
+    )
 
 
 @_q(
@@ -1962,9 +1964,10 @@ def dedup_jaccard_pairs(spark, sf_dir):
     pairs sit at/above the 0.2 threshold with high overlap, 8-band LSH
     recall is 1.0 (asserted against the unpruned twin in
     tests/test_more_operators.py::test_jaccard_pruned_equals_unpruned),
-    so the pruned output hash-matches the exact answer. The shingle
-    table is computed once and shared between the candidate and verify
-    stages (textops.jaccard_pairs_pruned)."""
+    so the pruned output hash-matches the exact answer. One
+    checkpointed gram-array table (textops.distinct_gram_docs) feeds
+    both the candidate and the verify stage
+    (textops.jaccard_pairs_pruned)."""
     return textops.jaccard_pairs_pruned(_t(spark, sf_dir, "documents"))
 
 
@@ -1994,7 +1997,7 @@ def dedup_prefix_join(spark, sf_dir):
     dedup_jaccard_pairs (LSH candidates, recall measured per corpus)
     this oracle match is recall-1.0 by theorem on EVERY input. The
     deterministic exact path of the dedup family
-    (textops.prefix_filter_pairs)."""
+    (textops.prefix_join_pruned)."""
     return textops.prefix_join_pruned(_t(spark, sf_dir, "documents"))
 
 
@@ -3971,7 +3974,7 @@ def dedup_levenshtein(spark, sf_dir):
     to surviving candidates. The oracle nests the dedup_lsh_pairs twin
     (cap semantics included) and verifies the identical pair set."""
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    cand = textops.lsh_candidate_pairs(docs)
+    cand = textops.lsh_candidate_pairs(textops.distinct_gram_docs(docs))
     a = docs.select(F.col("doc_id").alias("doc_a"), F.col("text").alias("ta"))
     b = docs.select(F.col("doc_id").alias("doc_b"), F.col("text").alias("tb"))
     p = (
@@ -4193,12 +4196,10 @@ def dedup_est_vs_exact(spark, sf_dir):
     score is the candidate-pruned Jaccard verify. Cost ~ |candidates|,
     never |docs|^2 — evaluating the index costs no more than using it."""
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    # r6b: gram-ARRAY checkpoint (textops.distinct_gram_docs) — the
-    # signature table and the verify sizes are zero-exchange projections
-    # of it; the exploded layout is re-derived in the scan stage where
-    # the shingle-keyed verify join needs it.
+    # gram-ARRAY checkpoint (textops.distinct_gram_docs): the signature
+    # table, the candidates and the verify all read it
     gd = textops.distinct_gram_docs(docs).localCheckpoint()
-    cand = textops.lsh_candidate_pairs(docs, gd=gd).localCheckpoint()
+    cand = textops.lsh_candidate_pairs(gd).localCheckpoint()
     sig = textops.minhash_from_grams(gd)
     m = (
         cand.join(
@@ -4218,13 +4219,9 @@ def dedup_est_vs_exact(spark, sf_dir):
             .alias("n_match")
         )
     )
-    exact = textops.jaccard_verify_pairs(
-        docs,
-        cand,
-        min_j_e6=0,
-        sh=gd.select("doc_id", F.explode("grams").alias("shingle")),
-        sizes=gd.select("doc_id", F.size("grams").alias("n_sh")),
-    ).select("doc_a", "doc_b", F.col("j_e6").alias("exact_e6"))
+    exact = textops.jaccard_verify_pairs(cand, gd, min_j_e6=0).select(
+        "doc_a", "doc_b", F.col("j_e6").alias("exact_e6")
+    )
     est = F.floor(1_000_000 * F.col("n_match") / 8).cast("long")
     return (
         m.join(exact, ["doc_a", "doc_b"], "left")

@@ -17,8 +17,8 @@ table (Iceberg/Kafka/files) and maintains the KG incrementally.
   the batch lag+cumsum sessionization).
 - ``dedup_stream`` / ``dedup_stream_near``: exact and MinHash-signature
   near-duplicate suppression with watermark-bounded state.
-- ``stream_graph_deltas`` + ``graph_views`` (``graph_edges_view`` /
-  ``graph_vertices_view``) + ``compact_graph_deltas``: incremental KG
+- ``stream_graph_deltas`` + ``graph_edges_view`` /
+  ``graph_vertices_view`` + ``compact_graph_deltas``: incremental KG
   EDGE/VERTEX maintenance as an exactly-once per-batch delta log,
   compacted by the batch graph build itself (so the views equal the
   batch graph), plus a write-then-commit log compactor.
@@ -249,9 +249,9 @@ def stream_graph_deltas(
 
     Edge and vertex deltas are ``graph.observations`` pre-counted, so
     they pass the batch build's endpoint filter and
-    ``graph_views`` compacts the log with the batch build itself:
-    the views equal the batch ``materialize_graph`` exactly
-    (test-asserted)."""
+    ``graph_edges_view``/``graph_vertices_view`` compact the log with
+    the batch build itself: the views equal the batch
+    ``materialize_graph`` exactly (test-asserted)."""
     from denrl_spark.operators.fused import extract_triples_fused
     from denrl_spark.operators.graph import observations
     from denrl_spark.operators.linking import extract_mentions
@@ -304,7 +304,13 @@ def stream_graph_deltas(
 
 def _delta_graph(spark: SparkSession, sink_dir: str) -> tuple[DataFrame, DataFrame]:
     """Lazy (vertices, edges) of ``graph.canonical_graph`` — the batch
-    build — over the accumulated mention, edge and vertex deltas."""
+    build — over the accumulated mention, edge and vertex deltas written
+    by ``stream_graph_deltas``. Canonicalization happens at READ time
+    from the full mention set, so a late-arriving surface variant
+    retroactively merges its history, exactly as the batch job over the
+    full corpus would. Output schema and values match
+    ``materialize_graph`` exactly (types compared as sets — collect_set
+    order is nondeterministic in both paths)."""
     from denrl_spark.operators.graph import canonical_graph
 
     return canonical_graph(
@@ -314,27 +320,16 @@ def _delta_graph(spark: SparkSession, sink_dir: str) -> tuple[DataFrame, DataFra
     )
 
 
-def graph_views(spark: SparkSession, sink_dir: str) -> tuple[DataFrame, DataFrame]:
-    """(vertices, edges) compacted from the delta log written by
-    ``stream_graph_deltas`` with the batch graph build. Canonicalization
-    happens at READ time from the full mention set, so a late-arriving
-    surface variant retroactively merges its history, exactly as the
-    batch job over the full corpus would. Output schema and values
-    match ``materialize_graph`` exactly (types compared as sets —
-    collect_set order is nondeterministic in both paths). Returned
-    materialized (localCheckpoint): a snapshot that stays valid while
-    ``compact_graph_deltas`` rewrites the log."""
-    vertices, edges = _delta_graph(spark, sink_dir)
-    return vertices.localCheckpoint(), edges.localCheckpoint()
-
-
 def graph_edges_view(spark: SparkSession, sink_dir: str) -> DataFrame:
-    """The edge table of ``graph_views``, built alone."""
+    """The edge table compacted from the delta log (``_delta_graph``).
+    Returned materialized (localCheckpoint): a snapshot that stays valid
+    while ``compact_graph_deltas`` rewrites the log."""
     return _delta_graph(spark, sink_dir)[1].localCheckpoint()
 
 
 def graph_vertices_view(spark: SparkSession, sink_dir: str) -> DataFrame:
-    """The vertex table of ``graph_views``, built alone."""
+    """The vertex table compacted from the delta log (``_delta_graph``),
+    materialized like ``graph_edges_view``."""
     return _delta_graph(spark, sink_dir)[0].localCheckpoint()
 
 
@@ -349,7 +344,7 @@ def graph_edges_by_window_view(
     joining the per-batch sentence→ts map (``sents/``) recovers each
     observation's window exactly; win_start = ts div W * W in integer
     epoch seconds. Aggregated by norm first, then linked through the
-    same norm map as ``graph_views`` — canonicalized at READ time from
+    same norm map as ``graph_edges_view`` — canonicalized at READ time from
     the full accumulated mention set. ``window_s`` defaults to the
     batch twin's EDGE_WINDOW_S so the two surfaces stay diffable with
     default parameters (review finding: a hard-coded default here

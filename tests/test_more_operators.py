@@ -244,14 +244,18 @@ def test_lsh_bucket_cap_degenerate_boilerplate(spark):
     star-links the oversized bucket to its min doc: exactly n-1
     candidate edges, and downstream clustering still folds the whole
     bucket into one component with the min doc as representative."""
-    from denrl_spark.functions.textops import lsh_candidate_pairs, near_dup_clusters
+    from denrl_spark.functions.textops import (
+        distinct_gram_docs,
+        lsh_candidate_pairs,
+        near_dup_clusters,
+    )
 
     n = 10_000
     docs = spark.range(n).select(
         F.col("id").alias("doc_id"),
         F.lit("the quick brown fox jumps over the lazy dog again").alias("text"),
     )
-    cand = lsh_candidate_pairs(docs)
+    cand = lsh_candidate_pairs(distinct_gram_docs(docs))
     assert cand.count() == n - 1
     # every candidate edge is anchored at the bucket-min doc (a star)
     lo, hi = cand.agg(F.min("doc_a"), F.max("doc_a")).first()
@@ -269,7 +273,7 @@ def test_lsh_cap_preserves_connectivity(spark):
     recall is the probabilistic contract documented on
     lsh_candidate_pairs: a high-J pair missed via a dissimilar hub is
     still emitted pairwise through its other shared bands.)"""
-    from denrl_spark.functions.textops import lsh_candidate_pairs
+    from denrl_spark.functions.textops import distinct_gram_docs, lsh_candidate_pairs
     from denrl_spark.operators.linking import connected_components
 
     base = [
@@ -289,8 +293,9 @@ def test_lsh_cap_preserves_connectivity(spark):
             for r in connected_components(nodes, edges).collect()
         }
 
-    capped = lsh_candidate_pairs(docs, bucket_cap=2)
-    uncapped = lsh_candidate_pairs(docs, bucket_cap=1 << 30)
+    gd = distinct_gram_docs(docs)
+    capped = lsh_candidate_pairs(gd, bucket_cap=2)
+    uncapped = lsh_candidate_pairs(gd, bucket_cap=1 << 30)
     # the tiny cap actually bites: fewer candidate edges than pairwise
     assert capped.count() < uncapped.count()
     assert comps(capped) == comps(uncapped)

@@ -46,30 +46,3 @@ def test_rel_abtest_exact_past_int64_envelope(spark):
         "a bigger corpus"
     )
 
-
-def test_jaccard_verify_sets_equals_explode(spark):
-    """The scale-adaptive verify (textops.jaccard_pairs_pruned) picks
-    between two physical shapes; this pins their row-level equality on
-    a corpus with real near-dups, exact dups, disjoint docs, and a
-    doc-in-doc containment pair."""
-    from denrl_spark.functions import textops
-
-    texts = []
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    for i in range(30):
-        texts.append((i, base + f" tail{i % 3}"))
-    texts.append((100, base))                       # near-dup of all
-    texts.append((101, base))                       # exact dup of 100
-    texts.append((102, "totally different words with no overlap here"))
-    texts.append((103, base + " " + base))          # containment-ish
-    docs = spark.createDataFrame(texts, "doc_id long, text string")
-    shd = textops.distinct_shingles(docs).localCheckpoint()
-    cand = textops.lsh_candidate_pairs(docs, sh=shd)
-    explode = sorted(
-        map(tuple, textops.jaccard_verify_pairs(docs, cand, 200_000, sh=shd).collect())
-    )
-    sets = sorted(
-        map(tuple, textops.jaccard_verify_pairs_sets(cand, shd, 200_000).collect())
-    )
-    assert explode == sets
-    assert explode, "fixture produced no verified pairs"

@@ -1,25 +1,27 @@
-"""r6b gram-array layout regression tests.
+"""Gram-array layout regression tests.
 
-The LSH/jaccard family's shared intermediate is now the per-doc DISTINCT
-gram ARRAY (textops.distinct_gram_docs) and the minhash signature is a
-zero-exchange per-row fold over it (minhash_band_array /
-minhash_from_grams) instead of the explode + groupBy(doc_id) band-min
-aggregation. These tests pin the algebra the refactor relies on, on an
-adversarial fixture (null text, empty text, short docs below the shingle
-length, heavy within-doc shingle repetition, exact dups):
+The per-doc DISTINCT gram ARRAY (textops.distinct_gram_docs) is the one
+input layout of the candidate-pruned dedup family: the minhash
+signature is a zero-exchange per-row fold over it (minhash_band_array /
+minhash_from_grams), and the verify reads its shingles and sizes off it
+(pair_overlap). These tests pin the algebra that relies on, on an
+adversarial fixture (null text, empty text, short docs below the
+shingle length, heavy within-doc shingle repetition, exact dups):
 
 - explode(grams) is row-identical to distinct_shingles;
-- the fold signature equals the historical raw-multiset groupBy
+- the fold signature equals a raw-multiset groupBy(doc_id) band-min
   signature (min over a set == min over any multiset with that support;
   shingle-less docs emit no rows on either path);
 - the full pruned pipeline (gd checkpoint, gd-fed candidates, gd-fed
-  verify) is row-identical to the pre-refactor component wiring;
-- the sets-verify reading arrays off gd equals the collect_list shape.
+  verify) returns the pairs of the unpruned exact jaccard_pairs;
+- building the pruned pipeline runs no Spark job beyond its two
+  checkpoints.
 """
 
 from __future__ import annotations
 
-import pytest
+import uuid
+
 from pyspark.sql import functions as F
 
 from denrl_spark.functions import textops
@@ -64,8 +66,19 @@ def test_fold_signature_equals_multiset_groupby_signature(spark):
     new = sorted(
         map(tuple, textops.minhash_from_grams(textops.distinct_gram_docs(docs)).collect())
     )
+    mins = textops.shingles(docs).groupBy("doc_id").agg(
+        *[
+            F.min(F.md5(F.concat_ws(":", F.lit(str(b)), F.col("shingle")))).alias(
+                f"mh{b}"
+            )
+            for b in range(textops.N_BANDS)
+        ]
+    )
     old = sorted(
-        map(tuple, textops.minhash_from_shingles(textops.shingles(docs)).collect())
+        map(
+            tuple,
+            mins.select("doc_id", textops.band_stack_expr(textops.N_BANDS)).collect(),
+        )
     )
     assert new == old
     # shingle-less docs emit no signature rows on either path
@@ -80,29 +93,37 @@ def test_fold_signature_equals_multiset_groupby_signature(spark):
 def test_pruned_pipeline_matches_prerefactor_wiring(spark):
     docs = _fixture(spark)
     new = sorted(map(tuple, textops.jaccard_pairs_pruned(docs).collect()))
-    # pre-refactor wiring: exploded-shingle checkpoint, sh-fed candidate
-    # generation (groupBy signatures), default groupBy sizes in verify
-    shd = textops.distinct_shingles(docs).localCheckpoint()
-    cand = textops.lsh_candidate_pairs(docs, sh=shd)
-    old = sorted(
-        map(tuple, textops.jaccard_verify_pairs(docs, cand, 200_000, sh=shd).collect())
-    )
-    assert new == old
+    # the unpruned exact shared-shingle self-join is the reference
+    exact = sorted(map(tuple, textops.jaccard_pairs(docs).collect()))
+    assert new == exact
     assert new, "fixture produced no verified pairs"
 
 
-def test_sets_verify_from_gram_arrays_equals_collect_list(spark):
+def _jobs_to_build(spark, build) -> int:
+    """Spark jobs run while ``build()`` constructs (not executes) a
+    DataFrame, counted through a fresh job group."""
+    sc = spark.sparkContext
+    group = f"gram_arrays_build_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_pruned_pipeline_builds_with_checkpoint_jobs_only(spark):
+    """Constructing jaccard_pairs_pruned runs exactly the jobs of its two
+    eager barriers, the gram-array checkpoint and the candidate stage's
+    checkpoint, built here alone: no driver action decides the verify
+    shape."""
     docs = _fixture(spark)
-    gd = textops.distinct_gram_docs(docs).localCheckpoint()
-    cand = textops.lsh_candidate_pairs(docs, gd=gd)
-    shd = gd.select("doc_id", F.explode("grams").alias("shingle"))
-    via_arrays = sorted(
-        map(tuple, textops.jaccard_verify_pairs_sets(cand, min_j_e6=200_000, gd=gd).collect())
+    parts = _jobs_to_build(
+        spark,
+        lambda: textops.lsh_candidate_pairs(
+            textops.distinct_gram_docs(docs).localCheckpoint()
+        ),
     )
-    via_collect = sorted(
-        map(tuple, textops.jaccard_verify_pairs_sets(cand, shd, 200_000).collect())
-    )
-    assert via_arrays == via_collect
-    assert via_arrays, "fixture produced no verified pairs"
-    with pytest.raises(ValueError):
-        textops.jaccard_verify_pairs_sets(cand, shd, gd=gd)
+    whole = _jobs_to_build(spark, lambda: textops.jaccard_pairs_pruned(docs))
+    assert parts >= 2
+    assert whole == parts

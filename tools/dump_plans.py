@@ -28,7 +28,7 @@ SHOW = [
     ("kg_distant_pairs", "KB alignment: broadcast nested-loop (non-equi), big side never shuffles"),
     ("rel_topk_per_group", "A2/O3: window top-k (single shuffle on the partition key)"),
     ("dedup_lsh_pairs", "LSH: bucketed equi-join replaces O(n^2) comparison; oversized buckets star-linked (degenerate-boilerplate cap), checkpointed signature table feeds all four subtrees once"),
-    ("dedup_jaccard_pairs", "Jaccard verify: candidate-pruned joins (every shingle join also doc-keyed — no hot-shingle self-join), shared checkpointed shingle table"),
+    ("dedup_jaccard_pairs", "Jaccard verify: candidate-pruned joins (every shingle join also doc-keyed — no hot-shingle self-join), one checkpointed gram-array table feeds the LSH candidates and the verify (pair_overlap), no driver action between them"),
     ("sim_cosine_topk", "ANN baseline: JVM-side HOF dot products, no Python"),
     ("dedup_embedding_pairs_lsh", "embedding near-dup scale path: bucket join + multi-probe + id-level dedup before re-score (no CartesianProduct)"),
     ("kg_gold_triples_by_doc", "flagship fused extraction re-keyed to doc_id (Arrow pass + sent-map equi-join)"),

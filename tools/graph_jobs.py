@@ -1,7 +1,9 @@
 """Spark job count per graph query: each query runs under its own job
 group, is forced with the ``noop`` sink (so column pruning cannot skip
 work), and the jobs Spark recorded for the group are counted through
-``statusTracker().getJobIdsForGroup``. Usage:
+``statusTracker().getJobIdsForGroup``. Each query's optimized logical
+plan, with expression ids masked, is recorded as a sha256 digest, so two
+checkouts can show that a refactor left the plans unchanged. Usage:
 
     python tools/graph_jobs.py SF_DIR OUT_JSON LABEL [REPS [Q1,Q2,...]]
 
@@ -14,6 +16,7 @@ recorded.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import re
@@ -40,14 +43,19 @@ def main() -> int:
     sc = spark.sparkContext
     qs = e.queries()
     counts: dict[str, list[int]] = {}
+    plans: dict[str, str] = {}
     for name in names:
         counts[name] = []
         for rep in range(reps):
             group = f"{name}#{rep}"
             sc.setJobGroup(group, name)
-            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+            df = qs[name](spark, sf_dir)
+            df.write.format("noop").mode("overwrite").save()
             counts[name].append(len(sc.statusTracker().getJobIdsForGroup(group)))
-        print(name, counts[name], flush=True)
+        plan = str(df._jdf.queryExecution().optimizedPlan().toString())
+        plans[name] = hashlib.sha256(
+            re.sub(r"#\d+L?", "#", plan).encode()).hexdigest()[:16]
+        print(name, counts[name], plans[name], flush=True)
     doc = {}
     if os.path.exists(out_path):
         with open(out_path) as f:
@@ -56,6 +64,7 @@ def main() -> int:
                master="local[4]", method="setJobGroup + "
                "statusTracker().getJobIdsForGroup, noop sink")
     doc.setdefault("runs", {})[label] = counts
+    doc.setdefault("plan_digests", {})[label] = plans
     with open(out_path, "w") as f:
         text = json.dumps(doc, indent=1, sort_keys=True)
         # one line per query: [n_rep0, n_rep1, ...]
