@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from denrl_spark.operators.linking import norm_map, normalize_surface
+from denrl_spark.operators.linking import mention_surfaces, norm_map, normalize_surface
 
 R_TOOL_TOUCHES = "/agent/tool/touches"
 
@@ -81,22 +81,6 @@ def relation_rows(triples: DataFrame) -> DataFrame:
     )
 
 
-def link_canonical(triples: DataFrame, mmap: DataFrame) -> DataFrame:
-    """Relation rows joined through a per-surface canonical map
-    (``linking.canonicalize``) on BOTH endpoints, at observation grain
-    — the linking step of the per-observation rollups (edges_by_role,
-    edges_by_window, entity cards). ``mmap`` must carry (surface,
-    canonical_surface) and may carry canonical_id; all other triple
-    columns pass through."""
-    ren = {"surface": "ent1", "canonical_surface": "src_surface",
-           "canonical_id": "src_id"}
-    src = mmap.withColumnsRenamed({k: v for k, v in ren.items() if k in mmap.columns})
-    ren = {"surface": "ent2", "canonical_surface": "dst_surface",
-           "canonical_id": "dst_id"}
-    dst = mmap.withColumnsRenamed({k: v for k, v in ren.items() if k in mmap.columns})
-    return relation_rows(triples).join(src, "ent1").join(dst, "ent2")
-
-
 def observations(triples: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Triples -> (edge, vertex) observations of weight 1, the operands
     of ``canonical_graph``: edge rows (ent1, pred, ent2, sent_id,
@@ -118,7 +102,9 @@ def observations(triples: DataFrame) -> tuple[DataFrame, DataFrame]:
 
 def link_norms(agg: DataFrame, cmap: DataFrame) -> DataFrame:
     """Joins a frame keyed by (src_norm, dst_norm) to the norm map on
-    both endpoints, adding src_id/src_surface and dst_id/dst_surface."""
+    both endpoints, adding src_id/src_surface and dst_id/dst_surface:
+    the one linking step of the graph build, the docs_kg
+    per-observation rollups and the streaming views."""
     def end(e: str) -> DataFrame:
         return cmap.select(
             F.col("norm").alias(f"{e}_norm"),
@@ -191,8 +177,9 @@ def materialize_graph(
     terminal output, so its bogus RDD stats can't flip any later join
     side); a part not named stays lazy and recomputes from
     ``triples`` when consumed."""
-    surfaces = triples.select(F.explode(F.array("ent1", "ent2")).alias("surface"))
-    vertices, edges = canonical_graph(surfaces, *observations(triples))
+    vertices, edges = canonical_graph(
+        mention_surfaces(triples), *observations(triples)
+    )
     if eager in ("edges", "both"):
         edges = edges.localCheckpoint()
     if eager in ("vertices", "both"):

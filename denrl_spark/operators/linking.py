@@ -6,8 +6,10 @@ Canonicalization: mention surfaces are grouped by normalized form
 (lower-case, punctuation -> space, collapsed whitespace) and every
 member of a group resolves to the group's min surface; the canonical
 id is that surface's xxhash64. ``norm_map`` is the one place the rule
-is written — the batch graph build, the streaming compaction views and
-the per-surface ``canonicalize`` map all join to it.
+is written, and resolving a mention is one join: ``normalize_surface``
+of the mention to the map's ``norm``. The batch graph build, the
+docs_kg per-observation consumers and the streaming compaction views
+all link that way.
 
 Scale notes:
 - the norm map is one map-side-combined aggregation: hot surfaces
@@ -36,21 +38,13 @@ def normalize_surface(col: F.Column) -> F.Column:
     return F.coalesce(F.trim(c), F.lit(""))
 
 
-def extract_mentions(triples: DataFrame) -> DataFrame:
-    """Triples -> distinct non-empty mention table (surface, norm).
-
-    Single scan: explode([ent1, ent2]) instead of a two-branch union —
-    the union shape reads the triple table twice. The distinct's
-    partial aggregation still collapses hot surfaces map-side before
-    the shuffle."""
-    surfaces = (
-        triples.select(
-            F.explode(F.array(F.col("ent1"), F.col("ent2"))).alias("surface")
-        )
-        .where(F.col("surface") != "")
-        .distinct()
-    )
-    return surfaces.withColumn("norm", normalize_surface(F.col("surface")))
+def mention_surfaces(triples: DataFrame) -> DataFrame:
+    """Triples -> one ``surface`` row per mention (ent1 and ent2 of
+    every triple, duplicates, ``""`` and nulls kept): one
+    explode([ent1, ent2]) scan instead of a two-branch union, which
+    reads the triple table twice. The input of ``norm_map``, which
+    drops the empty surfaces itself."""
+    return triples.select(F.explode(F.array("ent1", "ent2")).alias("surface"))
 
 
 def norm_map(surfaces: DataFrame) -> DataFrame:
@@ -105,12 +99,3 @@ def connected_components(
     return iterate(labels, adopt_min, max_iter, no_change("node_id", "component"),
                    name="connected_components", strict=strict)
 
-
-def canonicalize(triples: DataFrame) -> DataFrame:
-    """Mentions -> (surface, norm, canonical_id, canonical_surface):
-    the per-surface resolution table, one row per distinct non-empty
-    mention, joined to ``norm_map``."""
-    mentions = extract_mentions(triples)
-    return mentions.join(norm_map(mentions), "norm").select(
-        "surface", "norm", "canonical_id", "canonical_surface"
-    )

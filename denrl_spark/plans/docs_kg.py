@@ -547,23 +547,39 @@ def edge_history_sql(rel: str = "documents") -> str:
     """
 
 
+def _link_observations(trips: DataFrame, cmap: DataFrame) -> DataFrame:
+    """Relation rows of a doc-keyed triple frame linked to the norm map
+    ``cmap`` (``linking.norm_map``) at OBSERVATION grain: each
+    endpoint's ``normalize_surface`` joined to the map's norm (the one
+    linking rule, ``graph.link_norms``), plus the turn timestamp ts =
+    TS_EPOCH_BASE + doc_id*TS_SPACING_S (transcripts_from_documents).
+    The triple columns pass through."""
+    from denrl_spark.operators.graph import link_norms, relation_rows
+    from denrl_spark.operators.linking import normalize_surface
+
+    rel = relation_rows(trips).withColumns({
+        "src_norm": normalize_surface(F.col("ent1")),
+        "dst_norm": normalize_surface(F.col("ent2")),
+    })
+    return link_norms(rel, cmap).withColumn(
+        "ts", (F.lit(TS_EPOCH_BASE) + F.col("doc_id") * TS_SPACING_S).cast("bigint")
+    )
+
+
 def _linked_rel_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Canonicalized relation rows at OBSERVATION grain (doc_id kept):
-    gold triples -> canonical map -> link_canonical, the shared prelude
-    of every provenance-dimension rollup (edges_by_role,
-    edges_by_window, and future per-observation groupings — one place
-    to evolve the cache/canonical-map discipline, per review). Returns
-    an eagerly-materialized frame (localCheckpoint) with the triple
-    cache released, also when the build fails. canonicalize expects
-    the engine's (ent1/ent2) mention columns; doc_id passes through
-    link_canonical untouched."""
-    from denrl_spark.operators.graph import link_canonical
-    from denrl_spark.operators.linking import canonicalize
+    """Canonicalized relation rows at OBSERVATION grain (doc_id and ts
+    kept): gold triples -> ``_link_observations`` against the norm map
+    of every mention, the shared prelude of every provenance-dimension
+    rollup (edges_by_role, edges_by_window, the snapshots, recency,
+    provenance). Returns an eagerly-materialized frame
+    (localCheckpoint) with the triple cache released, also when the
+    build fails."""
+    from denrl_spark.operators import linking
 
     trips = gold_triples_by_doc(spark, sf_dir).cache()
     try:
-        mmap = canonicalize(trips).select("surface", "canonical_surface")
-        return link_canonical(trips, mmap).localCheckpoint()
+        cmap = linking.norm_map(linking.mention_surfaces(trips))
+        return _link_observations(trips, cmap).localCheckpoint()
     finally:
         trips.unpersist()
 
@@ -576,8 +592,9 @@ def edges_by_role(spark: SparkSession, sf_dir: str) -> DataFrame:
     user; user turns carry ground requirements). Role is the
     deterministic turn-parity mapping of transcripts_from_documents
     (doc_id % 2), so the split is ANSI-SQL-reproducible. Same single
-    canonical-map pass and the SAME linking step (graph.link_canonical)
-    as the canonical edge table; only the final aggregate differs."""
+    norm-map pass and the SAME linking rule (normalize, join
+    ``linking.norm_map``) as the canonical edge table; only the final
+    aggregate differs."""
     return (
         _linked_rel_rows(spark, sf_dir)
         .withColumn(
@@ -647,9 +664,10 @@ def tool_edges_sql(rel: str = "documents") -> str:
 
 
 def _canon_cte() -> str:
-    """linking.canonicalize in SQL: mentions grouped by normalized form
-    (lower, punctuation->space, collapse space), canonical surface = min
-    surface of the norm group (linking.norm_map)."""
+    """The per-surface canonical map in SQL (the alias_map table):
+    mentions grouped by normalized form (lower, punctuation->space,
+    collapse space), canonical surface = min surface of the norm group
+    (linking.norm_map)."""
     return """
         mentions AS (
           SELECT DISTINCT surface FROM (
@@ -951,11 +969,6 @@ def edges_by_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot diff into a two-partition scan)."""
     return (
         _linked_rel_rows(spark, sf_dir)
-        .withColumn(
-            "ts",
-            (F.lit(TS_EPOCH_BASE) + F.col("doc_id") * TS_SPACING_S)
-            .cast("bigint"),
-        )
         .withColumn(
             "win_start",
             F.expr(f"CAST(ts div {EDGE_WINDOW_S} * {EDGE_WINDOW_S} AS BIGINT)"),
@@ -1259,17 +1272,21 @@ def closeness_sql(rel: str = "documents", max_iter: int = 40) -> str:
 def alias_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonicalization audit surface: the full (surface ->
     canonical_surface) alias map over every mention in the gold
-    triples — the table a KG consumer joins to resolve raw mentions,
-    and the artifact reviewers inspect to audit merge decisions. One
-    canonicalize pass (star fast path: one window over the distinct
-    mention set), engine-internal ids dropped so the output is
-    cross-engine hashable."""
-    from denrl_spark.operators.linking import canonicalize
+    triples — the per-surface resolution table, and the artifact for
+    auditing merge decisions: the distinct non-empty mentions, with
+    their norm, joined to the norm map of the same mentions.
+    Engine-internal ids dropped so the output is cross-engine
+    hashable."""
+    from denrl_spark.operators import linking
 
     trips = gold_triples_by_doc(spark, sf_dir).cache()
     try:
+        mentions = (
+            linking.mention_surfaces(trips).where(F.col("surface") != "").distinct()
+        )
         return (
-            canonicalize(trips)
+            mentions.withColumn("norm", linking.normalize_surface(F.col("surface")))
+            .join(linking.norm_map(mentions), "norm")
             .select("surface", "canonical_surface")
             .localCheckpoint()
         )
@@ -1764,11 +1781,6 @@ def snapshot_asof(spark: SparkSession, sf_dir: str,
     rows."""
     return (
         _linked_rel_rows(spark, sf_dir)
-        .withColumn(
-            "ts",
-            (F.lit(TS_EPOCH_BASE) + F.col("doc_id") * TS_SPACING_S)
-            .cast("bigint"),
-        )
         .where(F.col("ts") <= cutoff_ts)
         .groupBy("src_surface", F.col("ent2_tag").alias("pred"), "dst_surface")
         .agg(
@@ -1934,41 +1946,50 @@ def entity_type_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     ent1 with its own type; gold includes the non-relation rows, so
     no relation filter here).
 
-    Shape: one canonical-map join + two map-side-combined aggregates
-    ((entity, type) counts, then the per-entity argmax via min of the
-    (−n, type) struct — no window, no list state)."""
-    from denrl_spark.operators.linking import canonicalize
+    Shape: ``_type_profile`` — two map-side-combined aggregates
+    keyed by norm ((norm, type) counts, then the per-entity argmax via
+    min of the (−n, type) struct — no window, no list state) and one
+    join of the per-norm rows to the norm map."""
+    from denrl_spark.operators import linking
 
     trips = gold_triples_by_doc(spark, sf_dir).cache()
     try:
-        mmap = (
-            canonicalize(trips).select("surface", "canonical_surface")
-            .withColumnsRenamed({"surface": "ent1"})
-        )
-        by_type = (
-            trips.join(mmap, "ent1")
-            .groupBy(F.col("canonical_surface").alias("surface"),
-                     F.col("ent1_tag").alias("typ"))
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        return (
-            by_type.groupBy("surface")
-            .agg(
-                F.sum("n").cast("bigint").alias("n_mentions"),
-                F.count(F.lit(1)).cast("bigint").alias("n_types"),
-                F.min(
-                    F.struct((-F.col("n")).alias("neg"), F.col("typ").alias("t"))
-                ).alias("_top"),
-            )
-            .select(
-                "surface", "n_mentions", "n_types",
-                F.col("_top.t").alias("top_type"),
-                (-F.col("_top.neg")).cast("bigint").alias("top_n"),
-            )
-            .localCheckpoint()
-        )
+        cmap = linking.norm_map(linking.mention_surfaces(trips))
+        return _type_profile(trips, cmap).localCheckpoint()
     finally:
         trips.unpersist()
+
+
+def _type_profile(trips: DataFrame, cmap: DataFrame) -> DataFrame:
+    """Per canonical entity of the norm map ``cmap``: (surface,
+    n_mentions, n_types, top_type, top_n) over the slot-1 mentions of
+    ``trips``, aggregated by (norm(ent1), ent1_tag) and then by norm
+    before the one join to the map. ``""`` and null ent1 are dropped
+    RAW, before normalizing: the pred path's ``""`` placeholder rows
+    are no mention, and their norm ``""`` would otherwise join the norm
+    group of punctuation-only surfaces such as ``!!``."""
+    from denrl_spark.operators.linking import normalize_surface
+
+    return (
+        trips.where(F.col("ent1") != "")
+        .groupBy(normalize_surface(F.col("ent1")).alias("norm"),
+                 F.col("ent1_tag").alias("typ"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .groupBy("norm")
+        .agg(
+            F.sum("n").cast("bigint").alias("n_mentions"),
+            F.count(F.lit(1)).cast("bigint").alias("n_types"),
+            F.min(
+                F.struct((-F.col("n")).alias("neg"), F.col("typ").alias("t"))
+            ).alias("_top"),
+        )
+        .join(cmap, "norm")
+        .select(
+            F.col("canonical_surface").alias("surface"), "n_mentions", "n_types",
+            F.col("_top.t").alias("top_type"),
+            (-F.col("_top.neg")).cast("bigint").alias("top_n"),
+        )
+    )
 
 
 def entity_type_profile_sql(rel: str = "documents") -> str:
@@ -2115,10 +2136,8 @@ def snapshot_diff(spark: SparkSession, sf_dir: str,
     window-partitioned log prunes to partitions <= t2."""
     if t1 >= t2:
         raise ValueError("snapshot_diff: t1 must be < t2")
-    ts = (F.lit(TS_EPOCH_BASE) + F.col("doc_id") * TS_SPACING_S).cast("bigint")
     return (
         _linked_rel_rows(spark, sf_dir)
-        .withColumn("ts", ts)
         .where(F.col("ts") <= t2)
         .groupBy("src_surface", F.col("ent2_tag").alias("pred"), "dst_surface")
         .agg(
@@ -2261,11 +2280,6 @@ def edge_recency(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         _linked_rel_rows(spark, sf_dir)
         .withColumn(
-            "ts",
-            (F.lit(TS_EPOCH_BASE) + F.col("doc_id") * TS_SPACING_S)
-            .cast("bigint"),
-        )
-        .withColumn(
             "contrib",
             F.expr(
                 "CAST(1000000 div shiftleft(CAST(1 AS BIGINT), "
@@ -2319,32 +2333,19 @@ def entity_cards(spark: SparkSession, sf_dir: str) -> DataFrame:
     same key, so the joins are co-partitioned; nothing here scans the
     observation log more than the two grains already required
     (mention grain + edge grain)."""
-    from denrl_spark.operators.graph import link_canonical
-    from denrl_spark.operators.linking import canonicalize
+    from denrl_spark.operators import linking
 
     # both grains are materialized while the triple cache lives: a lazy
     # part would re-run the extraction when the card is consumed
     trips = gold_triples_by_doc(spark, sf_dir).cache()
     try:
-        mmap = canonicalize(trips).select("surface", "canonical_surface")
+        cmap = linking.norm_map(linking.mention_surfaces(trips))
         prof = (
-            trips.join(mmap.withColumnsRenamed({"surface": "ent1"}), "ent1")
-            .groupBy(F.col("canonical_surface").alias("surface"),
-                     F.col("ent1_tag").alias("typ"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .groupBy("surface")
-            .agg(
-                F.sum("n").cast("bigint").alias("n_mentions"),
-                F.min(F.struct((-F.col("n")).alias("neg"),
-                               F.col("typ").alias("t"))).alias("_top"),
-            )
-            .select("surface", "n_mentions", F.col("_top.t").alias("top_type"))
+            _type_profile(trips, cmap)
+            .select("surface", "n_mentions", "top_type")
             .localCheckpoint()
         )
-        rel = link_canonical(trips, mmap).withColumn(
-            "ts",
-            (F.lit(TS_EPOCH_BASE) + F.col("doc_id") * TS_SPACING_S).cast("bigint"),
-        ).localCheckpoint()
+        rel = _link_observations(trips, cmap).localCheckpoint()
     finally:
         trips.unpersist()
 
@@ -2570,7 +2571,8 @@ def entity_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge_pmi trick), so both engines floor the identical double.
 
     Shape: the distinct (doc_id, entity) mention set is built once
-    (one canonicalize pass + one distinct) and localCheckpointed —
+    (one distinct (doc_id, norm) set joined to the norm map) and
+    localCheckpointed —
     it feeds the pair join AND both marginals without recomputing the
     extraction; pairs come from ONE self-equi-join on doc_id (AQE
     skew-splits hot docs) with the a.ent < b.ent residual, so each
@@ -2580,18 +2582,18 @@ def entity_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     deployment over an open KB would rank-cap entities per doc before
     the self-join (the provenance/adjacency cap pattern). Marginals
     are map-side-combined counts over the same checkpointed set."""
-    from denrl_spark.operators.linking import canonicalize
+    from denrl_spark.operators import linking
 
     trips = gold_triples_by_doc(spark, sf_dir).cache()
     try:
-        am = canonicalize(trips).select("surface", "canonical_surface")
+        cmap = linking.norm_map(linking.mention_surfaces(trips))
         ents = (
-            trips.select("doc_id", F.col("ent1").alias("surface"))
-            .unionByName(trips.select("doc_id", F.col("ent2").alias("surface")))
+            trips.select("doc_id", F.explode(F.array("ent1", "ent2")).alias("surface"))
             .where(F.col("surface") != "")
-            .join(am, "surface")
-            .select("doc_id", F.col("canonical_surface").alias("ent"))
+            .select("doc_id", linking.normalize_surface(F.col("surface")).alias("norm"))
             .distinct()
+            .join(cmap, "norm")
+            .select("doc_id", F.col("canonical_surface").alias("ent"))
             .localCheckpoint()
         )
     finally:

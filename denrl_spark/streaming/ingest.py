@@ -254,7 +254,7 @@ def stream_graph_deltas(
     ``materialize_graph`` exactly (test-asserted)."""
     from denrl_spark.operators.fused import extract_triples_fused
     from denrl_spark.operators.graph import observations
-    from denrl_spark.operators.linking import extract_mentions
+    from denrl_spark.operators.linking import mention_surfaces
     from denrl_spark.operators.tagging import sent_id_col
     from denrl_spark.sources.kb import KB
 
@@ -287,7 +287,7 @@ def stream_graph_deltas(
             for part, df in (
                 ("edges", edges),
                 ("vertices", verts),
-                ("mentions", extract_mentions(trips).select("surface")),
+                ("mentions", mention_surfaces(trips).where(F.col("surface") != "").distinct()),
                 ("sents", sents),
             ):
                 df.write.mode("overwrite").parquet(f"{sink_dir}/{part}/batch_id={batch_id}")

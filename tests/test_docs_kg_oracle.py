@@ -568,13 +568,13 @@ def test_per_surface_consumers_release_cache_on_failure(spark, monkeypatch, fn):
 
     seen = []
 
-    def failing_canonicalize(trips):
+    def failing_mention_surfaces(trips):
         seen.append(trips)
-        raise RuntimeError("canonicalize failed")
+        raise RuntimeError("mention_surfaces failed")
 
-    monkeypatch.setattr(linking, "canonicalize", failing_canonicalize)
+    monkeypatch.setattr(linking, "mention_surfaces", failing_mention_surfaces)
     before = set(spark.sparkContext._jsc.getPersistentRDDs())
-    with pytest.raises(RuntimeError, match="canonicalize failed"):
+    with pytest.raises(RuntimeError, match="mention_surfaces failed"):
         fn(spark, SF_DIR)
     assert set(spark.sparkContext._jsc.getPersistentRDDs()) <= before
     assert len(seen) == 1 and seen[0].storageLevel == StorageLevel.NONE

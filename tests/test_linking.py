@@ -5,9 +5,10 @@ import re
 from pyspark.sql import functions as F
 
 from denrl_spark.operators.graph import materialize_graph
-from denrl_spark.operators.linking import canonicalize, connected_components
+from denrl_spark.operators.linking import connected_components, mention_surfaces, norm_map
 from denrl_spark.operators.spans import assemble_triples
 from denrl_spark.operators.tagging import build_instances
+from denrl_spark.plans import docs_kg
 from denrl_spark.sources.corpus import transcripts
 from denrl_spark.sources.kb import KB
 
@@ -35,15 +36,12 @@ def test_canonicalize_merges_case_and_punct_variants(spark):
         ],
         "sent_id long, ent1 string, ent1_tag string, ent2 string, ent2_tag string",
     )
-    cmap = canonicalize(trips)
-    rows = cmap.collect()
-    alice = {r["surface"]: r["canonical_id"] for r in rows if "lice" in r["surface"]}
-    assert len(set(alice.values())) == 1 and len(alice) == 3
-    ny = {r["surface"]: r["canonical_id"] for r in rows if "ork" in r["surface"]}
-    assert len(set(ny.values())) == 1 and len(ny) == 2
-    # paris distinct from the others
-    all_ids = {r["canonical_id"] for r in rows}
-    assert len(all_ids) == 3
+    rows = norm_map(mention_surfaces(trips)).collect()
+    assert sorted(r["canonical_surface"] for r in rows) == [
+        "Alice Johnson", "New-York", "paris"
+    ]
+    assert {r["norm"] for r in rows} == {"alice johnson", "new york", "paris"}
+    assert len({r["canonical_id"] for r in rows}) == 3
 
 
 def test_materialize_graph_end_to_end(spark):
@@ -253,3 +251,68 @@ def test_tool_edges_derives_ngram_cap_from_kb(spark):
         ("maps", "york"): (3, 2),
         ("search", "york"): (1, 1),
     }
+
+
+def test_link_observations_and_type_profile_match_oracle(spark):
+    """docs_kg's linking rule on a hand-built doc-keyed frame ==
+    a pure-Python oracle (canonical surface = min surface per norm):
+    case variants merge, ``!!``/``??`` are one group of norm ``""``, a
+    null ent1 and a ``""`` ent2 on relation rows link to nothing, and a
+    ``""`` ent1 placeholder row (the pred path's) adds no mention to
+    the ``!!`` group's type profile. The lazy linked plan joins the map
+    twice, once per endpoint."""
+    rows = [
+        (1, "Alice", "PER", "Acme", "/per/works_at"),
+        (2, "alice", "PER", "ACME", "/per/works_at"),
+        (3, "Bob", "PER", "alice", "/per/knows"),
+        (4, "!!", "X", "??", "/x/y"),
+        (5, "??", "Y", "!!", "/x/y"),
+        (6, None, "PER", "Acme", "/per/works_at"),
+        (7, "Bob", "PER", "", "/per/lived"),
+        (8, "", "O", "", "O"),
+        (8, "", "O", "??", "O"),
+        (9, "acme", "ORG", "Bob", "ORG"),
+    ]
+    trips = spark.createDataFrame(
+        rows, "doc_id bigint, ent1 string, ent1_tag string, ent2 string, ent2_tag string"
+    )
+
+    def norm(s):
+        return " ".join(re.sub(r"[^a-z0-9]+", " ", s.lower()).split())
+
+    surfaces = {s for r in rows for s in (r[1], r[3]) if s}
+    canon = {s: min(t for t in surfaces if norm(t) == norm(s)) for s in surfaces}
+    exp_link = sorted(
+        (doc, canon[e1], t2, canon[e2],
+         docs_kg.TS_EPOCH_BASE + doc * docs_kg.TS_SPACING_S)
+        for doc, e1, _, e2, t2 in rows
+        if "/" in t2 and e1 and e2
+    )
+    by_type: dict[str, dict[str, int]] = {}
+    for _, e1, t1, _, _ in rows:
+        if e1:
+            n = by_type.setdefault(canon[e1], {})
+            n[t1] = n.get(t1, 0) + 1
+    exp_prof = {}
+    for c, n in by_type.items():
+        top = min(n, key=lambda t: (-n[t], t))
+        exp_prof[c] = (sum(n.values()), len(n), top, n[top])
+    assert canon["??"] == "!!" and canon["alice"] == "Alice"
+    assert exp_prof["!!"] == (2, 2, "X", 1)
+    assert exp_prof["ACME"] == (1, 1, "ORG", 1)
+    assert len(exp_link) == 5
+
+    cmap = norm_map(mention_surfaces(trips))
+    linked = docs_kg._link_observations(trips, cmap)
+    got_link = sorted(
+        (r["doc_id"], r["src_surface"], r["ent2_tag"], r["dst_surface"], r["ts"])
+        for r in linked.collect()
+    )
+    assert got_link == exp_link
+    plan = linked._jdf.queryExecution().optimizedPlan().toString()
+    assert len(re.findall(r"\bJoin ", plan)) == 2, plan
+    got_prof = {
+        r["surface"]: (r["n_mentions"], r["n_types"], r["top_type"], r["top_n"])
+        for r in docs_kg._type_profile(trips, cmap).collect()
+    }
+    assert got_prof == exp_prof

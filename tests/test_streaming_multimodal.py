@@ -652,12 +652,14 @@ def test_stream_near_dedup_restart_after_compaction(spark, tmp_path):
 
 def test_stream_windowed_edges_view_equals_batch(spark, transcript_dir, tmp_path):
     """The windowed compaction view over the streamed delta log equals
-    the batch windowed rollup (canonicalize + link + window-group over
-    the full corpus) — the temporal-KG surface is maintained
+    the batch windowed rollup (link by norm + window-group over the
+    full corpus, recomputed in Python with canonical surface = min
+    surface per norm) — the temporal-KG surface is maintained
     incrementally without semantic drift, including after claims-log
     compaction."""
-    from denrl_spark.operators.graph import link_canonical
-    from denrl_spark.operators.linking import canonicalize
+    import re
+    from collections import Counter
+
     from denrl_spark.operators.spans import assemble_triples
     from denrl_spark.operators.tagging import build_instances
     from denrl_spark.sources.kb import KB
@@ -693,11 +695,7 @@ def test_stream_windowed_edges_view_equals_batch(spark, transcript_dir, tmp_path
 
     batch = spark.read.parquet(transcript_dir)
     ins = build_instances(batch, kb).cache()
-    trips = assemble_triples(ins).cache()
-    trips.count()
-    mmap = canonicalize(trips).select("surface", "canonical_surface").cache()
-    mmap.count()
-    sents = (
+    sents = dict(
         ins.select("conv_id", "turn_idx", "sent_id").distinct()
         .join(
             batch.select(
@@ -707,24 +705,25 @@ def test_stream_windowed_edges_view_equals_batch(spark, transcript_dir, tmp_path
             ["conv_id", "turn_idx"],
         )
         .select("sent_id", "ts")
-    )
-    expect = {
-        tuple(r)
-        for r in link_canonical(trips, mmap)
-        .join(sents, "sent_id")
-        .withColumn(
-            "win_start", F.expr(f"CAST(ts div {win_s} * {win_s} AS BIGINT)")
-        )
-        .groupBy(
-            "win_start", "src_surface", F.col("ent2_tag").alias("pred"),
-            "dst_surface",
-        )
-        .agg(F.count(F.lit(1)).alias("n_obs"))
         .collect()
-    }
-    mmap.unpersist()
-    trips.unpersist()
+    )
+    rows = assemble_triples(ins).select("sent_id", "ent1", "ent2", "ent2_tag").collect()
     ins.unpersist()
+
+    def norm(s):
+        return " ".join(re.sub(r"[\W_]+", " ", s.lower()).split())
+
+    surfaces = {s for r in rows for s in (r["ent1"], r["ent2"]) if s}
+    canon = {s: min(t for t in surfaces if norm(t) == norm(s)) for s in surfaces}
+    expect = {
+        (*key, n)
+        for key, n in Counter(
+            (sents[r["sent_id"]] // win_s * win_s, canon[r["ent1"]],
+             r["ent2_tag"], canon[r["ent2"]])
+            for r in rows
+            if "/" in r["ent2_tag"] and r["ent1"] and r["ent2"]
+        ).items()
+    }
     assert len(got) > 1 and got == expect
     # multiple windows genuinely exercised (ts spacing vs win_s)
     assert len({w for w, *_ in got}) > 1
