@@ -20,12 +20,15 @@ from pyspark.sql import DataFrame, SparkSession
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: gold-path triple extraction at sf0.001 (fused operator:
     text in, (sent_id, ent1, ent1_tag, ent2, ent2_tag) out, one Arrow
-    pass; equivalence with the modular chain is test-asserted)."""
+    pass; equivalence with the modular chain is test-asserted). The
+    kernel's trailing (conv_id, turn_idx) turn key is not selected."""
     from denrl_spark.operators.fused import extract_triples_fused
     from denrl_spark.plans.docs_kg import docs_kb, transcripts_from_documents
 
     tr = transcripts_from_documents(spark, "/root/testdata/sf0.001")
-    return extract_triples_fused(tr, docs_kb(), mode="gold", n_partitions=0)
+    return extract_triples_fused(tr, docs_kb(), mode="gold", n_partitions=0).select(
+        "sent_id", "ent1", "ent1_tag", "ent2", "ent2_tag"
+    )
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

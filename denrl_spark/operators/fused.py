@@ -7,8 +7,9 @@ JVM<->Python Arrow boundary three times. That traffic — not compute —
 was the measured scaling ceiling (memory-bandwidth-bound at high worker
 counts). This operator is the extraction path's whole-stage-codegen
 analog: text goes in, (sent_id, ent1, ent1_tag, ent2, ent2_tag) comes
-out, and all intermediate structures live in Python worker memory for
-one sentence at a time.
+out with each sentence's own (conv_id, turn_idx) key appended
+(``spans.TRIPLE_SCHEMA``), and all intermediate structures live in
+Python worker memory for one sentence at a time.
 
 Semantics are EXACTLY the modular path's (tests assert multiset
 equality per sentence); the r6 interior is vectorized end to end:
@@ -58,7 +59,7 @@ from denrl_spark.operators.scoring import (
     build_label_list,
     viterbi_batch,
 )
-from denrl_spark.operators.spans import TRIPLE_SCHEMA
+from denrl_spark.operators.spans import TRIPLE_COLUMNS, TRIPLE_SCHEMA
 from denrl_spark.operators.tagging import (
     MAX_TOKENS,
     find_entity_spans,
@@ -180,40 +181,39 @@ class _KBTables:
 
 
 class _ColBuf:
-    """Columnar triple accumulator (object arrays -> one DataFrame)."""
+    """Columnar triple accumulator (object arrays -> one DataFrame).
+    Each triple records its sentence's row in the Arrow batch; the key
+    columns are gathered from those rows once per output frame."""
 
-    __slots__ = ("sid", "e1", "t1", "e2", "t2")
+    __slots__ = ("row", "e1", "t1", "e2", "t2")
 
     def __init__(self):
-        self.sid, self.e1, self.t1, self.e2, self.t2 = [], [], [], [], []
+        self.row, self.e1, self.t1, self.e2, self.t2 = [], [], [], [], []
 
-    def add(self, sid_a, e1_a, t1_a, e2_a, t2_a):
-        self.sid.append(sid_a)
+    def add(self, row_a, e1_a, t1_a, e2_a, t2_a):
+        self.row.append(row_a)
         self.e1.append(e1_a)
         self.t1.append(t1_a)
         self.e2.append(e2_a)
         self.t2.append(t2_a)
 
-    def frame(self) -> pd.DataFrame:
-        if not self.sid:
-            return pd.DataFrame(
-                {
-                    "sent_id": np.array([], dtype=np.int64),
-                    "ent1": np.array([], dtype=object),
-                    "ent1_tag": np.array([], dtype=object),
-                    "ent2": np.array([], dtype=object),
-                    "ent2_tag": np.array([], dtype=object),
-                }
-            )
-        return pd.DataFrame(
-            {
-                "sent_id": np.concatenate(self.sid),
-                "ent1": np.concatenate(self.e1),
-                "ent1_tag": np.concatenate(self.t1),
-                "ent2": np.concatenate(self.e2),
-                "ent2_tag": np.concatenate(self.t2),
-            }
+    def frame(self, pdf: pd.DataFrame) -> pd.DataFrame:
+        """The buffered triples of batch ``pdf``: sent_id hashed once per
+        sentence, conv_id and turn_idx gathered from its row."""
+        if not self.row:
+            self.add(np.empty(0, dtype=np.int64), *[np.empty(0, dtype=object)] * 4)
+        row, e1, t1, e2, t2 = (
+            np.concatenate(p) for p in (self.row, self.e1, self.t1, self.e2, self.t2)
         )
+        conv = pdf["conv_id"].to_numpy()[row]
+        turn = pdf["turn_idx"].to_numpy()[row]
+        _, first, inv = np.unique(row, return_index=True, return_inverse=True)
+        sid = np.fromiter(
+            (stable_id(c, int(t)) for c, t in zip(conv[first], turn[first])),
+            dtype=np.int64,
+            count=len(first),
+        )[inv]
+        return pd.DataFrame(dict(zip(TRIPLE_COLUMNS, (sid, e1, t1, e2, t2, conv, turn))))
 
 
 _EMPTY_E2 = np.array([""], dtype=object)
@@ -221,14 +221,13 @@ _NONE_T2 = np.array(["None"], dtype=object)
 
 
 def _tag_batch(pdf: pd.DataFrame, kb: KB, tab: _KBTables) -> list[tuple]:
-    """One tagging pass over an Arrow batch: (sid, tokens, ss, ee, sidx)
-    per surviving sentence (same filters as instances_and_spans_for_turn:
-    empty / >MAX_TOKENS turns and span-free turns drop)."""
+    """One tagging pass over an Arrow batch: (row, tokens, ss, ee, sidx)
+    per surviving sentence, ``row`` its position in ``pdf`` (same
+    filters as instances_and_spans_for_turn: empty / >MAX_TOKENS turns
+    and span-free turns drop)."""
     sents = []
     surf_id = tab.surf_id
-    for conv_id, turn_idx, text in zip(
-        pdf["conv_id"], pdf["turn_idx"], pdf["text"]
-    ):
+    for row, text in enumerate(pdf["text"]):
         tokens = tokenize(text)
         if not tokens or len(tokens) > MAX_TOKENS:
             continue
@@ -241,7 +240,7 @@ def _tag_batch(pdf: pd.DataFrame, kb: KB, tab: _KBTables) -> list[tuple]:
         sidx = np.fromiter(
             (surf_id[sp[2]] for sp in spans), dtype=np.int64, count=k
         )
-        sents.append((stable_id(conv_id, int(turn_idx)), tokens, ss, ee, sidx))
+        sents.append((row, tokens, ss, ee, sidx))
     return sents
 
 
@@ -249,11 +248,11 @@ def _emit_gold(sents: list[tuple], tab: _KBTables, buf: _ColBuf) -> None:
     """Direct span-pair emission (see module docstring: exact fold/merge
     order and values, proven against the dict path)."""
     words, types = tab.words, tab.types
-    for sid, _tokens, _ss, _ee, sidx in sents:
+    for row, _tokens, _ss, _ee, sidx in sents:
         k = len(sidx)
         if k == 1:
             buf.add(
-                np.full(1, sid, dtype=np.int64),
+                np.full(1, row, dtype=np.int64),
                 words[sidx],
                 types[sidx],
                 _EMPTY_E2,
@@ -263,7 +262,7 @@ def _emit_gold(sents: list[tuple], tab: _KBTables, buf: _ColBuf) -> None:
         ii, jj = tab.pair_index(k)
         si, sj = sidx[ii], sidx[jj]
         buf.add(
-            np.full(len(ii), sid, dtype=np.int64),
+            np.full(len(ii), row, dtype=np.int64),
             words[si],
             types[si],
             words[sj],
@@ -287,7 +286,7 @@ def _decode_chunk(
     rows_l, toks_l, labs_l = [], [], []
     base = 0
     for si in chunk:
-        _sid, tokens, ss, ee, sidx = sents[si]
+        _row, tokens, ss, ee, sidx = sents[si]
         k = len(sidx)
         lengths[base : base + k] = len(tokens)
         if tab.dense:
@@ -384,7 +383,7 @@ def _emit_pred_sentence(
     a bijection of the original sorted-index-tuple keys; the no-query
     placeholder keeps the original's collision with a single-token group
     at the query position via the (q, q+1) key)."""
-    sid, tokens, ss, ee, sidx = sent
+    row, tokens, ss, ee, sidx = sent
     k = len(sidx)
     if all(
         len(d[0]) == k
@@ -395,7 +394,7 @@ def _emit_pred_sentence(
         lstr = tab.lab_type[np.stack([d[2] for d in decs])]  # (k inst, k grp)
         if k == 1:
             buf.add(
-                np.full(1, sid, dtype=np.int64),
+                np.full(1, row, dtype=np.int64),
                 tab.words[sidx],
                 lstr[0, 0:1],
                 _EMPTY_E2,
@@ -404,7 +403,7 @@ def _emit_pred_sentence(
         else:
             ii, jj = tab.pair_index(k)
             buf.add(
-                np.full(len(ii), sid, dtype=np.int64),
+                np.full(len(ii), row, dtype=np.int64),
                 tab.words[sidx[ii]],
                 lstr[ii, ii],
                 tab.words[sidx[jj]],
@@ -441,25 +440,23 @@ def _emit_pred_sentence(
             d_["entity_group"] = "None"
             d_["word"] = ""
             d_["related_ent"] = related
-    sid_l, e1_l, t1_l, e2_l, t2_l = [], [], [], [], []
+    e1_l, t1_l, e2_l, t2_l = [], [], [], []
     for _, items in ent_dict.items():
         t1_, w1 = items["entity_group"], items["word"]
         rel = items["related_ent"]
         if not rel:
-            sid_l.append(sid)
             e1_l.append(w1)
             t1_l.append(t1_)
             e2_l.append("")
             t2_l.append("None")
         else:
             for _, (t2_, w2) in rel.items():
-                sid_l.append(sid)
                 e1_l.append(w1)
                 t1_l.append(t1_)
                 e2_l.append(w2)
                 t2_l.append(t2_)
     buf.add(
-        np.array(sid_l, dtype=np.int64),
+        np.full(len(e1_l), row, dtype=np.int64),
         np.array(e1_l, dtype=object),
         np.array(t1_l, dtype=object),
         np.array(e2_l, dtype=object),
@@ -505,7 +502,8 @@ def extract_triples_fused(
     mode: str = "gold",
     n_partitions: int | None = None,
 ) -> DataFrame:
-    """transcripts(conv_id, turn_idx, text) -> triples, single pass.
+    """transcripts(conv_id, turn_idx, text) -> ``TRIPLE_SCHEMA`` triples,
+    single pass; each triple carries its turn's (conv_id, turn_idx).
 
     ``n_partitions``: None (default) hash-repartitions to cluster
     parallelism, one Arrow Python task per core — the safety net for
@@ -545,6 +543,6 @@ def extract_triples_fused(
                     _emit_gold(sents, tab, buf)
                 else:
                     _emit_pred(sents, tab, buf)
-            yield buf.frame()
+            yield buf.frame(pdf)
 
     return cols.mapInPandas(gen, TRIPLE_SCHEMA)

@@ -50,8 +50,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 PR_DAMPING = 0.85
 
 
-def iterate(state, step, rounds: int, until=None, *, name: str = "iterate",
-            strict: bool = True):
+def iterate(state, step, rounds: int, until=None, *, name: str = "iterate"):
     """Run ``step`` (lazy plan in, lazy plan out) for at most ``rounds``
     rounds in the driver, with an EAGER ``localCheckpoint`` of each new
     state: lineage stays O(1) per round instead of compounding (the
@@ -66,8 +65,7 @@ def iterate(state, step, rounds: int, until=None, *, name: str = "iterate",
     match converged or not. With it, ``until(old, new)`` is evaluated
     after every checkpoint and True returns early; a budget that runs
     out first raises RuntimeError naming the operator rather than
-    returning a partial fixpoint (``strict=False`` returns the last
-    state instead)."""
+    returning a partial fixpoint."""
     for _ in range(rounds):
         new = step(state)
         new = (tuple(f.localCheckpoint() for f in new)
@@ -76,7 +74,7 @@ def iterate(state, step, rounds: int, until=None, *, name: str = "iterate",
         state = new
         if done:
             return state
-    if until is not None and strict:
+    if until is not None:
         raise RuntimeError(f"{name} did not converge in {rounds} rounds")
     return state
 

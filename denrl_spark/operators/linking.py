@@ -63,7 +63,7 @@ def norm_map(surfaces: DataFrame) -> DataFrame:
 
 
 def connected_components(
-    nodes: DataFrame, edges: DataFrame, max_iter: int = 12, strict: bool = True
+    nodes: DataFrame, edges: DataFrame, max_iter: int = 12
 ) -> DataFrame:
     """(node_id) x (src, dst) -> (node_id, component) via min-label
     propagation. Deterministic; component = min node_id in component.
@@ -71,7 +71,7 @@ def connected_components(
     Converges in O(diameter) rounds — the callers' graphs (LSH bucket
     stars, near-duplicate cliques, KG components) are shallow, and
     ``max_iter`` bounds the diameter, not the size. If the fixpoint is
-    NOT reached within max_iter, ``strict`` raises rather than silently
+    NOT reached within max_iter, it raises rather than silently
     returning partially-merged components."""
     from denrl_spark.operators.graph_analytics import iterate, no_change
 
@@ -97,5 +97,5 @@ def connected_components(
         )
 
     return iterate(labels, adopt_min, max_iter, no_change("node_id", "component"),
-                   name="connected_components", strict=strict)
+                   name="connected_components")
 

@@ -20,9 +20,10 @@ The per-sentence fold is insertion-order-sensitive, so the Spark wrapper
 imposes explicit ordering (sort by query_id, instance_id within each
 sent_id group) — SURVEY.md §7 "order-sensitive assembly".
 
-Spark surface: ``groupBy(sent_id).applyInPandas`` — distributed by
-sentence, Arrow-batched, emits only triples (never the O(T^2) logits
-tensor, SURVEY.md §4).
+Spark surface: ``repartition(sent_id)`` + ``mapInPandas`` over sorted
+sentence runs (``assemble_triples``) — distributed by sentence,
+Arrow-batched, emits only triples (never the O(T^2) logits tensor,
+SURVEY.md §4).
 """
 
 from __future__ import annotations
@@ -31,9 +32,14 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 
+# The one triple format: the five DENRL columns, then the turn key
+# (conv_id, turn_idx) that sent_id = stable_id(conv_id, turn_idx) hashes,
+# so a consumer that needs the turn back reads it instead of re-hashing.
 TRIPLE_SCHEMA = (
-    "sent_id bigint, ent1 string, ent1_tag string, ent2 string, ent2_tag string"
+    "sent_id bigint, ent1 string, ent1_tag string, ent2 string, ent2_tag string, "
+    "conv_id string, turn_idx int"
 )
+TRIPLE_COLUMNS = [f.split(" ")[0] for f in TRIPLE_SCHEMA.split(", ")]
 
 
 def group_spans(tokens: list[str], tags: list[str]) -> list[dict]:
@@ -133,9 +139,11 @@ def assemble_triples(
 ) -> DataFrame:
     """Instance table -> triples table, grouped per sentence.
 
-    Emits (sent_id, ent1, ent1_tag, ent2, ent2_tag) with reference
-    duplicate/order semantics. ``tags_col`` selects gold tags or a
-    predicted-tags column so the same assembler serves both paths.
+    Emits ``TRIPLE_SCHEMA`` rows, (sent_id, ent1, ent1_tag, ent2,
+    ent2_tag) with reference duplicate/order semantics plus the
+    sentence's own (conv_id, turn_idx), which every instance row
+    carries. ``tags_col`` selects gold tags or a predicted-tags column
+    so the same assembler serves both paths.
 
     Physical shape: repartition by sent_id + sortWithinPartitions +
     ``mapInPandas`` streaming over contiguous sentence runs. This is the
@@ -154,17 +162,13 @@ def assemble_triples(
     the widest columns (tokens/tags arrays) through disk; it is the
     co-partitioning-reuse pattern (partition once, flow through).
     """
-    if assume_grouped:
-        cols = instances_df.select(
-            "sent_id", "instance_id", "query_id", "tokens", tags_col
-        )
-    else:
-        spark = instances_df.sparkSession
-        n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        cols = (
-            instances_df.select("sent_id", "instance_id", "query_id", "tokens", tags_col)
-            .repartition(n_part, "sent_id")
-            .sortWithinPartitions("sent_id", "query_id", "instance_id")
+    cols = instances_df.select(
+        "sent_id", "instance_id", "query_id", "tokens", tags_col, "conv_id", "turn_idx"
+    )
+    if not assume_grouped:
+        n_part = int(instances_df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        cols = cols.repartition(n_part, "sent_id").sortWithinPartitions(
+            "sent_id", "query_id", "instance_id"
         )
 
     def gen(batches):
@@ -173,11 +177,11 @@ def assemble_triples(
         def flush(rows: list[tuple]):
             ins = [
                 {"query_id": int(q), "tokens": list(t), "ner_tags": list(g)}
-                for (_, q, t, g) in rows
+                for (_, q, t, g, _, _) in rows
             ]
-            sid = int(rows[0][0])
+            sid, _, _, _, conv, turn = rows[0]
             return [
-                (sid, d["ent1"], d["ent1_tag"], d["ent2"], d["ent2_tag"])
+                (int(sid), d["ent1"], d["ent1_tag"], d["ent2"], d["ent2_tag"], conv, int(turn))
                 for d in sentence_triples(ins)
             ]
 
@@ -187,19 +191,16 @@ def assemble_triples(
             qids = pdf["query_id"].to_numpy()
             toks = pdf["tokens"].to_numpy()
             tags = pdf[tags_col].to_numpy()
+            convs = pdf["conv_id"].to_numpy()
+            turns = pdf["turn_idx"].to_numpy()
             for i in range(len(sids)):
-                row = (sids[i], qids[i], toks[i], tags[i])
+                row = (sids[i], qids[i], toks[i], tags[i], convs[i], turns[i])
                 if carry and carry[0][0] != row[0]:
                     out.extend(flush(carry))
                     carry = []
                 carry.append(row)
-            yield pd.DataFrame(
-                out, columns=["sent_id", "ent1", "ent1_tag", "ent2", "ent2_tag"]
-            )
+            yield pd.DataFrame(out, columns=TRIPLE_COLUMNS)
         if carry:
-            yield pd.DataFrame(
-                flush(carry),
-                columns=["sent_id", "ent1", "ent1_tag", "ent2", "ent2_tag"],
-            )
+            yield pd.DataFrame(flush(carry), columns=TRIPLE_COLUMNS)
 
     return cols.mapInPandas(gen, TRIPLE_SCHEMA)

@@ -16,6 +16,10 @@ transcript table by aligning KB seed triples onto whitespace tokens:
 All ids are content-derived (blake2b of the row key), so the table is
 identical under any partitioning and needs no global coordination — the
 property that lets this run at 10^12 turns without a zipWithIndex barrier.
+Spark SQL has no blake2b, so ``stable_id`` runs only inside the Arrow
+kernels; every row that carries a sent_id also carries the
+(conv_id, turn_idx) it hashes, and a consumer that needs the turn back
+reads those columns instead of re-hashing.
 
 Spark surface: one Arrow-batched ``mapInPandas`` emitting exploded
 instance rows; everything else is built-in DataFrame ops.
@@ -27,7 +31,7 @@ import hashlib
 
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 
 from denrl_spark.sources.kb import KB
 
@@ -48,23 +52,6 @@ def stable_id(*parts) -> int:
     """Content-derived non-negative int62 (partition-invariant)."""
     h = hashlib.blake2b(":".join(str(p) for p in parts).encode(), digest_size=8)
     return int.from_bytes(h.digest(), "big") & ((1 << 62) - 1)
-
-
-def sent_id_col(conv_id, turn_idx) -> Column:
-    """The sentence key ``stable_id(conv_id, turn_idx)`` as a Spark
-    column, the key every extraction path gives a turn's triples. The
-    hash is blake2b, which Spark SQL lacks, so this is a pandas_udf:
-    one hash per TURN, the per-turn cost the tagging UDF already pays.
-    The one place the key is wrapped as a column."""
-    from pyspark.sql import functions as F
-
-    @F.pandas_udf("long")
-    def sid(conv, turn):  # (pd.Series, pd.Series) -> pd.Series; hints
-        # omitted: `from __future__ import annotations` stringifies them,
-        # which the pandas_udf type-hint inference rejects
-        return pd.Series([stable_id(c, int(t)) for c, t in zip(conv, turn)])
-
-    return sid(conv_id, turn_idx)
 
 
 _KB_INDEX_CACHE: "weakref.WeakKeyDictionary[KB, dict]" = None  # type: ignore[assignment]

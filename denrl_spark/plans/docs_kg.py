@@ -298,24 +298,18 @@ def topk_patterns_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sent_doc_map(tr: DataFrame) -> DataFrame:
-    """(sent_id, doc_id) mapping for the documents-derived corpus.
-
-    sent_id is the engine's content hash (``tagging.sent_id_col``,
-    blake2b) — not expressible in ANSI SQL — so oracle-checkable
-    variants join the triple table back to doc_id through this map. One
-    row per turn; the join is a plain equi-join on sent_id (AQE
-    broadcasts it at test scale; at cluster scale it shuffles like any
-    fact-to-fact join)."""
-    from denrl_spark.operators.tagging import sent_id_col
-
-    return tr.select(
-        sent_id_col("conv_id", "turn_idx").alias("sent_id"),
+def _by_doc(trips: DataFrame) -> DataFrame:
+    """Triples re-keyed to the documents corpus: ``doc_id`` from each
+    triple's own (conv_id, turn_idx), the inverse of
+    ``transcripts_from_documents``' conv = doc_id // 4, turn = doc_id % 4,
+    so every column is ANSI-SQL-typed."""
+    return trips.select(
         # substring to end-of-string (not a fixed 8): conv indices can
         # exceed 8 digits at scale (see transcripts_from_documents)
         (F.expr("substring(conv_id, 6)").cast("long") * 4 + F.col("turn_idx")).alias(
             "doc_id"
         ),
+        "ent1", "ent1_tag", "ent2", "ent2_tag",
     )
 
 
@@ -324,18 +318,14 @@ def gold_triples_by_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Runs the FULL fused extraction (tagging -> instance fold -> span
     grouping -> triple assembly, reference run_jointmodel.py:845-933),
-    then re-keys sent_id -> doc_id so every column is ANSI-SQL-typed.
+    then keys each triple by the doc_id of its own turn (``_by_doc``).
     The DuckDB twin (gold_triples_by_doc_sql) re-derives the same
     semantics relationally — valid because the documents KB is
     single-token (span grouping degenerates to token equality)."""
     from denrl_spark.operators.fused import extract_triples_fused
 
     tr = transcripts_from_documents(spark, sf_dir)
-    trips = extract_triples_fused(tr, docs_kb(), mode="gold", n_partitions=0)
-    m = _sent_doc_map(tr)
-    return trips.join(m, "sent_id").select(
-        "doc_id", "ent1", "ent1_tag", "ent2", "ent2_tag"
-    )
+    return _by_doc(extract_triples_fused(tr, docs_kb(), mode="gold", n_partitions=0))
 
 
 def _ent_values_sql() -> str:
@@ -398,11 +388,7 @@ def pred_triples_by_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from denrl_spark.operators.fused import extract_triples_fused
 
     tr = transcripts_from_documents(spark, sf_dir)
-    trips = extract_triples_fused(tr, docs_kb(), mode="pred", n_partitions=0)
-    m = _sent_doc_map(tr)
-    return trips.join(m, "sent_id").select(
-        "doc_id", "ent1", "ent1_tag", "ent2", "ent2_tag"
-    )
+    return _by_doc(extract_triples_fused(tr, docs_kb(), mode="pred", n_partitions=0))
 
 
 def pred_triples_numeric_by_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -430,9 +416,9 @@ def pred_triples_numeric_by_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape: build_instances -> one Arrow scoring pass (encoder + kernel
     cached per SENTENCE inside the UDF) -> assemble_triples' own
-    repartition(sent_id) + sortWithinPartitions grouping -> equi-join to
-    the doc map. Same scale shape as the fused path plus the numeric
-    kernels' O(T^2.H) per sentence, T <= 512 by F1."""
+    repartition(sent_id) + sortWithinPartitions grouping -> doc_id from
+    each triple's carried turn key. Same scale shape as the fused path
+    plus the numeric kernels' O(T^2.H) per sentence, T <= 512 by F1."""
     from denrl_spark.operators.encoder import EncoderWeights
     from denrl_spark.operators.position_attention import (
         PositionAttentionWeights,
@@ -455,11 +441,7 @@ def pred_triples_numeric_by_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = scored.where(
         (F.size("position_att") == 0) | (F.abs(att_sum - F.lit(1.0)) < 1e-3)
     )
-    trips = assemble_triples(scored, tags_col="pred_tags")
-    m = _sent_doc_map(tr)
-    return trips.join(m, "sent_id").select(
-        "doc_id", "ent1", "ent1_tag", "ent2", "ent2_tag"
-    )
+    return _by_doc(assemble_triples(scored, tags_col="pred_tags"))
 
 
 def build_graph(trips: DataFrame, eager: str) -> tuple[DataFrame, DataFrame]:

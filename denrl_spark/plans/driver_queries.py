@@ -32,8 +32,9 @@ ORACLES: dict[str, str] = {}
 # — the engine-internal content-hash keys cannot be value-hashed
 # cross-engine, so in the contract they could only ever be rows-only
 # checks of paths whose FULL semantics the *_by_doc variants already
-# hash-verify (same fused extraction, same materialize_graph, re-keyed
-# through _sent_doc_map). Keeping them contract-registered added four
+# hash-verify (same fused extraction, same materialize_graph; the
+# *_by_doc variants key each triple by the doc_id of the turn key it
+# carries, docs_kg._by_doc). Keeping them contract-registered added four
 # permanent `no_oracle` entries for zero extra verification; here they
 # stay benchmarked and pytest-equality-checked against their oracled
 # twins (tests/test_docs_kg_oracle.py::test_raw_paths_match_by_doc_twins).
@@ -3559,29 +3560,7 @@ def sim_recall_eval(spark, sf_dir):
     beyond the index probes themselves. At 100 TB you run it on a
     sampled query set; the sample bound is the knob, not the shape."""
     emb = _t(spark, sf_dir, "embeddings")
-    q = emb.where("vec_id < 8")
-    exact = cosine_topk(emb, q, k=3).select("query_id", "neighbor_id")
-    ann = (
-        lsh_topk(emb, q, k=3)
-        .select("query_id", "neighbor_id")
-        .withColumn("hit", F.lit(1))
-    )
-    return (
-        exact.join(ann, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("k_exact"),
-            F.sum(F.coalesce("hit", F.lit(0))).cast("bigint").alias("n_hit"),
-        )
-        .select(
-            "query_id",
-            "k_exact",
-            "n_hit",
-            F.floor((1_000_000 * F.col("n_hit")) / F.col("k_exact"))
-            .cast("long")
-            .alias("recall_ppm"),
-        )
-    )
+    return _recall_eval(emb, lsh_topk(emb, emb.where("vec_id < 8"), k=3))
 
 
 @_q(
@@ -5204,12 +5183,12 @@ _RECALL_EVAL_SQL = """
 """
 
 
-def _recall_eval(spark, sf_dir, ann: DataFrame) -> DataFrame:
-    """Shared recall@k evaluator: exact cosine top-k LEFT-joined to an
-    index's top-k on (query_id, neighbor_id), per-query recall in
-    exact integer ppm (the sim_recall_eval shape, factored so every
-    registered index evaluates through the identical comparison)."""
-    emb = _t(spark, sf_dir, "embeddings")
+def _recall_eval(emb: DataFrame, ann: DataFrame) -> DataFrame:
+    """Shared recall@k evaluator: exact cosine top-k over ``emb`` (the
+    index's own embeddings scan, so the table is read once) LEFT-joined
+    to the index's top-k on (query_id, neighbor_id), per-query recall
+    in exact integer ppm — every registered index (LSH, IVF, PQ)
+    evaluates through this one comparison."""
     q = emb.where("vec_id < 8")
     exact = cosine_topk(emb, q, k=3).select("query_id", "neighbor_id")
     a = ann.select("query_id", "neighbor_id").withColumn("hit", F.lit(1))
@@ -5245,9 +5224,7 @@ def sim_ivf_recall(spark, sf_dir):
     sim_knn_probe. Shape: two index subplans + one k-bounded equi-join
     + one query-keyed aggregate — eval costs no more than the probes."""
     emb = _t(spark, sf_dir, "embeddings")
-    return _recall_eval(
-        spark, sf_dir, similarity.ivf_topk(emb, emb.where("vec_id < 8"), k=3)
-    )
+    return _recall_eval(emb, similarity.ivf_topk(emb, emb.where("vec_id < 8"), k=3))
 
 
 @_q(
@@ -5263,9 +5240,8 @@ def sim_pq_recall(spark, sf_dir):
     monitor: falling PQ recall after a codebook rebuild means the
     subspace quantizers stopped covering the corpus. Same shared
     evaluator shape as sim_ivf_recall / sim_recall_eval."""
-    return _recall_eval(
-        spark, sf_dir, similarity.pq_adc_topk(_t(spark, sf_dir, "embeddings"))
-    )
+    emb = _t(spark, sf_dir, "embeddings")
+    return _recall_eval(emb, similarity.pq_adc_topk(emb))
 
 
 @_q("kg_transitive_edges", docs_kg.transitive_edges_sql())

@@ -245,7 +245,10 @@ def stream_graph_deltas(
       every mention, not just relation rows;
     - ``sents/batch_id=N``: (sent_id, ts) of each sentence that yields
       a triple, its turn's epoch-second ts — the operand the windowed
-      view joins to recover each edge observation's window.
+      view joins to recover each edge observation's window. The
+      triples carry their turn key, so the delta is their
+      (sent_id, conv_id, turn_idx) joined to the micro-batch's
+      (conv_id, turn_idx, ts), one row per sentence.
 
     Edge and vertex deltas are ``graph.observations`` pre-counted, so
     they pass the batch build's endpoint filter and
@@ -255,7 +258,6 @@ def stream_graph_deltas(
     from denrl_spark.operators.fused import extract_triples_fused
     from denrl_spark.operators.graph import observations
     from denrl_spark.operators.linking import mention_surfaces
-    from denrl_spark.operators.tagging import sent_id_col
     from denrl_spark.sources.kb import KB
 
     kb = kb or KB.default()
@@ -276,14 +278,23 @@ def stream_graph_deltas(
             verts = vertex_obs.groupBy("surface", "etype").agg(
                 F.sum("cnt").alias("cnt")
             )
-            # a sentence is one turn, so keying the turns gives one row
-            # per sentence; the semi-join keeps the sentences that
-            # yield a triple (a turn without an entity span yields
-            # none), so span-free turns do not grow the log
-            sents = batch_df.select(
-                sent_id_col("conv_id", "turn_idx").alias("sent_id"),
-                F.unix_timestamp("ts").cast("bigint").alias("ts"),
-            ).join(trips.select("sent_id"), "sent_id", "left_semi")
+            # a sentence is one turn: the triples' carried turn key
+            # co-grouped with the micro-batch's turns gives one row per
+            # sentence that yields a triple (span-free turns yield none
+            # and do not grow the log). One exchange serves both the
+            # dedup and the join, so the write runs no extra job.
+            null = F.lit(None).cast("bigint")
+            sents = (
+                trips.select("conv_id", "turn_idx", "sent_id", null.alias("ts"))
+                .unionByName(batch_df.select(
+                    "conv_id", "turn_idx", null.alias("sent_id"),
+                    F.unix_timestamp("ts").cast("bigint").alias("ts"),
+                ))
+                .groupBy("conv_id", "turn_idx")
+                .agg(F.max("sent_id").alias("sent_id"), F.max("ts").alias("ts"))
+                .where(F.col("sent_id").isNotNull())
+                .select("sent_id", "ts")
+            )
             for part, df in (
                 ("edges", edges),
                 ("vertices", verts),

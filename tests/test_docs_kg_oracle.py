@@ -76,8 +76,9 @@ def test_transcripts_tool_turn_synthesis(spark):
 def test_raw_paths_match_by_doc_twins(spark):
     """The four raw engine-keyed paths (demoted from the driver contract,
     driver_queries.RAW_QUERIES) must stay value-equal to their hash-green
-    *_by_doc twins modulo the sent_id re-key: the surface multisets match
-    exactly and the re-key join through _sent_doc_map loses no rows."""
+    *_by_doc twins, which differ only in the key (doc_id derived from
+    each triple's own (conv_id, turn_idx) instead of sent_id): the
+    surface multisets match exactly and the row counts are equal."""
     from denrl_spark.plans.driver_queries import RAW_QUERIES
 
     assert set(RAW_QUERIES) == {
@@ -99,7 +100,7 @@ def test_raw_paths_match_by_doc_twins(spark):
     for name in ("kg_gold_triples", "kg_pred_triples", "kg_gold_triples_modular"):
         raw = RAW_QUERIES[name](spark, SF_DIR)
         assert surf_multiset(raw, tcols) == by_doc, name
-        assert raw.count() == sum(by_doc.values()), name  # re-key drops nothing
+        assert raw.count() == sum(by_doc.values()), name  # keying drops nothing
 
     ecols = ["src_surface", "pred", "dst_surface", "n_obs"]
     raw_edges = surf_multiset(RAW_QUERIES["kg_edges"](spark, SF_DIR), ecols)

@@ -839,20 +839,6 @@ def test_scc_long_cycle_needs_several_rounds(spark):
     assert got == {(f"v{i}", "v0", 10) for i in range(10)}
 
 
-def test_connected_components_non_strict_returns(spark):
-    """strict=False is the opt-out: the same exhausted budget returns
-    the partially-merged labels instead of raising."""
-    from denrl_spark.operators.linking import connected_components
-
-    nodes = spark.createDataFrame([(i,) for i in range(8)], "node_id long")
-    und = spark.createDataFrame(
-        [(i + 1, i) for i in range(7)], "src long, dst long"
-    )
-    got = connected_components(nodes, und, max_iter=1, strict=False).collect()
-    assert len(got) == 8
-    assert len({r["component"] for r in got}) > 1  # not yet merged
-
-
 def test_scc_adversarial_digraphs(spark):
     """Table-driven SCC cases aimed at the coloring algorithm's sharp
     edges, each checked against the exact-closure bruteforce:

@@ -1,7 +1,7 @@
 """Registry-wide physical-plan hygiene sweep.
 
 Every registered driver query is planned at sf0.001 and asserted free
-of the three scale-killer shapes:
+of the four scale-killer shapes:
 
 - ``CartesianProduct`` — an unbucketed all-pairs join (the documented
   brute-force baselines compile to BroadcastNestedLoopJoin with a
@@ -10,7 +10,11 @@ of the three scale-killer shapes:
   (global-order windows plan this way; build_vocab was the one
   offender and now uses the distributed ranker, functions/ranking.py);
 - ``BatchEvalPython`` — a row-at-a-time Python UDF in the plan (all
-  Python in this engine must be Arrow-batched).
+  Python in this engine must be Arrow-batched);
+- ``ArrowEvalPython`` — a scalar pandas_udf: a per-column Python
+  boundary inside a query plan. Python runs only in the ``mapInPandas``
+  kernels, which emit every key their consumers need (the triples carry
+  their (conv_id, turn_idx) turn key, so nothing re-hashes a turn).
 
 The allowlists are EMPTY by design; add an entry only with a written
 justification next to it.
@@ -24,6 +28,7 @@ SMELLS = {
     "CartesianProduct": frozenset(),  # no exceptions
     "SinglePartition": frozenset(),  # no exceptions
     "BatchEvalPython": frozenset(),  # no exceptions
+    "ArrowEvalPython": frozenset(),  # no exceptions
 }
 
 SF_DIR = "/root/testdata/sf0.001"

@@ -53,7 +53,8 @@ def test_stream_triples_matches_batch(spark, transcript_dir, tmp_path):
 
     got = spark.read.parquet(sink)
     batch = assemble_triples(build_instances(spark.read.parquet(transcript_dir), KB.default()))
-    a = sorted(map(tuple, got.select("sent_id", "ent1", "ent1_tag", "ent2", "ent2_tag").collect()))
+    # whole triple rows, the carried (conv_id, turn_idx) key included
+    a = sorted(map(tuple, got.select(*batch.columns).collect()))
     b = sorted(map(tuple, batch.collect()))
     assert a == b and len(a) > 0
 
@@ -88,9 +89,7 @@ def test_stateful_running_stats(spark, transcript_dir):
         trips = assemble_triples(ins)
         exp_trips = dict(
             (r["conv_id"], r["count"])
-            for r in trips.join(
-                ins.select("sent_id", "conv_id").distinct(), "sent_id"
-            ).groupBy("conv_id").count().collect()
+            for r in trips.groupBy("conv_id").count().collect()
         )
         assert set(got) == set(exp_turns)
         for c in got:

@@ -5,8 +5,8 @@ import re
 from collections import Counter
 
 from denrl_spark.operators.evaluate import triple_metrics
-from denrl_spark.operators.spans import assemble_triples, sentence_triples
-from denrl_spark.operators.tagging import build_instances, instances_for_turn
+from denrl_spark.operators.spans import TRIPLE_COLUMNS, assemble_triples, sentence_triples
+from denrl_spark.operators.tagging import build_instances, instances_for_turn, stable_id
 from denrl_spark.sources.corpus import make_turn_text, n_turns_for, transcripts
 from denrl_spark.sources.kb import KB
 
@@ -79,19 +79,29 @@ def test_assume_grouped_fast_path_matches_shuffled(spark):
 
 
 def test_fused_matches_modular_gold_and_pred(spark):
+    """Fused == modular as multisets of whole rows, the carried
+    (conv_id, turn_idx) key included, and every row's sent_id is the
+    hash of that key."""
     from denrl_spark.operators.fused import extract_triples_fused
     from denrl_spark.operators.scoring import score_instances
 
+    def keyed_rows(df):
+        assert df.columns == TRIPLE_COLUMNS
+        rows = sorted(map(tuple, df.collect()))
+        for r in rows:
+            assert r[0] == stable_id(r[5], r[6]), r
+        return rows
+
     tr = transcripts(spark, 40, seed=13).cache()
     # gold
-    fused_g = sorted(map(tuple, extract_triples_fused(tr, KBD, mode="gold").collect()))
+    fused_g = keyed_rows(extract_triples_fused(tr, KBD, mode="gold"))
     ins = build_instances(tr, KBD).cache()
-    mod_g = sorted(map(tuple, assemble_triples(ins).collect()))
+    mod_g = keyed_rows(assemble_triples(ins))
     assert fused_g == mod_g and len(fused_g) > 0
     # pred
-    fused_p = sorted(map(tuple, extract_triples_fused(tr, KBD, mode="pred").collect()))
+    fused_p = keyed_rows(extract_triples_fused(tr, KBD, mode="pred"))
     scored = score_instances(ins, KBD, {}, pre_partitioned=True, emit_attention=False)
-    mod_p = sorted(map(tuple, assemble_triples(scored, tags_col="pred_tags", assume_grouped=True).collect()))
+    mod_p = keyed_rows(assemble_triples(scored, tags_col="pred_tags", assume_grouped=True))
     assert fused_p == mod_p
 
 

@@ -31,7 +31,7 @@ SHOW = [
     ("dedup_jaccard_pairs", "Jaccard verify: candidate-pruned joins (every shingle join also doc-keyed — no hot-shingle self-join), one checkpointed gram-array table feeds the LSH candidates and the verify (pair_overlap), no driver action between them"),
     ("sim_cosine_topk", "ANN baseline: JVM-side HOF dot products, no Python"),
     ("dedup_embedding_pairs_lsh", "embedding near-dup scale path: bucket join + multi-probe + id-level dedup before re-score (no CartesianProduct)"),
-    ("kg_gold_triples_by_doc", "flagship fused extraction re-keyed to doc_id (Arrow pass + sent-map equi-join)"),
+    ("kg_gold_triples_by_doc", "flagship fused extraction keyed by doc_id from each triple's carried (conv_id, turn_idx): one Arrow pass, no join"),
     ("text_tfidf_top_terms", "TF-IDF: two map-side-combined aggs + broadcast vocab-sized df join + per-doc window; no self-joins"),
     ("text_repetition", "Gopher repetition signals: per-row array HOF max-run fold adds NO Exchange (plan-asserted in tests); the one Exchange here is the single-file scan parallelism lift (driver_queries._t), a no-op at production split counts"),
     ("text_contamination", "decontamination: benchmark shingle set broadcast, training side never shuffles for the membership test"),

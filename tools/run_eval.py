@@ -1,6 +1,7 @@
 """Standalone triple-set evaluation job (E4): compare a predictions
 triple table against a gold triple table (parquet or CSV with header),
-printing the reference metric dict (P/R/F1 + error taxonomy).
+printing the reference metric dict (P/R/F1 + error taxonomy). A CSV
+table's columns are read by position as ``spans.TRIPLE_SCHEMA``.
 
     spark-submit --py-files dist/denrl_spark.zip tools/run_eval.py \
         --pred /path/pred_triples --gold /path/gold_triples
@@ -15,9 +16,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TRIPLE_SCHEMA = (
-    "sent_id bigint, ent1 string, ent1_tag string, ent2 string, ent2_tag string"
-)
+from denrl_spark.operators.spans import TRIPLE_SCHEMA  # noqa: E402
 
 
 def load(spark, path: str):
