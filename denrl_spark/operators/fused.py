@@ -509,11 +509,13 @@ def extract_triples_fused(
     parallelism, one Arrow Python task per core — the safety net for
     inputs that arrive as a few large splits. One wave, not two: every
     Python task pays a fixed worker cost before the UDF body runs,
-    0.15-0.28 s of worker CPU per task for a no-op ``mapInPandas``
-    (pyspark 4.1.2, 4 vCPUs; ``tools/python_task_cpu.py``). About 0.12 s
-    of that is the per-task ``importlib.invalidate_caches()`` in the
-    worker's ``setup_spark_files``, which re-reads the archive of each
-    cached zipimporter (15 of them: ``pyspark.zip``, py4j). It scales with
+    0.02-0.04 s of worker CPU per task for a no-op ``mapInPandas``
+    (pyspark 4.1.2, 4 vCPUs; ``tools/python_task_cpu.py``). It was
+    0.12-0.27 s under pyspark's stock daemon, whose per-task
+    ``importlib.invalidate_caches()`` re-reads the central directory of
+    8 cached zipimporters (6 over ``pyspark.zip``, one over the py4j zip,
+    one over the 5,359-entry spark-core jar); the session's daemon
+    (``denrl_spark._daemon``) skips those re-reads. The cost scales with
     the task count, not the data, so a second wave pays it twice for
     tail balance that per-row independent work rarely needs. Pass an
     explicit count to override.

@@ -322,10 +322,16 @@ def gold_triples_by_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     The DuckDB twin (gold_triples_by_doc_sql) re-derives the same
     semantics relationally — valid because the documents KB is
     single-token (span grouping degenerates to token equality)."""
+    return _by_doc(_gold_triples(spark, sf_dir))
+
+
+def _gold_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The fused gold triples of the documents corpus, keyed by their
+    own (conv_id, turn_idx)."""
     from denrl_spark.operators.fused import extract_triples_fused
 
     tr = transcripts_from_documents(spark, sf_dir)
-    return _by_doc(extract_triples_fused(tr, docs_kb(), mode="gold", n_partitions=0))
+    return extract_triples_fused(tr, docs_kb(), mode="gold", n_partitions=0)
 
 
 def _ent_values_sql() -> str:
@@ -1290,20 +1296,17 @@ def triples_per_conv(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapping transcripts_from_documents uses): per conv_id, the total
     gold triples, the relation triples (pred carries '/'), and the
     distinct turns that produced any. The per-source yield metric a
-    10^12-turn ingest run monitors for drift."""
-    g = gold_triples_by_doc(spark, sf_dir)
+    10^12-turn ingest run monitors for drift. Grouped by each triple's
+    carried turn key: a turn is one document."""
     return (
-        g.withColumn(
-            "conv_id",
-            F.format_string("conv-%08d", (F.col("doc_id") / 4).cast("long")),
-        )
+        _gold_triples(spark, sf_dir)
         .groupBy("conv_id")
         .agg(
             F.count(F.lit(1)).alias("n_triples"),
             F.sum(
                 F.when(F.col("ent2_tag").contains("/"), 1).otherwise(0)
             ).cast("bigint").alias("n_rel_triples"),
-            F.countDistinct("doc_id").alias("n_docs"),
+            F.countDistinct("turn_idx").alias("n_docs"),
         )
     )
 

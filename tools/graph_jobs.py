@@ -2,8 +2,8 @@
 group, is forced with the ``noop`` sink (so column pruning cannot skip
 work), and the jobs Spark recorded for the group are counted through
 ``statusTracker().getJobIdsForGroup``. Each query's optimized logical
-plan, with expression ids masked, is recorded as a sha256 digest, so two
-checkouts can show that a refactor left the plans unchanged. Usage:
+plan is recorded as a digest (``plan_digest``), so two checkouts can
+show that a refactor left the plans unchanged. Usage:
 
     python tools/graph_jobs.py SF_DIR OUT_JSON LABEL [REPS [Q1,Q2,...]]
 
@@ -32,6 +32,14 @@ GRAPH_QUERIES = [
 ]
 
 
+def plan_digest(plan: str) -> str:
+    """sha256 prefix of a plan string with its process-dependent names
+    masked: lambda variables (``lambda x_60#9``, named from pyspark's
+    process-global counter) and then expression ids (``#12``, ``#7L``)."""
+    masked = re.sub(r"#\d+L?", "#", re.sub(r"lambda \w+#\d+L?", "lambda #", plan))
+    return hashlib.sha256(masked.encode()).hexdigest()[:16]
+
+
 def main() -> int:
     sf_dir, out_path, label = sys.argv[1], sys.argv[2], sys.argv[3]
     reps = int(sys.argv[4]) if len(sys.argv) > 4 else 2
@@ -52,9 +60,7 @@ def main() -> int:
             df = qs[name](spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             counts[name].append(len(sc.statusTracker().getJobIdsForGroup(group)))
-        plan = str(df._jdf.queryExecution().optimizedPlan().toString())
-        plans[name] = hashlib.sha256(
-            re.sub(r"#\d+L?", "#", plan).encode()).hexdigest()[:16]
+        plans[name] = plan_digest(str(df._jdf.queryExecution().optimizedPlan().toString()))
         print(name, counts[name], plans[name], flush=True)
     doc = {}
     if os.path.exists(out_path):

@@ -2,13 +2,18 @@
 ``mapInPandas(lambda it: it)`` job (no UDF work) at a few task counts in
 one ``local[4]`` session and reads the CPU seconds (user + system, from
 /proc) that the Python daemon and its workers spent on each job, then the
-same over an idle window. Usage:
+same over an idle window. Then it stops the context and starts FRESH
+new ones in the same JVM, each with a new Python daemon, and times the
+set-up that perfbench's ``setup_s`` times: ``get_spark``, one JVM job and
+one Arrow job over every task slot (the Arrow warm-up, which starts the
+daemon and its workers). Usage:
 
     python tools/python_task_cpu.py
 
 Runs each task count REPS times and prints one JSON object: per task
-count, the worker CPU of every repetition and its value per task; and
-the worker CPU of the idle window.
+count, the worker CPU of every repetition and its value per task; the
+worker CPU of the idle window; and the wall seconds of each fresh
+context's three set-up steps.
 """
 
 from __future__ import annotations
@@ -25,6 +30,7 @@ from perfbench.run import cpu_s, descendants  # noqa: E402
 REPS = 5
 TASK_COUNTS = (4, 8)
 IDLE_S = 5.0
+FRESH = 8
 
 
 def worker_cpu_s() -> float:
@@ -43,11 +49,15 @@ def worker_cpu_s() -> float:
 def main() -> int:
     from denrl_spark.session import get_spark
 
-    spark = get_spark(4, extra_conf={"spark.ui.showConsoleProgress": "false"})
+    conf = {"spark.ui.showConsoleProgress": "false"}
+    spark = get_spark(4, extra_conf=conf)
+
+    def noop(df) -> None:
+        df.write.format("noop").mode("overwrite").save()
 
     def job(n: int) -> None:
         df = spark.range(0, 1000 * n, numPartitions=n)
-        df.mapInPandas(lambda it: it, df.schema).write.format("noop").mode("overwrite").save()
+        noop(df.mapInPandas(lambda it: it, df.schema))
 
     for n in TASK_COUNTS:  # warm-up: the daemon and one worker per core exist
         job(n)
@@ -65,6 +75,19 @@ def main() -> int:
     before = worker_cpu_s()
     time.sleep(IDLE_S)
     out["idle"] = {"seconds": IDLE_S, "worker_cpu_s": round(worker_cpu_s() - before, 3)}
+    steps: dict[str, list[float]] = {"get_spark_s": [], "jvm_warmup_s": [], "arrow_warmup_s": []}
+    for _ in range(FRESH):  # the same two warm-up jobs as perfbench's set-up
+        spark.stop()
+        t0 = time.perf_counter()
+        spark = get_spark(4, extra_conf=conf)
+        t1 = time.perf_counter()
+        noop(spark.range(0, 10_000, 1, 4))
+        t2 = time.perf_counter()
+        noop(spark.range(0, 4, 1, 4).mapInPandas(lambda it: it, "id long"))
+        t3 = time.perf_counter()
+        for k, dt in zip(steps, (t1 - t0, t2 - t1, t3 - t2)):
+            steps[k].append(round(dt, 3))
+    out["fresh_contexts"] = steps
     print(json.dumps(out))
     spark.stop()
     return 0
