@@ -509,17 +509,18 @@ def minhash_signature_cols(
     the groupBy band-min of ``minhash_signatures`` row-for-row (min
     over a multiset == min over its set; test-asserted). Rows with < 3
     tokens have no shingles; their bands fall back to md5(text) (an
-    exact-content signature) so null never matches null."""
+    exact-content signature) so null never matches null. The bands come
+    from the batch family's one signature fold (``minhash_band_array``),
+    evaluated once per row into a helper column."""
     grams = ngram_array(F.split(F.col(text_col), " "), 3)
-    out = df
-    for b in range(n_bands):
-        mh = F.array_min(
-            F.transform(
-                grams, lambda g: F.md5(F.concat_ws(":", F.lit(str(b)), g))
-            )
+    fallback = F.md5(F.col(text_col))
+    return (
+        df.withColumn("_mh", minhash_band_array(grams, n_bands))
+        .withColumns(
+            {f"mh{b}": F.coalesce(F.col("_mh")[b], fallback) for b in range(n_bands)}
         )
-        out = out.withColumn(f"mh{b}", F.coalesce(mh, F.md5(F.col(text_col))))
-    return out
+        .drop("_mh")
+    )
 
 
 def band_stack_expr(n_bands: int) -> F.Column:
